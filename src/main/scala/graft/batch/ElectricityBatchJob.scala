@@ -17,10 +17,13 @@ import graft.sources.{CsvVariants, IncrementalFiles}
   */
 object ElectricityBatchJob {
 
-  /** Landing CSV → bronze: schema-variant normalize + lineage
-    * (05:…py:49-61). */
-  def toBronze(rawCsv: DataFrame): DataFrame =
-    CsvVariants.normalizeElectricity(rawCsv)
+  /** Landing CSVs → bronze: schema-variant normalize + lineage
+    * (05:…py:49-61). One frame per CSV header
+    * ([[IncrementalFiles.readNewGroups]]): each is normalized on its
+    * own, then the normalized frames are unioned. */
+  def toBronze(rawCsvs: Seq[DataFrame]): DataFrame =
+    rawCsvs.map(CsvVariants.normalizeElectricity(_))
+      .reduce(_ unionByName _)
       .withColumn("_source_file", input_file_name())
       .withColumn("_ingest_ts", current_timestamp())
       .withColumn("ingest_date", current_date())
@@ -60,8 +63,9 @@ object ElectricityBatchJob {
       : Unit = {
     val statePath = layout.state("electricity_last_date")
     val lastDate = IncrementalFiles.readState(spark, statePath)
-    val newRaw = IncrementalFiles.readNew(spark, landingRoot, lastDate)
-    if (newRaw.isEmpty) return
+    val newRaw = IncrementalFiles.readNewGroups(spark, landingRoot,
+      lastDate)
+    if (newRaw.forall(_.isEmpty)) return
 
     // keep the landing `date` partition column: variant-C CSVs
     // (date+hour, no ts) depend on it for timestamp reconstruction
@@ -82,9 +86,11 @@ object ElectricityBatchJob {
     TableIO.overwrite(goldPeakHours(svFinal), layout,
       layout.gold("electricity_peak_hours"))
 
-    val maxDate = svFinal.agg(max(col("date")).cast("string")).collect()
-      .headOption.flatMap(r => Option(r.getString(0)))
-    maxDate.foreach(d =>
-      IncrementalFiles.writeState(spark, statePath, d))
+    // the state date is silver's newest `date=` directory: silver is
+    // rewritten whole, partitioned by a non-null date, so its
+    // directories are exactly its dates — no job reads the rows for it
+    TableIO.partitionValues(spark, layout.silver("electricity_prices"),
+      "date").maxByOption(java.time.LocalDate.parse(_))
+      .foreach(d => IncrementalFiles.writeState(spark, statePath, d))
   }
 }

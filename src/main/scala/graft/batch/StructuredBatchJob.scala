@@ -58,9 +58,10 @@ object StructuredBatchJob {
         .isin(Schemas.interventionTypes: _*))
     val deduped = DedupLatest(clean, Seq("id"),
       Seq(col("updated_at").desc, col("event_time").desc))
-    // referential integrity via semi join (J4 done right, SURVEY §2.4)
-    deduped.join(
-      broadcast(silverPools.select("pool_id").distinct()),
+    // referential integrity via semi join (J4 done right, SURVEY §2.4);
+    // a semi join ignores duplicate keys on its right side, so no
+    // distinct (and no exchange) under the broadcast
+    deduped.join(broadcast(silverPools.select("pool_id")),
       Seq("pool_id"), "left_semi")
   }
 

@@ -30,19 +30,31 @@ object TableIO {
   /** `mergeSchema = true` reconstructs the UNION schema across files
     * written at different schema versions (rows from files missing a
     * column read as null) — the read half of additive schema evolution
-    * (reference mergeSchema, 05_ingest_electricity_csv.ipynb §4). */
+    * (reference mergeSchema, 05_ingest_electricity_csv.ipynb §4).
+    *
+    * A parquet table's data schema is resolved from its footers on the
+    * driver ([[ParquetSchema.ofPath]]) and passed with `.schema(...)`,
+    * so the read launches no inference job; Spark still infers the
+    * partition columns from the `k=v` directories. Other formats, and
+    * paths the driver cannot resolve, keep Spark's own resolution. */
   def read(spark: SparkSession, layout: LakeLayout, path: String,
       mergeSchema: Boolean = false): DataFrame = {
-    val r = spark.read.format(layout.format)
-    (if (mergeSchema) r.option("mergeSchema", "true") else r).load(path)
+    val r0 = spark.read.format(layout.format)
+    val r = if (mergeSchema) r0.option("mergeSchema", "true") else r0
+    val known =
+      if (layout.format == "parquet")
+        ParquetSchema.ofPath(spark, path, mergeSchema)
+      else None
+    known.fold(r)(r.schema).load(path)
   }
 
   private def fieldNames(s: StructType): Set[String] =
     s.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
 
-  /** Existing-table schema for the evolution guards; None when the
-    * path holds nothing readable (e.g. an empty dir from an aborted
-    * write) — then there is no schema to enforce against. */
+  /** Existing-table schema for the evolution guards (resolved like
+    * [[read]]: no job for parquet); None when the path holds nothing
+    * readable (e.g. an empty dir from an aborted write) — then there
+    * is no schema to enforce against. */
   private def existingSchema(spark: SparkSession, layout: LakeLayout,
       path: String): Option[StructType] =
     if (!exists(spark, path)) None
@@ -201,23 +213,36 @@ object TableIO {
       .limit(limit)
   }
 
+  /** The values of Hive partition column `column` at `path`, read from
+    * its `column=value` directories rather than from the rows: a table
+    * written with `partitionBy(column)` holds a directory for exactly
+    * the values its rows carry. Hidden directories and the null
+    * partition are skipped; a missing path has none. */
+  def partitionValues(spark: SparkSession, path: String,
+      column: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val prefix = s"$column="
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+      .map(st => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(st.getPath.getName.stripPrefix(prefix)))
+      .filter(_ != org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .DEFAULT_PARTITION_NAME)
+  }
+
   /** DESCRIBE DETAIL-ish physical introspection: format, file count,
     * bytes, partition columns inferred from hive-style dirs
-    * (03_silver_smartpool.ipynb §6's partition-layout assertion). */
+    * (03_silver_smartpool.ipynb §6's partition-layout assertion). The
+    * files are the data files a read of `path` scans: [[LeafFiles]]
+    * without parquet summary files. */
   def describe(spark: SparkSession, path: String): Map[String, Any] = {
     val p0 = new org.apache.hadoop.fs.Path(path)
     val fs = p0.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = fs.makeQualified(p0) // listStatus returns qualified paths
-    val files = scala.collection.mutable.ArrayBuffer.empty[
-      org.apache.hadoop.fs.FileStatus]
-    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
-    def walk(d: org.apache.hadoop.fs.Path): Unit =
-      fs.listStatus(d).foreach { st =>
-        if (hidden(st.getPath.getName)) ()
-        else if (st.isDirectory) walk(st.getPath)
-        else files += st
-      }
-    walk(p)
+    val files = LeafFiles.list(fs, p).toSeq.flatMap(_.files)
+      .filterNot(_.getPath.getName.startsWith("_"))
     val partCols = files.map(_.getPath.getParent.toString
         .stripPrefix(p.toString))
       .flatMap(_.split("/").filter(_.contains("=")).map(_.split("=")(0)))

@@ -20,18 +20,30 @@ object Tables {
   // session + footer read) must still run only once per key
   private val ntzEvents = scala.collection.mutable.Set[String]()
 
-  // Parquet schema per input path, memoized: the driver-provided
-  // table files are immutable for a run, and footer inference over a
-  // fixed path is deterministic, so a hit returns exactly what
-  // inference would have produced. Every load() used to pay a
-  // driver-side footer read; a full bench pass issues thousands.
+  // Parquet schema per (path, length, mtime), resolved on the driver
+  // (ParquetSchema, no job) and memoized: a file regenerated at a
+  // cached path gets a new key, so a hit is what inference over the
+  // path's current contents returns. A full bench pass loads the same
+  // immutable inputs thousands of times. Bounded like VersionedTable's
+  // memo: cleared when it outgrows its cap.
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+    (String, Long, Long), org.apache.spark.sql.types.StructType]()
   private def readCached(spark: SparkSession, path: String): DataFrame = {
-    var s = schemaCache.get(path)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st =
+      try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(p)
+      catch { // Spark's own PATH_NOT_FOUND
+        case _: java.io.FileNotFoundException =>
+          return spark.read.parquet(path)
+      }
+    val key = (path, st.getLen, st.getModificationTime)
+    var s = schemaCache.get(key)
     if (s == null) {
-      s = spark.read.parquet(path).schema
-      schemaCache.put(path, s)
+      if (schemaCache.size > 4096) schemaCache.clear()
+      s = ParquetSchema.ofPath(spark, path, merge = false)
+        .getOrElse(spark.read.parquet(path).schema)
+      schemaCache.put(key, s)
     }
     spark.read.schema(s).parquet(path)
   }

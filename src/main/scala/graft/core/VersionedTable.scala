@@ -71,17 +71,18 @@ object VersionedTable {
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Parquet schema for an exact (file list, mergeSchema) pair,
-    * memoized. Sound because committed data files are immutable (new
-    * files always land under fresh commit-UUID dirs; vacuum/erase only
-    * delete or value-scrub, never retype) and Spark's footer inference
-    * over a FIXED file list is deterministic — a hit returns exactly
-    * what inference would have produced. Every versioned read used to
-    * pay a driver-side footer read (merge-read ALL footers on evolved
-    * tables); maintenance pipelines re-read the same snapshot several
-    * times per call, so this is pure per-action overhead removed
-    * (guide §1.2 step 2). Bounded: cleared when it outgrows its cap
-    * (file lists are scratch-UUID-heavy, so entries don't repeat
-    * across bench passes). */
+    * resolved from the footers on the driver ([[ParquetSchema]]; no
+    * Spark job) and memoized. Sound because committed data files are
+    * immutable (new files always land under fresh commit-UUID dirs;
+    * vacuum/erase only delete or value-scrub, never retype) and footer
+    * inference over a FIXED file list is deterministic — a hit returns
+    * exactly what inference would have produced. Snapshot reads and
+    * the publish/append schema guards all resolve through here;
+    * maintenance pipelines re-read the same snapshot several times
+    * per call, so the memo still saves the footer reads. Bounded:
+    * cleared when it outgrows its cap (file lists are
+    * scratch-UUID-heavy, so entries don't repeat across bench
+    * passes). */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     (Seq[String], Boolean), org.apache.spark.sql.types.StructType]()
   private def inferredSchema(spark: SparkSession, fl: Seq[String],
@@ -90,8 +91,9 @@ object VersionedTable {
     val hit = schemaCache.get(key)
     if (hit != null) return hit
     if (schemaCache.size > 4096) schemaCache.clear()
-    val s = (if (merge) spark.read.option("mergeSchema", "true")
-      else spark.read).parquet(fl: _*).schema
+    val s = ParquetSchema.ofFiles(spark, fl, merge).getOrElse(
+      (if (merge) spark.read.option("mergeSchema", "true")
+        else spark.read).parquet(fl: _*).schema)
     schemaCache.put(key, s)
     s
   }

@@ -28,15 +28,18 @@ object DataQuality {
     df.filter(!col(column).isin(allowed: _*))
 
   /** Referential integrity: fact keys absent from the dimension
-    * (left-anti). Reference: 03_silver_smartpool.ipynb §6 (J5). */
+    * (left-anti; duplicate dimension keys change nothing, so no
+    * distinct). Reference: 03_silver_smartpool.ipynb §6 (J5). */
   def orphanForeignKeys(fact: DataFrame, dim: DataFrame, factKey: String,
       dimKey: String): DataFrame =
-    fact.join(dim.select(col(dimKey).as(factKey)).distinct(),
-      Seq(factKey), "left_anti")
+    fact.join(dim.select(col(dimKey).as(factKey)), Seq(factKey),
+      "left_anti")
 
-  /** Assert-all helper: throws with a readable message on first failure. */
-  def assertEmpty(name: String, offending: DataFrame): Unit = {
-    val n = offending.limit(1).count()
-    require(n == 0, s"data-quality check failed: $name")
-  }
+  /** Assert-all helper: throws with a readable message on first failure.
+    * `isEmpty` plans a `CollectLimitExec`, which gathers every
+    * partition's first row through one single-partition exchange: one
+    * job, all partitions in parallel, however many there are. A
+    * `limit(1).count()` adds a second exchange and job for the count. */
+  def assertEmpty(name: String, offending: DataFrame): Unit =
+    require(offending.isEmpty, s"data-quality check failed: $name")
 }

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.{LeafFiles, ParquetSchema, TableIO}
+
 /** Incremental-ingest watermark protocols (SURVEY.md §2.10).
   *
   * The canonical JDBC protocol — (b) in the survey — keeps the watermark
@@ -120,11 +122,18 @@ object IncrementalJdbc {
   * State lives as a 1-row parquet; overwrite is the commit.
   */
 object IncrementalFiles {
+  /** The stored `last_date`; None only when no state was ever written
+    * (the path is missing). Any other failure — a corrupt or
+    * unreadable state file — propagates: treating it as "no state"
+    * would silently re-ingest the whole landing zone. */
   def readState(spark: SparkSession, statePath: String): Option[String] =
-    try {
-      spark.read.parquet(statePath).select("last_date").collect()
+    if (!TableIO.exists(spark, statePath)) None
+    else {
+      val r = spark.read
+      ParquetSchema.ofPath(spark, statePath, merge = false).fold(r)(r.schema)
+        .parquet(statePath).select("last_date").collect()
         .headOption.map(_.getString(0))
-    } catch { case _: Exception => None }
+    }
 
   def writeState(spark: SparkSession, statePath: String, lastDate: String)
       : Unit = {
@@ -137,10 +146,13 @@ object IncrementalFiles {
     * can keep landing into the current date's partition after a run has
     * ingested it — a strict comparison would skip them forever. The
     * boundary partition is re-read instead, and silver's latest-wins
-    * dedup makes the re-ingest idempotent. The partition-column
-    * comparison prunes directories at planning time
-    * (PruneFileSourcePartitions) — no data files behind older `date=`
-    * dirs are opened, which is what keeps this O(new-data) at 100 TB.
+    * dedup makes the re-ingest idempotent. Only the `date=` directories
+    * at or after the state date are listed and read, which is what
+    * keeps this O(new-data) at 100 TB.
+    *
+    * One frame holds one CSV header: when the new files carry several
+    * (a landing zone mixing schema variants) this fails loudly —
+    * read them with [[readNewGroups]] instead.
     *
     * LIMIT OF THE DATE WATERMARK: once `last_date` advances, partitions
     * strictly older than it are FROZEN — a file backfilled into an old
@@ -149,13 +161,81 @@ object IncrementalFiles {
     * [[readNewByModTime]], which watermarks on file modification time
     * instead of the partition value. */
   def readNew(spark: SparkSession, landingRoot: String,
-      lastDate: Option[String], format: String = "csv"): DataFrame = {
+      lastDate: Option[String], format: String = "csv"): DataFrame =
+    readNewGroups(spark, landingRoot, lastDate, format) match {
+      case Seq(one) => one
+      case many => throw new IllegalArgumentException(
+        s"new files under $landingRoot carry ${many.size} different " +
+          "CSV headers; read them with readNewGroups")
+    }
+
+  /** The files [[readNew]] reads, one frame per distinct CSV header
+    * line (each file's first non-blank line, read on the driver), in
+    * order of each group's first file. Spark applies the first file's
+    * header to every file of one read, so files of different schema
+    * variants must not share a read; each group keeps Spark's own
+    * header inference. With one header (or a non-CSV format, or no
+    * new file that holds a line) the result is the single read of the
+    * root that [[readNew]] always made — same listing, same jobs; only
+    * mixed headers read each group's files by name. */
+  def readNewGroups(spark: SparkSession, landingRoot: String,
+      lastDate: Option[String], format: String = "csv")
+      : Seq[DataFrame] = {
+    val groups =
+      if (format != "csv" || !TableIO.exists(spark, landingRoot)) Nil
+      else {
+        val headers = newFiles(spark, landingRoot, lastDate)
+          .flatMap(f => headerLine(spark, f).map(f -> _))
+        headers.map(_._2).distinct
+          .map(h => headers.collect { case (f, `h`) => f.toString })
+      }
+    (if (groups.size < 2) Seq(Seq(landingRoot)) else groups)
+      .map(load(spark, _, landingRoot, lastDate, format))
+  }
+
+  private def load(spark: SparkSession, paths: Seq[String],
+      landingRoot: String, lastDate: Option[String], format: String)
+      : DataFrame = {
     val base = spark.read
       .option("header", "true")
       .option("basePath", landingRoot)
       .format(format)
-      .load(landingRoot)
+      .load(paths: _*)
     lastDate.fold(base)(d => base.filter(col("date") >= lit(d)))
+  }
+
+  /** Data files under `landingRoot` ([[LeafFiles]]), sorted by path,
+    * skipping `date=` directories that are certainly older than
+    * `lastDate`; the read's `date >= lastDate` filter stays the
+    * authority for anything else. */
+  private def newFiles(spark: SparkSession, landingRoot: String,
+      lastDate: Option[String]): Seq[org.apache.hadoop.fs.Path] = {
+    val root = new org.apache.hadoop.fs.Path(landingRoot)
+    def day(s: String) =
+      scala.util.Try(java.time.LocalDate.parse(s.trim)).toOption
+    val since = lastDate.flatMap(day)
+    def older(dirName: String) = dirName.startsWith("date=") &&
+      since.exists(d =>
+        day(dirName.stripPrefix("date=")).exists(_.isBefore(d)))
+    LeafFiles.list(root.getFileSystem(
+        spark.sparkContext.hadoopConfiguration), root, older)
+      .fold(Seq.empty[org.apache.hadoop.fs.Path])(_.files.map(_.getPath))
+  }
+
+  /** A CSV file's header: its first non-blank line, through the
+    * file's compression codec when its suffix names one. */
+  private def headerLine(spark: SparkSession,
+      file: org.apache.hadoop.fs.Path): Option[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val raw = file.getFileSystem(conf).open(file)
+    val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(
+      conf).getCodec(file)
+    val in = if (codec == null) raw else codec.createInputStream(raw)
+    val lines = new java.io.BufferedReader(new java.io.InputStreamReader(
+      in, java.nio.charset.StandardCharsets.UTF_8))
+    try Iterator.continually(lines.readLine()).takeWhile(_ != null)
+      .find(_.trim.nonEmpty)
+    finally lines.close()
   }
 
   /** Modification-time incremental pickup — the late-backfill

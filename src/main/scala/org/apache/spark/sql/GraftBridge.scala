@@ -26,6 +26,36 @@ object GraftBridge {
     case _ => ()
   }
 
+  /** The session's SQL conf (`sessionState` is `private[sql]`); a
+    * non-classic session falls back to the active thread's conf. */
+  def sqlConf(spark: SparkSession): internal.SQLConf = spark match {
+    case c: classic.SparkSession => c.sessionState.conf
+    case _ => internal.SQLConf.get
+  }
+
+  /** The Hadoop conf a session's file sources read with: the context's
+    * conf overlaid with the session's `spark.hadoop.*` settings. */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark match {
+      case c: classic.SparkSession => c.sessionState.newHadoopConf()
+      case _ => spark.sparkContext.hadoopConfiguration
+    }
+
+  /** `StructType.merge` (`private[sql]`): the union Spark's parquet
+    * schema merging builds, failing on a conflicting field type. */
+  def mergeSchemas(a: types.StructType, b: types.StructType,
+      caseSensitive: Boolean): types.StructType = a.merge(b, caseSensitive)
+
+  /** `StructType.asNullable` (`private[spark]`): a file source reports
+    * every column, element and value as nullable. */
+  def nullable(s: types.StructType): types.StructType = s.asNullable
+
+  /** Spark's file-index rule for names it never reads as data: `_x`
+    * and `.x` (except parquet summary files and `k=v` dirs) and
+    * in-flight `._COPYING_` copies. */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** Stable per-session identity (`sessionUUID` is `private[sql]`).
     * Exotic non-classic sessions fall back to JVM object identity —
     * still never shared across distinct session objects. */

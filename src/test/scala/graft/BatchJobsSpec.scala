@@ -2,11 +2,14 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{AnalysisException, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.batch.{ElectricityBatchJob, StructuredBatchJob}
-import graft.core.{LakeLayout, TableIO}
-import graft.sources.CsvVariants
+import graft.core.{LakeLayout, ParquetSchema, TableIO, Tables, VersionedTable}
+import graft.ops.DataQuality
+import graft.sources.{CsvVariants, IncrementalFiles}
 
 class BatchJobsSpec extends SparkTestBase {
   import spark.implicits._
@@ -146,5 +149,349 @@ class BatchJobsSpec extends SparkTestBase {
     ElectricityBatchJob.run(spark, layout, landing)
     assert(spark.read.parquet(layout.silver("electricity_prices"))
       .count() == 48)
+  }
+
+  /** Spark jobs started by `body`, counted via listener (drained
+    * through the bridge so the async bus can't undercount). */
+  private def jobs(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.GraftBridge.waitListenerEmpty(spark)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.sql.GraftBridge.waitListenerEmpty(spark)
+    } finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
+
+  // Spark jobs of one warm increment over this suite's fixtures
+  private val EP1_JOBS = 21
+  private val EP2_JOBS = 11
+
+  private def tmpDir(prefix: String) =
+    Files.createTempDirectory(prefix).toString
+
+  /** One day of electricity CSVs in `landing/date=<d>`: one file per
+    * (variant, hours) pair, variant 0/1/2 = CsvVariants A/B/C. */
+  private def landPrices(landing: String, d: String,
+      files: Seq[(Int, Seq[Int])], price: Double): Unit =
+    files.zipWithIndex.foreach { case ((variant, hours), i) =>
+      def hh(h: Int) = f"$h%02d"
+      val (header, line) = variant match {
+        case 0 => ("ts_utc,date,hour,price_eur_mwh,price_eur_kwh,region,source",
+          (h: Int) => s"${d}T${hh(h)}:00:00Z,$d,$h,$price,${price / 1000}," +
+            "ES,synthetic")
+        case 1 => ("ts,price_eur_mwh", (h: Int) => s"$d ${hh(h)}:00:00,$price")
+        case _ => ("date,hour,price_eur_mwh", (h: Int) => s"$d,$h,$price")
+      }
+      val f = java.nio.file.Paths.get(s"$landing/date=$d/prices_$i.csv")
+      Files.createDirectories(f.getParent)
+      Files.write(f, (header +: hours.map(line)).mkString("", "\n", "\n")
+        .getBytes("UTF-8"))
+    }
+
+  test("EP2 ingests a date partition mixing CSV variants A, B and C") {
+    val tmp = tmpDir("graft-ep2-mixed")
+    val landing = s"$tmp/landing"
+    val layout = LakeLayout(s"$tmp/lake")
+    landPrices(landing, "2026-01-15",
+      Seq(0 -> (0 until 8), 1 -> (8 until 16), 2 -> (16 until 24)), 50.0)
+    // one frame per header; one frame cannot hold all three
+    assert(IncrementalFiles.readNewGroups(spark, landing, None)
+      .map(_.count()) == Seq(8L, 8L, 8L))
+    intercept[IllegalArgumentException](
+      IncrementalFiles.readNew(spark, landing, None))
+
+    ElectricityBatchJob.run(spark, layout, landing)
+    val silver = spark.read.parquet(layout.silver("electricity_prices"))
+    assert(silver.count() == 24) // the sum over the three variants
+    assert(silver.select("hour").as[Int].collect().sorted.toSeq ==
+      (0 until 24))
+    assert(silver.filter(col("ts_utc").isNull).isEmpty)
+    assert(IncrementalFiles.readState(spark,
+      layout.state("electricity_last_date")).contains("2026-01-15"))
+  }
+
+  test("a single-header landing read issues the jobs of a read of " +
+    "the root, with more files than Spark's parallel-listing threshold") {
+    val landing = tmpDir("graft-ep2-wide") + "/landing"
+    val d = "2026-01-15"
+    val files = 40
+    assert(files > spark.conf
+      .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt)
+    landPrices(landing, d, Seq.fill(files)(1 -> (0 until 3)), 50.0)
+    val rootRead = jobs {
+      assert(spark.read.option("header", "true")
+        .option("basePath", landing).format("csv").load(landing)
+        .filter(col("date") >= lit(d)).count() == 3L * files)
+    }
+    val grouped = jobs {
+      val frames = IncrementalFiles.readNewGroups(spark, landing, Some(d))
+      assert(frames.map(_.count()) == Seq(3L * files))
+    }
+    assert(grouped == rootRead,
+      s"readNewGroups ran $grouped jobs, a read of the root $rootRead")
+  }
+
+  test("DataQuality.assertEmpty runs one job over all partitions") {
+    val wide = spark.range(0, 1000, 1, 64).toDF()
+    val empty = wide.filter(col("id") < 0)
+    assert(jobs(DataQuality.assertEmpty("none", empty)) == 1)
+    assert(jobs(assert(empty.limit(1).count() == 0)) == 2)
+    val e = intercept[IllegalArgumentException](
+      DataQuality.assertEmpty("last row", wide.filter(col("id") === 999)))
+    assert(e.getMessage.contains("data-quality check failed: last row"))
+    val dim = Seq(1L, 1L, 2L).toDF("pk")
+    DataQuality.assertEmpty("fk", DataQuality.orphanForeignKeys(
+      Seq(1L, 2L, 2L).toDF("fk"), dim, "fk", "pk"))
+    intercept[IllegalArgumentException](DataQuality.assertEmpty("fk",
+      DataQuality.orphanForeignKeys(Seq(3L).toDF("fk"), dim, "fk", "pk")))
+  }
+
+  test("TableIO.read, VersionedTable.read and the publishSnapshot " +
+    "schema guard run no Spark job") {
+    val root = tmpDir("graft-nojob")
+    val layout = LakeLayout(root)
+    Seq((1, "a"), (2, "b")).toDF("k", "v").write.parquet(s"$root/plain")
+    Seq((1, "a", "x"), (2, "b", "y")).toDF("k", "v", "p")
+      .write.partitionBy("p").parquet(s"$root/part")
+    VersionedTable.commitOverwrite(Seq((1, "a")).toDF("k", "v"),
+      s"$root/vt")
+    VersionedTable.commitOverwrite(Seq((1, "a")).toDF("k", "v"),
+      s"$root/vt2")
+    val n = jobs {
+      assert(TableIO.read(spark, layout, s"$root/plain").columns.toSeq ==
+        Seq("k", "v"))
+      assert(TableIO.read(spark, layout, s"$root/part").columns.toSeq ==
+        Seq("k", "v", "p"))
+      assert(VersionedTable.read(spark, s"$root/vt").columns.toSeq ==
+        Seq("k", "v"))
+      val e = intercept[IllegalArgumentException](TableIO.publishSnapshot(
+        Seq((1, 2L)).toDF("k", "w"), layout, s"$root/vt2"))
+      assert(e.getMessage.contains("changes schema"))
+    }
+    assert(n == 0, s"$n Spark jobs resolving table schemas")
+  }
+
+  test("warm EP1 and EP2 increments stay within their job counts") {
+    val tmp = tmpDir("graft-jobs")
+    val layout = LakeLayout(s"$tmp/lake")
+    val landing = s"$tmp/landing"
+    for (d <- Seq("2026-01-15", "2026-01-16")) {
+      StructuredBatchJob.run(spark, layout, rawPools, rawEvents)
+      landPrices(landing, d, Seq(1 -> (0 until 12), 1 -> (12 until 24)),
+        50.0)
+      ElectricityBatchJob.run(spark, layout, landing)
+    }
+    val ep1 = jobs(StructuredBatchJob.run(spark, layout, rawPools,
+      rawEvents))
+    landPrices(landing, "2026-01-17", Seq(1 -> (0 until 12),
+      1 -> (12 until 24)), 50.0)
+    val ep2 = jobs(ElectricityBatchJob.run(spark, layout, landing))
+    info(s"warm EP1 increment: $ep1 jobs, warm EP2 increment: $ep2 jobs")
+    assert(ep1 <= EP1_JOBS, s"warm EP1 increment ran $ep1 jobs")
+    assert(ep2 <= EP2_JOBS, s"warm EP2 increment ran $ep2 jobs")
+    assert(spark.read.parquet(layout.silver("electricity_prices"))
+      .count() == 72)
+  }
+
+  /** `ParquetSchema.ofPath` must equal Spark's own inference, minus
+    * the partition columns Spark adds from the directories. */
+  private def assertSameAsSpark(path: String, merge: Boolean = false)
+      : Unit = {
+    val r = if (merge) spark.read.option("mergeSchema", "true")
+      else spark.read
+    val expected = r.parquet(path).schema
+    val parts = TableIO.describe(spark, path)("partitionColumns")
+      .asInstanceOf[Seq[String]].toSet
+    assert(ParquetSchema.ofPath(spark, path, merge) ==
+      Some(StructType(expected.filterNot(f => parts(f.name)))))
+    assert(TableIO.read(spark, LakeLayout("unused"), path, merge).schema ==
+      expected)
+  }
+
+  test("driver-side parquet schema equals Spark's: plain and " +
+    "Hive-partitioned directories") {
+    val root = tmpDir("graft-schema")
+    val df = Seq((1L, "a", 2.5, true), (2L, "b", 3.5, false))
+      .toDF("id", "name", "x", "flag")
+    df.write.parquet(s"$root/plain")
+    assertSameAsSpark(s"$root/plain")
+    df.write.partitionBy("flag", "name").parquet(s"$root/part")
+    assertSameAsSpark(s"$root/part")
+    // a data column named like a partition directory: Spark's
+    // inference keeps its position, so the driver leaves it to Spark
+    df.write.parquet(s"$root/clash/name=a")
+    assert(ParquetSchema.ofPath(spark, s"$root/clash", merge = false)
+      .isEmpty)
+    assert(TableIO.read(spark, LakeLayout(root), s"$root/clash").schema ==
+      spark.read.parquet(s"$root/clash").schema)
+    // a parquet summary file steers Spark's choice of footer: left to
+    // Spark as well
+    val part = new java.io.File(s"$root/plain").listFiles()
+      .find(_.getName.endsWith(".parquet")).get.toPath
+    Files.copy(part, java.nio.file.Paths.get(s"$root/plain/_common_metadata"))
+    assert(ParquetSchema.ofPath(spark, s"$root/plain", merge = false)
+      .isEmpty)
+    assert(TableIO.read(spark, LakeLayout(root), s"$root/plain").schema ==
+      spark.read.parquet(s"$root/plain").schema)
+  }
+
+  test("driver-side parquet schema equals Spark's: evolved versioned " +
+    "table (mergeSchema)") {
+    val path = tmpDir("graft-evolved") + "/t"
+    VersionedTable.commitAppend(Seq((1, "a")).toDF("k", "v"), path)
+    VersionedTable.commitAppendEvolve(
+      Seq((2, "b", 3.0)).toDF("k", "v", "added"), path)
+    VersionedTable.commitAppendEvolve(
+      Seq((3, "c", 4.0, 5L)).toDF("k", "v", "added", "more"), path)
+    val fl = VersionedTable.files(spark, path)
+    val merged = spark.read.option("mergeSchema", "true")
+      .parquet(fl: _*).schema
+    assert(merged.fieldNames.toSeq == Seq("k", "v", "added", "more"))
+    assert(ParquetSchema.ofFiles(spark, fl, merge = true) == Some(merged))
+    assert(VersionedTable.read(spark, path).schema == merged)
+    assert(ParquetSchema.ofFiles(spark, fl, merge = false) ==
+      Some(spark.read.parquet(fl: _*).schema))
+    // conflicting footers: Spark's error, not a driver-side guess
+    val bad = tmpDir("graft-conflict")
+    Seq(1).toDF("c").write.parquet(s"$bad/a")
+    Seq("x").toDF("c").write.parquet(s"$bad/b")
+    val files = Seq("a", "b").flatMap(d => new java.io.File(s"$bad/$d")
+      .listFiles().map(_.getPath).filter(_.endsWith(".parquet")))
+    assert(ParquetSchema.ofFiles(spark, files, merge = true).isEmpty)
+  }
+
+  test("driver-side parquet schema equals Spark's: nested struct, " +
+    "array and map types, decimals") {
+    val root = tmpDir("graft-nested")
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("s", StructType(Seq(StructField("a", IntegerType),
+        StructField("b", ArrayType(StringType))))),
+      StructField("arr", ArrayType(StructType(Seq(
+        StructField("x", DoubleType), StructField("y", BinaryType))))),
+      StructField("m", MapType(StringType, ArrayType(IntegerType))),
+      StructField("d9", DecimalType(9, 2)),
+      StructField("d18", DecimalType(18, 4)),
+      StructField("d38", DecimalType(38, 10))))
+    val row = org.apache.spark.sql.Row(1L,
+      org.apache.spark.sql.Row(1, Seq("p")),
+      Seq(org.apache.spark.sql.Row(1.0, Array[Byte](1))),
+      Map("k" -> Seq(1, 2)), BigDecimal("1.25").bigDecimal,
+      BigDecimal("2.5").bigDecimal, BigDecimal("3.125").bigDecimal)
+    spark.createDataFrame(java.util.Arrays.asList(row), schema)
+      .write.parquet(s"$root/t")
+    assertSameAsSpark(s"$root/t")
+  }
+
+  test("driver-side parquet schema equals Spark's: timestamp vs " +
+    "timestamp_ntz, with and without Spark's footer metadata") {
+    val root = tmpDir("graft-ts")
+    Seq((ts("2026-01-01 00:00:00"),
+        java.time.LocalDateTime.parse("2026-01-01T00:00:00")))
+      .toDF("ts", "ntz").write.parquet(s"$root/spark")
+    assertSameAsSpark(s"$root/spark")
+    assert(spark.read.parquet(s"$root/spark").schema.map(_.dataType) ==
+      Seq(TimestampType, TimestampNTZType))
+    // a footer without Spark's schema goes through the type converter
+    val msg = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      """message m {
+        |  required int64 ntz (TIMESTAMP(MICROS,false));
+        |  required int64 utc (TIMESTAMP(MICROS,true));
+        |  optional int32 d (DECIMAL(9,2));
+        |  optional binary s (STRING);
+        |}""".stripMargin)
+    val file = new org.apache.hadoop.fs.Path(s"$root/foreign/f.parquet")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+        file, spark.sparkContext.hadoopConfiguration))
+      .withType(msg).build()
+    try w.write(new org.apache.parquet.example.data.simple
+      .SimpleGroupFactory(msg).newGroup()
+      .append("ntz", 1L).append("utc", 2L).append("d", 125)
+      .append("s", "x"))
+    finally w.close()
+    assertSameAsSpark(s"$root/foreign")
+    val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    spark.conf.set(key, "false")
+    try {
+      assertSameAsSpark(s"$root/foreign")
+      assert(ParquetSchema.ofPath(spark, s"$root/foreign", merge = false)
+        .get("ntz").dataType == TimestampType)
+    } finally spark.conf.unset(key)
+  }
+
+  test("trees and merges beyond Spark's parallel-discovery threshold " +
+    "are left to Spark") {
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val threshold = spark.conf.get(key).toInt
+    val root = tmpDir("graft-wide")
+    (0 to threshold).map(i => (i.toLong, s"p$i")).toDF("id", "p")
+      .write.partitionBy("p").parquet(s"$root/t")
+    assert(ParquetSchema.ofPath(spark, s"$root/t", merge = false).isEmpty)
+    assert(TableIO.read(spark, LakeLayout(root), s"$root/t").schema ==
+      spark.read.parquet(s"$root/t").schema)
+    val fl = new java.io.File(s"$root/t").listFiles()
+      .filter(_.isDirectory).flatMap(_.listFiles())
+      .map(_.getPath).filter(_.endsWith(".parquet")).toSeq
+    assert(fl.size > threshold)
+    assert(ParquetSchema.ofFiles(spark, fl, merge = true).isEmpty)
+    assert(ParquetSchema.ofFiles(spark, fl, merge = false).isDefined)
+    // the cut-off is the session's own value, not a constant
+    spark.conf.set(key, (2 * threshold).toString)
+    try {
+      assertSameAsSpark(s"$root/t")
+      assert(ParquetSchema.ofFiles(spark, fl, merge = true) ==
+        Some(spark.read.option("mergeSchema", "true").parquet(fl: _*)
+          .schema))
+    } finally spark.conf.unset(key)
+  }
+
+  test("an empty or missing path fails with Spark's own error class") {
+    val root = tmpDir("graft-missing")
+    Files.createDirectories(java.nio.file.Paths.get(s"$root/empty"))
+    for (p <- Seq(s"$root/missing", s"$root/empty")) {
+      val ours = intercept[AnalysisException](
+        TableIO.read(spark, LakeLayout(root), p))
+      val spark0 = intercept[AnalysisException](spark.read.parquet(p))
+      assert(ours.getCondition == spark0.getCondition)
+    }
+    val vt = s"$root/vt"
+    VersionedTable.commitOverwrite(Seq(1).toDF("k"), vt)
+    // a committed data file that disappeared: Spark's error, no guess
+    new java.io.File(VersionedTable.files(spark, vt).head
+      .stripPrefix("file:")).delete()
+    intercept[Exception](VersionedTable.read(spark, vt).collect())
+  }
+
+  test("Tables re-resolves the schema of a file regenerated at a " +
+    "cached path") {
+    val root = tmpDir("graft-tables")
+    def regenerate(df: org.apache.spark.sql.DataFrame, mtime: Long)
+        : Unit = {
+      val out = s"$root/gen_$mtime"
+      df.coalesce(1).write.parquet(out)
+      val part = new java.io.File(out).listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath
+      val target = java.nio.file.Paths.get(s"$root/region.parquet")
+      Files.copy(part, target,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(target,
+        java.nio.file.attribute.FileTime.fromMillis(mtime))
+    }
+    regenerate(Seq((1, "a")).toDF("r_regionkey", "r_name"), 1000000L)
+    assert(Tables.load(spark, root, "region").columns.toSeq ==
+      Seq("r_regionkey", "r_name"))
+    regenerate(Seq((1L, 2.0, "x")).toDF("a", "b", "c"), 2000000L)
+    val again = Tables.load(spark, root, "region")
+    assert(again.columns.toSeq == Seq("a", "b", "c"))
+    assert(again.collect().head.getDouble(1) == 2.0)
   }
 }

@@ -88,6 +88,22 @@ class IncrementalSpec extends SparkTestBase {
       .count() == 2)
   }
 
+  test("readState: a missing path is no state, a corrupt file fails") {
+    val tmp = Files.createTempDirectory("graft-state").toString
+    val statePath = s"$tmp/state"
+    assert(IncrementalFiles.readState(spark, statePath).isEmpty)
+    IncrementalFiles.writeState(spark, statePath, "2026-01-01")
+    assert(IncrementalFiles.readState(spark, statePath)
+      .contains("2026-01-01"))
+    // the state file replaced by bytes that are not parquet: treating
+    // this as "no state" would re-ingest the whole landing zone
+    val dir = new java.io.File(statePath)
+    dir.listFiles().foreach(_.delete())
+    Files.write(java.nio.file.Paths.get(s"$statePath/part-00000.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    intercept[Exception](IncrementalFiles.readState(spark, statePath))
+  }
+
   test("mod-time pickup catches backfills into frozen partitions") {
     val tmp = Files.createTempDirectory("graft-mtime").toString
     val landing = s"$tmp/landing"
