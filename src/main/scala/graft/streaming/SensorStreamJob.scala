@@ -1,6 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core.{LakeLayout, TableIO}
@@ -30,22 +37,43 @@ object SensorStreamJob {
       .load()
 
   /** The notebook topology (the architecturally-correct variant,
-    * SURVEY §2.9): 4 queries — bronze raw, silver parsed, gold 1-min
-    * agg, gold enriched — each with its own checkpoint dir. */
+    * SURVEY §2.9): 3 queries writing 4 tables — bronze raw, silver
+    * parsed, and the gold 1-minute agg, whose every micro-batch also
+    * writes gold enriched — each query with its own checkpoint dir.
+    *
+    * The agg runs once per trigger for both gold tables (one JSON
+    * parse, one shuffle, one state store): its `foreachBatch` persists
+    * the closed windows a micro-batch emits, appends them to
+    * `gold/sensors_minute_agg`, then appends their enrichment to
+    * `gold/sensors_enriched`. Both appends go through Spark's own file
+    * sink ([[appendSink]]), which skips a batch id already in the
+    * table's `_spark_metadata` log: replaying a micro-batch duplicates
+    * neither table, and readers see both through their logs as before.
+    *
+    * Fails before any query starts when `layout.format` is not a file
+    * format, or when the enriched log is not at the agg log's batch or
+    * one behind it (a crash between the two appends): any other gap
+    * would make the enriched sink skip or miss batches. */
   def start(spark: SparkSession, layout: LakeLayout, kafka: DataFrame,
       pools: DataFrame, prices: DataFrame,
       triggerSeconds: Int = 10, watermark: String = "2 minutes")
       : Seq[StreamingQuery] = {
     val trigger = Trigger.ProcessingTime(s"$triggerSeconds seconds")
-    def sink(df: DataFrame, name: String, partitionCol: String) =
-      df.writeStream.format(layout.format)
-        .option("checkpointLocation", layout.checkpoints(name))
-        .option("path", layout.gold(name))
-        .partitionBy(partitionCol)
-        .outputMode("append")
-        .trigger(trigger)
-        .queryName(name)
-        .start()
+    val aggPath = layout.gold("sensors_minute_agg")
+    val enrichedPath = layout.gold("sensors_enriched")
+    val aggSink = appendSink(spark, layout, aggPath, Seq("calc_date"))
+    val enrichedSink =
+      appendSink(spark, layout, enrichedPath, Seq("calc_date"))
+    val aggAt = GraftBridge.fileSinkLatestBatchId(spark, aggPath)
+      .getOrElse(-1L)
+    val enrichedAt = GraftBridge.fileSinkLatestBatchId(spark, enrichedPath)
+      .getOrElse(-1L)
+    if (enrichedAt != aggAt && enrichedAt != aggAt - 1)
+      throw new IllegalStateException(
+        s"$enrichedPath/_spark_metadata is at batch $enrichedAt but " +
+          s"$aggPath/_spark_metadata at batch $aggAt: the enriched table " +
+          "must be at the agg table's batch or one behind it, or its " +
+          "sink would skip or miss batches")
 
     val bronze = SensorPipeline.bronze(kafka)
     val qBronze = bronze.writeStream.format(layout.format)
@@ -63,19 +91,66 @@ object SensorStreamJob {
       .outputMode("append").trigger(trigger)
       .queryName("silver_sensors").start()
 
-    val agg = SensorPipeline.goldMinuteAgg(silver)
-    val qAgg = sink(agg, "sensors_minute_agg", "calc_date")
-    val enriched = SensorPipeline.goldEnriched(agg, pools, prices)
-    val qEnriched = sink(enriched, "sensors_enriched", "calc_date")
+    val qAgg = SensorPipeline.goldMinuteAgg(silver).writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // the batch is a LogicalRDD over the stateful plan's output: a
+        // second action without persist re-runs the plan and its
+        // state-store commit
+        batch.persist()
+        try {
+          aggSink.addBatch(batchId, batch)
+          enrichedSink.addBatch(batchId,
+            SensorPipeline.goldEnriched(batch, pools, prices))
+        } finally batch.unpersist()
+      }
+      .option("checkpointLocation", layout.checkpoints("sensors_minute_agg"))
+      .outputMode("append").trigger(trigger)
+      .queryName("sensors_minute_agg").start()
 
-    Seq(qBronze, qSilver, qAgg, qEnriched)
+    Seq(qBronze, qSilver, qAgg)
   }
 
-  /** Bounded run + graceful reverse-order stop (07:…py:163-171). */
+  /** Spark's streaming file sink for the table at `path`
+    * ([[GraftBridge.fileStreamSink]]): exactly-once appends from a
+    * `foreachBatch` through the table's `_spark_metadata` log. A
+    * non-empty table without that log fails here — the log would hide
+    * its existing files from every reader. */
+  private def appendSink(spark: SparkSession, layout: LakeLayout,
+      path: String, partitionColumns: Seq[String]) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p) && fs.listStatus(p).nonEmpty &&
+        !fs.exists(new Path(p, "_spark_metadata")))
+      throw new IllegalStateException(s"$path holds files written " +
+        "without a _spark_metadata log; a streaming sink would hide them")
+    GraftBridge.fileStreamSink(spark, path, layout.format, partitionColumns)
+  }
+
+  /** Bounded run + graceful reverse-order stop (07:…py:163-171). The
+    * run ends early when a query dies. Each stop is bounded: one that
+    * does not finish in [[StopTimeoutMs]] throws once every query has
+    * been asked to stop. A query's failure is rethrown after the stop,
+    * so a query that died mid-run fails the job. */
   def runBounded(queries: Seq[StreamingQuery], runSeconds: Int): Unit = {
-    Thread.sleep(runSeconds * 1000L)
-    queries.reverse.foreach(_.stop())
+    val deadline = System.currentTimeMillis() + runSeconds * 1000L
+    while (queries.forall(_.isActive) &&
+        System.currentTimeMillis() < deadline)
+      Thread.sleep(math.max(1L,
+        math.min(100L, deadline - System.currentTimeMillis())))
+    val stopFailures = queries.reverse.flatMap { q =>
+      val stop = Future(q.stop())(ExecutionContext.global)
+      try { Await.result(stop, StopTimeoutMs.millis); None }
+      catch {
+        case _: TimeoutException => Some(new TimeoutException(
+          s"query ${q.name} did not stop within $StopTimeoutMs ms"))
+        case NonFatal(e) => Some(e)
+      }
+    }
+    queries.flatMap(_.exception).headOption.foreach(e => throw e)
+    stopFailures.headOption.foreach(e => throw e)
   }
+
+  private val StopTimeoutMs = 30000L
 
   /** K6: console debug sink (reference 07_kafka….ipynb §9) — prints
     * each micro-batch to stdout; never a production sink. */
@@ -96,35 +171,26 @@ object SensorStreamJob {
     * re-reads the dim table at every micro-batch — an update lands in
     * the NEXT batch. The dim is broadcast (it is small by contract).
     *
-    * Replay idempotence: Structured Streaming re-runs a micro-batch
-    * whose write finished but whose checkpoint commit didn't, and a
-    * blind append would then duplicate it. A `_graft_batch_commits/<id>`
-    * marker written AFTER the append makes the replay a no-op. The
-    * residual window (crash between append and marker) duplicates at
-    * most one batch — closing it entirely needs a transactional table
-    * format, which parquet-mode deliberately doesn't assume. */
+    * Exactly-once: Structured Streaming re-runs a micro-batch whose
+    * write finished but whose checkpoint commit didn't, and a blind
+    * append would then duplicate it. The append goes through Spark's
+    * own file sink ([[appendSink]]), which records each batch id in
+    * `outPath/_spark_metadata` in the same commit as its files and skips
+    * a replayed id. Readers see the table through that log. */
   def startWithDimRefresh(stream: DataFrame, layout: LakeLayout,
       dimPath: String, joinKeys: Seq[String], outPath: String,
-      checkpointPath: String): StreamingQuery =
+      checkpointPath: String): StreamingQuery = {
+    val out = appendSink(stream.sparkSession, layout, outPath, Nil)
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$outPath/_graft_batch_commits/$batchId")
-        val fs = marker.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) {
-          val dim = spark.read.format(layout.format).load(dimPath)
-          batch.join(org.apache.spark.sql.functions.broadcast(dim),
-              joinKeys, "left")
-            .write.format(layout.format)
-            .mode(org.apache.spark.sql.SaveMode.Append).save(outPath)
-          fs.create(marker, true).close()
-        }
+        val dim = batch.sparkSession.read.format(layout.format).load(dimPath)
+        out.addBatch(batchId, batch.join(
+          org.apache.spark.sql.functions.broadcast(dim), joinKeys, "left"))
       }
       .option("checkpointLocation", checkpointPath)
       .queryName("dim_refresh_sink")
       .start()
+  }
 
   /** Streaming MERGE sink: each micro-batch UPSERTS into the target by
     * key (latest-wins inside the batch, then K4 merge semantics against

@@ -56,6 +56,44 @@ object GraftBridge {
   def hiddenPathName(name: String): Boolean =
     org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 
+  /** Spark's streaming file sink (the one behind
+    * `writeStream.format(format).option("path", path)`), to be driven
+    * from a `foreachBatch`: `addBatch(id, df)` appends `df` through the
+    * manifest committer and records it as batch `id` in the table's
+    * `_spark_metadata` log, and skips any id at or below the log's
+    * latest, so a replayed micro-batch writes nothing twice. Readers see
+    * the table through that log. `format` resolves as `writeStream`
+    * resolves it; a name that is not a file format throws here. */
+  def fileStreamSink(spark: SparkSession, path: String, format: String,
+      partitionColumns: Seq[String])
+      : execution.streaming.sinks.FileStreamSink = {
+    val provider = execution.datasources.DataSource
+      .lookupDataSource(format, sqlConf(spark))
+      .getDeclaredConstructor().newInstance()
+    val fileFormat = provider match {
+      case v2: execution.datasources.v2.FileDataSourceV2 =>
+        v2.fallbackFileFormat.getDeclaredConstructor().newInstance()
+      case f: execution.datasources.FileFormat => f
+      case _ => throw new IllegalArgumentException(
+        s"format '$format' is not a file format: no streaming file sink " +
+          s"can write $path")
+    }
+    new execution.streaming.sinks.FileStreamSink(spark, path, fileFormat,
+      partitionColumns, Map.empty)
+  }
+
+  /** The latest batch id in the `_spark_metadata` log of the streaming
+    * file sink table at `path`; None when the log holds no batch. */
+  def fileSinkLatestBatchId(spark: SparkSession, path: String)
+      : Option[Long] = {
+    import execution.streaming.sinks.{FileStreamSink, FileStreamSinkLog}
+    val base = new org.apache.hadoop.fs.Path(path)
+    val log = FileStreamSink.getMetadataLogPath(
+      base.getFileSystem(hadoopConf(spark)), base, sqlConf(spark))
+    new FileStreamSinkLog(FileStreamSinkLog.VERSION, spark, log.toString,
+      None).getLatestBatchId()
+  }
+
   /** Stable per-session identity (`sessionUUID` is `private[sql]`).
     * Exotic non-classic sessions fall back to JVM object identity —
     * still never shared across distinct session objects. */
