@@ -1,5 +1,7 @@
 package graft
+import graft.core.{JobCounters, Sessions}
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): runs every catalog query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -35,6 +37,15 @@ import org.apache.spark.sql.SparkSession
   * `extra_passes` in the record says whether the policy fired.
   */
 object Bench {
+  /** One timed run: its seconds and the Spark work it did, or the
+    * failure as `<class>: <message>`. */
+  private type Run = Either[String, (Double, JobCounters)]
+
+  /** One query in the record; `detail` is its `counters` or `error`
+    * JSON field. */
+  private final case class Result(name: String, sec: Double,
+      spread: Double, detail: String)
+
   /** A filter token matches a catalog query by full name
     * (`q139_bm25_incremental`) or by bare id (`q139`) — BASELINE.md
     * documents the bare-id form and ids are unique, so both must work.
@@ -140,33 +151,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    // AQE partition-coalescing floor (guide §2.2/§2.5): the default
-    // 1 MB floor sizes post-shuffle partitions by BYTES, which on a
-    // many-core box running CPU-per-row-heavy stages over small-byte
-    // frames (hashing, shingling, similarity verify) coalesces a
-    // 600 ms stage onto 1–2 tasks while the other cores idle —
-    // measured −13 % warm total on the ten most CPU-bound catalog
-    // queries at sf0.1 with a 64k floor, zero regressions. At
-    // production scale post-shuffle partitions are ≫1 MB, so the
-    // floor never binds — the setting is inert there (production
-    // keeps the 1 MB default; OPTIMIZATION_r14.md justifies both).
-    // Env-tunable so the driver's bench stays comparable across core
-    // counts (the ceiling on tasks per stage is still
-    // spark.sql.shuffle.partitions = $cpus).
-    val aqeMinPart = sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "64k")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        aqeMinPart)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCores, "graft-bench")
     // optional comma-separated name filter for local iteration; the
     // driver never sets it, so driver runs always bench the catalog
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -177,16 +164,21 @@ object Bench {
       .filter { case (n, _) => selected.contains(n) }
 
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => -1.0 }
-    }
+        : Run =
+      try Right(JobCounters.during(spark) {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      })
+      catch {
+        case NonFatal(e) => Left(s"${e.getClass.getName}: ${e.getMessage}")
+      }
+    def sec(r: Run): Double = r.fold(_ => 0.0, _._1)
 
     // cold pass, catalog order
     val cold = catalog.map { case (name, fn) => name -> run(fn) }.toMap
-    val coldTotal = cold.valuesIterator.filter(_ >= 0).sum
-    val okCold = catalog.filter { case (n, _) => cold(n) >= 0 }
+    val coldTotal = cold.valuesIterator.map(sec).sum
+    val okCold = catalog.filter { case (n, _) => cold(n).isRight }
 
     // warm passes: each a different deterministic shuffle of the
     // catalog, GC'd between passes so one pass's debt doesn't bill
@@ -197,21 +189,16 @@ object Bench {
     // 10 measured the growing disk/page-cache footprint as a
     // consistent +11 % drag on the later passes' shared queries.
     // Session-cached artifacts (ModelCache-pinned paths) survive.
-    // SPARK_GRAFT_BENCH_NO_RECLAIM=1 disables the pass-boundary sweep —
-    // the A/B knob for measuring what scratch accumulation costs (never
-    // set by the driver)
-    val reclaim = !sys.env.get("SPARK_GRAFT_BENCH_NO_RECLAIM")
-      .contains("1")
-    val warmTimes = collection.mutable.Map.empty[String, List[Double]]
+    val warmRuns = collection.mutable.Map.empty[String, List[Run]]
     val passTotals = collection.mutable.ListBuffer.empty[Double]
     def warmPass(rep: Int): Unit = {
-      if (reclaim) graft.core.Scratch.reclaimEphemeral()
+      graft.core.Scratch.reclaimEphemeral()
       System.gc()
       val order = new scala.util.Random(1000003L * rep).shuffle(okCold)
       passTotals += order.map { case (name, fn) =>
-        val t = run(fn)
-        warmTimes(name) = t :: warmTimes.getOrElse(name, Nil)
-        math.max(t, 0.0)
+        val r = run(fn)
+        warmRuns(name) = r :: warmRuns.getOrElse(name, Nil)
+        sec(r)
       }.sum
       ()
     }
@@ -241,28 +228,33 @@ object Bench {
         elapsedExtra >= extraBudget) 3 - extras
       else 0
 
-    // per query: (warm min across passes, spread = max-min); a failed
-    // warm run must read as a failure, not a fast time
+    // per query: warm min across passes, spread = max-min, and the
+    // counters of the min pass; a failed run must read as a failure
+    // (sec -1 plus its error), not a fast time
     val results = catalog.map { case (name, _) =>
-      val ts = warmTimes.getOrElse(name, Nil)
-      if (cold(name) < 0 || ts.isEmpty || ts.contains(-1.0))
-        (name, -1.0, 0.0)
-      else (name, ts.min, ts.max - ts.min)
+      val runs = warmRuns.getOrElse(name, Nil)
+      (cold(name) :: runs).collectFirst { case Left(e) => e } match {
+        case Some(e) =>
+          Result(name, -1.0, 0.0, s""""error":${Verify.jsonString(e)}""")
+        case None =>
+          val ok = runs.collect { case Right(r) => r }
+          val (best, c) = ok.minBy(_._1)
+          Result(name, best, ok.map(_._1).max - best,
+            s""""counters":${c.json}""")
+      }
     }
-    val spreadTotal = results.map(_._3).sum
+    val spreadTotal = results.map(_.spread).sum
     // total of per-query min over only the FIRST `reps` passes (lists
     // are built newest-first, so takeRight = the earliest passes):
     // extra passes lower min-of-N, so a record where the policy fired
     // reads systematically faster than a fixed-3-pass record — this
     // field keeps cross-round comparisons apples-to-apples (compare
     // first_reps totals against first_reps totals)
-    val firstRepsTotal = catalog.map { case (name, _) =>
-      val ts = warmTimes.getOrElse(name, Nil).takeRight(reps)
-      if (cold(name) < 0 || ts.isEmpty || ts.contains(-1.0)) 0.0
-      else ts.min
+    val firstRepsTotal = results.filter(_.sec >= 0).map { r =>
+      warmRuns(r.name).takeRight(reps).map(sec).min
     }.sum
     val ratios = results.collect {
-      case (_, m, s) if m > 0 => s / m
+      case r if r.sec > 0 => r.spread / r.sec
     }.sorted
     val medRatio =
       if (ratios.isEmpty) 0.0 else ratios(ratios.size / 2)
@@ -273,10 +265,10 @@ object Bench {
     def ms(v: Double): String =
       if (v < 0) "-1" else BigDecimal(v).setScale(3,
         BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = results.map { case (k, v, _) =>
-      "\"" + k.takeWhile(_ != '_') + "\":" + ms(v)
+    val qs = results.map { r =>
+      "\"" + r.name.takeWhile(_ != '_') + "\":" + ms(r.sec)
     }.mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val total = results.map(_.sec).filter(_ >= 0).sum
     val header =
       s""""value":${ms(total)},"unit":"sec",""" +
       s""""cold_total_sec":${ms(coldTotal)},"reps":$reps,""" +
@@ -291,9 +283,11 @@ object Bench {
     // the driver's stdout tail capture is lossy (~2 KB): ALSO write the
     // complete record — full query names, per-query min AND spread — to
     // a repo file so each round's bench is self-contained and phantom
-    // per-query swings are self-diagnosing against the spread
-    val full = results.map { case (k, v, s) =>
-      s""""$k":{"sec":${ms(v)},"spread_sec":${ms(s)}}"""
+    // per-query swings are self-diagnosing against the spread and the
+    // counters (exact on identical code, unlike the times)
+    val full = results.map { r =>
+      s""""${r.name}":{"sec":${ms(r.sec)},"spread_sec":${ms(r.spread)},""" +
+        r.detail + "}"
     }.mkString("{", ",", "}")
     // per-pass totals expose within-run drift (a rising sequence on
     // byte-identical code = the run degrading as it goes — the exact

@@ -1,21 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Plan inspection: print the formatted physical plan of the named
-  * catalog queries (same session config as [[Bench]]) — the manual
-  * `.explain` loop the scale audit runs after every operator lands. */
+  * catalog queries on the product session — the manual `.explain`
+  * loop the scale audit runs after every operator lands. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.envCores, "graft-plandump")
     args.foreach { name =>
       println(s"========== $name ==========")
       println(SparkEntry.queries(name)(spark, sfDir)

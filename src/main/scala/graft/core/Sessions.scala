@@ -4,6 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory, the Spark-4-native re-expression of the reference's
   * `create_spark` (reference: spark-apps/smartpool_config.py:57-103).
+  * Every main and the shared spec session build through it, so the
+  * catalog is benched, verified and tested on the session the product
+  * ships.
   *
   * Differences from the reference, deliberate (SURVEY.md §4):
   *  - AQE ON (reference disabled it for its 4-core cluster; at 100 TB the
@@ -30,10 +33,7 @@ object Sessions {
     s
   }
 
-  /** Tunings applied to a driver-provided session (Verify/Bench paths). */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark
-  }
+  /** Cores of the catalog mains (Bench, Verify, PlanDump):
+    * `SPARK_GRAFT_CPUS`, default 4. */
+  def envCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 }

@@ -19,7 +19,7 @@ object GraftBridge {
       b: types.DataType): Boolean = a.asNullable == b.asNullable
 
   /** Drain the listener bus (`listenerBus` is `private[spark]`) — lets
-    * specs count Spark jobs deterministically after a driver call. */
+    * [[graft.core.JobCounters]] count Spark jobs deterministically. */
   def waitListenerEmpty(spark: SparkSession): Unit = spark match {
     case c: classic.SparkSession =>
       c.sparkContext.listenerBus.waitUntilEmpty()

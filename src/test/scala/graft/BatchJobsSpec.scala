@@ -151,25 +151,6 @@ class BatchJobsSpec extends SparkTestBase {
       .count() == 48)
   }
 
-  /** Spark jobs started by `body`, counted via listener (drained
-    * through the bridge so the async bus can't undercount). */
-  private def jobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.sql.GraftBridge.waitListenerEmpty(spark)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.sql.GraftBridge.waitListenerEmpty(spark)
-    } finally spark.sparkContext.removeSparkListener(l)
-    n.get
-  }
-
   // Spark jobs of one warm increment over this suite's fixtures
   private val EP1_JOBS = 21
   private val EP2_JOBS = 11
@@ -226,15 +207,15 @@ class BatchJobsSpec extends SparkTestBase {
     assert(files > spark.conf
       .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt)
     landPrices(landing, d, Seq.fill(files)(1 -> (0 until 3)), 50.0)
-    val rootRead = jobs {
+    val rootRead = counted {
       assert(spark.read.option("header", "true")
         .option("basePath", landing).format("csv").load(landing)
         .filter(col("date") >= lit(d)).count() == 3L * files)
-    }
-    val grouped = jobs {
+    }.jobs
+    val grouped = counted {
       val frames = IncrementalFiles.readNewGroups(spark, landing, Some(d))
       assert(frames.map(_.count()) == Seq(3L * files))
-    }
+    }.jobs
     assert(grouped == rootRead,
       s"readNewGroups ran $grouped jobs, a read of the root $rootRead")
   }
@@ -242,8 +223,8 @@ class BatchJobsSpec extends SparkTestBase {
   test("DataQuality.assertEmpty runs one job over all partitions") {
     val wide = spark.range(0, 1000, 1, 64).toDF()
     val empty = wide.filter(col("id") < 0)
-    assert(jobs(DataQuality.assertEmpty("none", empty)) == 1)
-    assert(jobs(assert(empty.limit(1).count() == 0)) == 2)
+    assert(counted(DataQuality.assertEmpty("none", empty)).jobs == 1)
+    assert(counted(assert(empty.limit(1).count() == 0)).jobs == 2)
     val e = intercept[IllegalArgumentException](
       DataQuality.assertEmpty("last row", wide.filter(col("id") === 999)))
     assert(e.getMessage.contains("data-quality check failed: last row"))
@@ -265,7 +246,7 @@ class BatchJobsSpec extends SparkTestBase {
       s"$root/vt")
     VersionedTable.commitOverwrite(Seq((1, "a")).toDF("k", "v"),
       s"$root/vt2")
-    val n = jobs {
+    val n = counted {
       assert(TableIO.read(spark, layout, s"$root/plain").columns.toSeq ==
         Seq("k", "v"))
       assert(TableIO.read(spark, layout, s"$root/part").columns.toSeq ==
@@ -275,7 +256,7 @@ class BatchJobsSpec extends SparkTestBase {
       val e = intercept[IllegalArgumentException](TableIO.publishSnapshot(
         Seq((1, 2L)).toDF("k", "w"), layout, s"$root/vt2"))
       assert(e.getMessage.contains("changes schema"))
-    }
+    }.jobs
     assert(n == 0, s"$n Spark jobs resolving table schemas")
   }
 
@@ -289,11 +270,11 @@ class BatchJobsSpec extends SparkTestBase {
         50.0)
       ElectricityBatchJob.run(spark, layout, landing)
     }
-    val ep1 = jobs(StructuredBatchJob.run(spark, layout, rawPools,
-      rawEvents))
+    val ep1 = counted(StructuredBatchJob.run(spark, layout, rawPools,
+      rawEvents)).jobs
     landPrices(landing, "2026-01-17", Seq(1 -> (0 until 12),
       1 -> (12 until 24)), 50.0)
-    val ep2 = jobs(ElectricityBatchJob.run(spark, layout, landing))
+    val ep2 = counted(ElectricityBatchJob.run(spark, layout, landing)).jobs
     info(s"warm EP1 increment: $ep1 jobs, warm EP2 increment: $ep2 jobs")
     assert(ep1 <= EP1_JOBS, s"warm EP1 increment ran $ep1 jobs")
     assert(ep2 <= EP2_JOBS, s"warm EP2 increment ran $ep2 jobs")

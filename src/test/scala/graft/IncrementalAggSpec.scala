@@ -576,24 +576,6 @@ class IncrementalAggSpec extends SparkTestBase {
     assert(rows("z") === ((2L, None))) // sum is 0, extrema stay null
   }
 
-  /** Spark jobs started by `body`, counted via listener (drained
-    * through the bridge so the async bus can't undercount). */
-  private def jobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.sql.GraftBridge.waitListenerEmpty(spark)
-    } finally spark.sparkContext.removeSparkListener(l)
-    n.get
-  }
-
   test("persisted dim pin: after a restart the static-dim probe is " +
     "scan-free (and the sidecar's absence is what costs)") {
     val root = tmp()
@@ -612,19 +594,19 @@ class IncrementalAggSpec extends SparkTestBase {
     // BASELINE: warm in-memory cache, static dim, one fact append —
     // the repair probe is free, drive runs its delta path
     VersionedTable.commitAppend(Seq((1L, 1L)).toDF("k", "v"), fact)
-    val warm = jobs {
+    val warm = counted {
       assert(IncrementalAgg.maintainJoined(spark, fact, dim, agg,
         "k", Seq("region"), "v").mode == "incremental")
-    }
+    }.jobs
     // RESTART SIM: cleared cache, sidecar present — identical job
     // count proves the persisted pin replaced the view-read probe
     // (reading the ~10-byte pin file is driver IO, not a Spark job)
     VersionedTable.commitAppend(Seq((1L, 2L)).toDF("k", "v"), fact)
     IncrementalAgg.clearDimPinCacheForTest()
-    val restart = jobs {
+    val restart = counted {
       assert(IncrementalAgg.maintainJoined(spark, fact, dim, agg,
         "k", Seq("region"), "v").mode == "incremental")
-    }
+    }.jobs
     assert(restart == warm,
       s"restart with sidecar must match warm-cache jobs: $restart vs " +
         s"$warm")
@@ -634,10 +616,10 @@ class IncrementalAggSpec extends SparkTestBase {
     VersionedTable.commitAppend(Seq((1L, 3L)).toDF("k", "v"), fact)
     IncrementalAgg.clearDimPinCacheForTest()
     fsys.delete(pinDir, true)
-    val legacy = jobs {
+    val legacy = counted {
       assert(IncrementalAgg.maintainJoined(spark, fact, dim, agg,
         "k", Seq("region"), "v").mode == "incremental")
-    }
+    }.jobs
     assert(legacy > warm,
       s"legacy probe must cost extra jobs: $legacy vs $warm")
     // ... and the legacy probe re-persisted what it discovered, so

@@ -291,24 +291,6 @@ class ProfilingOpsSpec extends SparkTestBase {
     assert(once.toSeq == again.toSeq)
   }
 
-  /** Spark jobs started by `body` (the IncrementalAggSpec listener
-    * discipline, drained through the bridge). */
-  private def jobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.sql.GraftBridge.waitListenerEmpty(spark)
-    } finally spark.sparkContext.removeSparkListener(l)
-    n.get
-  }
-
   private def causeChain(e: Throwable): Seq[String] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
       .map(t => Option(t.getMessage).getOrElse("")).toSeq
@@ -372,10 +354,10 @@ class ProfilingOpsSpec extends SparkTestBase {
     val rc = (0 to 40).map(v => (v.toLong, 12L)).toDF("v", "n")
     val cc = (0 to 50).map(v => (v.toLong, 10L)).toDF("v", "n")
     var frame: org.apache.spark.sql.DataFrame = null
-    val buildJobs = jobs {
+    val buildJobs = counted {
       frame = graft.ops.DriftMonitor.ksGuarded(rc, cc,
         maxSupport = 100, coarsenTo = 64)
-    }
+    }.jobs
     assert(buildJobs == 0,
       s"building the guarded KS must not run the probe job, ran " +
         s"$buildJobs")
@@ -384,26 +366,6 @@ class ProfilingOpsSpec extends SparkTestBase {
     assert(row.getAs[Long]("n_ref") == 492L &&
       row.getAs[Long]("n_cur") == 510L)
     assert(row.getAs[Double]("ks") > 0.0)
-  }
-
-  /** Source rows read by `body` (file scans + cached blocks; shuffle
-    * reads don't count — they land in shuffleRead metrics). */
-  private def recordsRead(body: => Unit): Long = {
-    val n = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        if (t.taskMetrics != null)
-          n.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.sql.GraftBridge.waitListenerEmpty(spark)
-    } finally spark.sparkContext.removeSparkListener(l)
-    n.get
   }
 
   test("ks single-scan contract: a raw-corpus input scans its source " +
@@ -420,12 +382,12 @@ class ProfilingOpsSpec extends SparkTestBase {
     spark.range(n).selectExpr("id % 10 AS v")
       .write.mode("overwrite").parquet(dir)
     val corpus = spark.read.parquet(dir)
-    val read = recordsRead {
+    val read = counted {
       val row = graft.ops.DriftMonitor
         .ks(corpus, corpus.filter(col("v") >= 1), "v")
         .collect().head
       assert(row.getAs[Long]("n_ref") == n)
-    }
+    }.inputRecords
     // one scan per side ≈ 2n rows from parquet (+ a ≤ 20-row spine
     // re-read from cache); the pre-cache shape read ~4n
     assert(read >= (1.8 * n).toLong && read < 3 * n,

@@ -3,13 +3,21 @@
 
 Usage: python3 tools/bench_diff.py <old.json> <new.json>
 
-Reports queries whose warm-min moved by more than 1.5x + 0.3 s in
+First, when both records carry per-query counters, lists the queries
+whose jobs, stages, tasks or shuffle bytes differ: counters are exact
+on identical code, so any difference is a change in what ran.
+
+Then reports queries whose warm-min moved by more than 1.5x + 0.3 s in
 either direction, annotated with both runs' per-query spreads: a move
 inside (old.spread + new.spread) is VM noise, not a regression — the
 self-diagnosing audit BENCH_FULL.json's spreads exist for.
 """
 import json
 import sys
+
+
+COUNTERS = ("jobs", "stages", "tasks", "shuffle_read_bytes",
+            "shuffle_write_bytes")
 
 
 def load(p):
@@ -26,9 +34,31 @@ def load(p):
     return d, out
 
 
+def counters(d):
+    """{short id: counters} of the queries whose record carries them."""
+    return {k.split("_")[0]: v["counters"] for k, v in d["queries"].items()
+            if isinstance(v, dict) and "counters" in v}
+
+
+def counter_diff(old_d, new_d):
+    old_c, new_c = counters(old_d), counters(new_d)
+    if not (old_c and new_c):
+        return
+    common = sorted(set(old_c) & set(new_c))
+    moved = [k for k in common
+             if any(old_c[k][f] != new_c[k][f] for f in COUNTERS)]
+    print(f"{len(common)} queries with counters in both records, "
+          f"{len(moved)} differ:")
+    for k in moved:
+        print(f"  {k}: " + ", ".join(
+            f"{f} {old_c[k][f]} -> {new_c[k][f]}" for f in COUNTERS
+            if old_c[k][f] != new_c[k][f]))
+
+
 def main():
     old_d, old = load(sys.argv[1])
     new_d, new = load(sys.argv[2])
+    counter_diff(old_d, new_d)
     def short(k):
         return k.split("_")[0]
     old_s = {short(k): v for k, v in old.items()}

@@ -3,7 +3,9 @@
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [jsonOut]
 
-For each <name> directory of Spark parquet under verifyOutDir, runs
+Every query Verify recorded in verifyOutDir/failures.json (it threw in
+Spark) counts as a fail. For each other <name> directory of Spark
+parquet under verifyOutDir, runs
 oracle_sql.json[<name>] in DuckDB with views over the sfDir tables and
 compares: schema (column names), row count, and cell values (columns
 sorted by name, rows sorted, exact match after canonicalization).
@@ -88,9 +90,18 @@ def main():
             f"read_parquet('{sf_dir}/{t}.parquet')")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     import os
-    names = sorted(d for d in os.listdir(out_dir)
-                   if os.path.isdir(f"{out_dir}/{d}"))
+    # dumps older than failures.json have none; a query that threw left
+    # no (or a partial) directory, so it is counted here, not compared
+    failures_path = f"{out_dir}/failures.json"
+    failures = (json.load(open(failures_path))
+                if os.path.exists(failures_path) else {})
     n_pass = n_fail = 0
+    for name, err in sorted(failures.items()):
+        print(f"✗ {name}: SPARK FAILED: {err[:200]}")
+        record[name] = {"status": "spark_error", "err": err[:200]}
+        n_fail += 1
+    names = sorted(d for d in os.listdir(out_dir)
+                   if os.path.isdir(f"{out_dir}/{d}") and d not in failures)
     for name in names:
         spark_rel = con.sql(
             f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
@@ -146,13 +157,13 @@ def main():
             print(f"✓ {name}: {len(spark_rows)} rows")
             record[name] = {"status": "pass", "rows": len(spark_rows)}
             n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, "
-          f"{len(names) - n_pass - n_fail} rows-only")
+    n_rows_only = len(names) + len(failures) - n_pass - n_fail
+    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
     if json_out:
         with open(json_out, "w") as fh:
             json.dump({"sf_dir": sf_dir, "n_pass": n_pass,
                        "n_fail": n_fail,
-                       "n_rows_only": len(names) - n_pass - n_fail,
+                       "n_rows_only": n_rows_only,
                        "queries": record}, fh, indent=1, sort_keys=True)
             fh.write("\n")
     sys.exit(1 if n_fail else 0)
