@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Path-addressed medallion table IO (SURVEY.md §1.1): the reference's
   * Delta-on-MinIO layout re-expressed with a pluggable format — parquet
@@ -51,6 +51,11 @@ object TableIO {
   private def fieldNames(s: StructType): Set[String] =
     s.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
 
+  /** Lower-cased column name -> type: what the schema guards of
+    * [[append]], [[overwrite]] and [[publishSnapshot]] compare. */
+  private def columnTypes(s: StructType): Map[String, DataType] =
+    s.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
+
   /** Existing-table schema for the evolution guards (resolved like
     * [[read]]: no job for parquet); None when the path holds nothing
     * readable (e.g. an empty dir from an aborted write) — then there
@@ -86,9 +91,7 @@ object TableIO {
         // retyped column writes conflicting footers that a later read
         // either fails to merge or silently resolves one-sided (the
         // same guard overwrite() applies)
-        def types(t: org.apache.spark.sql.types.StructType) =
-          t.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
-        val existing = types(s); val next = types(df.schema)
+        val existing = columnTypes(s); val next = columnTypes(df.schema)
         val retyped = existing.keySet.intersect(next.keySet)
           .filter(k => existing(k) != next(k))
         require(retyped.isEmpty,
@@ -115,10 +118,8 @@ object TableIO {
       .foreach { s =>
         // names AND types: a same-named column changing type is the
         // classic silent upstream bug this guard exists to refuse
-        def shape(t: org.apache.spark.sql.types.StructType) =
-          t.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
-        val existing = shape(s)
-        val next = shape(df.schema)
+        val existing = columnTypes(s)
+        val next = columnTypes(df.schema)
         require(existing == next,
           s"overwrite of $path changes schema ($existing -> $next); " +
             "pass overwriteSchema = true to replace it")
@@ -162,11 +163,9 @@ object TableIO {
   def publishSnapshot(df: DataFrame, layout: LakeLayout, path: String,
       overwriteSchema: Boolean = false): Int = {
     if (!overwriteSchema && snapshotExists(df.sparkSession, path)) {
-      def shape(t: org.apache.spark.sql.types.StructType) =
-        t.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
       val existing =
-        shape(VersionedTable.read(df.sparkSession, path).schema)
-      val next = shape(df.schema)
+        columnTypes(VersionedTable.read(df.sparkSession, path).schema)
+      val next = columnTypes(df.schema)
       require(existing == next,
         s"snapshot publish to $path changes schema " +
           s"($existing -> $next); pass overwriteSchema = true")
@@ -298,16 +297,4 @@ object TableIO {
     logVersion(spark, path, s"COMPACT($targetFiles files)",
       read(spark, layout, path).count())
   }
-
-  /** Pre-create an empty table to fix the schema before streams start
-    * (reference `ensure_delta`, 07_kafka….ipynb §3). */
-  def ensureTable(spark: SparkSession, layout: LakeLayout, path: String,
-      schema: StructType, partitionCols: Seq[String] = Nil): Unit =
-    if (!exists(spark, path)) {
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      val w = empty.write.format(layout.format).mode(SaveMode.Overwrite)
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .save(path)
-    }
 }

@@ -1137,16 +1137,6 @@ object VersionedTable {
         colName, numBits, numHashes))
   }
 
-  /** Whether a [[publishBloom]] sidecar exists for (`version`,
-    * `colName`) — lets callers choose the Bloom-pruned read path only
-    * when it is actually cheaper (building the sidecar on the fly
-    * costs a full scan, the thing a pruned read exists to avoid). */
-  def hasBloom(spark: SparkSession, path: String, colName: String,
-      version: Option[Int] = None): Boolean = {
-    val v = version.getOrElse(latestVersion(spark, path))
-    v > 0 && fs(spark, path).exists(new Path(bloomDir(path, v, colName)))
-  }
-
   /** The Bloom-pruned candidate FILE LIST for a point lookup — `Some`
     * only when a published sidecar exists for the version (this never
     * builds one on the fly: that costs the full scan the pruned read

@@ -56,18 +56,11 @@ case class HyperplaneLsh(child: Expression, bits: Int, seed: Int)
 object HyperplaneLsh {
   private val cache = new ConcurrentHashMap[(Int, Int, Int), Array[Array[Double]]]()
 
-  private def splitmix64(x0: Long): Long = {
-    var x = x0 + 0x9e3779b97f4a7c15L
-    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-    x ^ (x >>> 31)
-  }
-
   /** plane(j)(d) ∈ [-1, 1), deterministic in (seed, j, d). */
   def planes(bits: Int, dim: Int, seed: Int): Array[Array[Double]] =
     cache.computeIfAbsent((bits, dim, seed), _ =>
       Array.tabulate(bits, dim) { (j, d) =>
-        val h = splitmix64(seed.toLong * 1000003L + j.toLong * 8191L + d)
+        val h = CmsState.splitmix64(seed.toLong * 1000003L + j.toLong * 8191L + d)
         (h.toDouble / Long.MaxValue.toDouble)
       })
 

@@ -89,9 +89,6 @@ object JaroWinkler {
     j + l * 0.1 * (1.0 - j)
   }
 
-  def jaroColumn(a: Column, b: Column): Column =
-    GraftBridge.column(JaroSimilarityExpr(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
   def column(a: Column, b: Column): Column =
     GraftBridge.column(JaroWinklerExpr(
       GraftBridge.expression(a), GraftBridge.expression(b)))

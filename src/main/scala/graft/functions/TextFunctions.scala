@@ -31,13 +31,6 @@ object TextFunctions {
     regexp_count(text, lit("[\\p{Punct}]")).cast("double") /
       greatest(length(text).cast("double"), lit(1.0))
 
-  /** Ratio of whitespace tokens that are in `stopwords` (lowercased). */
-  def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
-    val toks = tokens(lower(text))
-    val hits = size(filter(toks, t => t.isin(stopwords: _*)))
-    hits.cast("double") / greatest(size(toks).cast("double"), lit(1.0))
-  }
-
   val EnglishStopwords: Seq[String] = Seq(
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
     "that", "for", "on", "with", "as", "was", "at", "by", "be")

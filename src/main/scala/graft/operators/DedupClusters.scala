@@ -1,5 +1,10 @@
 package graft.operators
 
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -24,6 +29,10 @@ import org.apache.spark.sql.functions._
   */
 object DedupClusters {
 
+  /** How long a round waits for its observed row count before it
+    * counts the round itself. */
+  private val ObservationWait = 30.seconds
+
   /** Resolve each node that appears in `edges` to the minimum node id
     * of its connected component. Returns (`node`, `component`) with one
     * row per distinct node in the edge set.
@@ -46,13 +55,18 @@ object DedupClusters {
     // CollectMetrics): the separate count() job per round was pure
     // fixed overhead — the metric is exact (computed by the same
     // tasks that write the round), so convergence decisions are
-    // unchanged
+    // unchanged. The metric arrives through the listener bus, which
+    // may drop an event under load: wait for it a bounded time, then
+    // count the materialized round instead of hanging
     def materializeCounted(df: DataFrame, tag: String)
         : (DataFrame, String, Long) = {
       val obs = org.apache.spark.sql.Observation()
       val (m, p) = graft.core.Scratch.materializeWithPath(
         df.observe(obs, count(lit(1)).as("n")), tag)
-      (m, p, obs.get("n").asInstanceOf[Long])
+      val n =
+        try Await.result(obs.future, ObservationWait).getAs[Long]("n")
+        catch { case _: TimeoutException => m.count() }
+      (m, p, n)
     }
     var (cur, curPath, curCount) = materializeCounted(
       edges

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.VersionedTable
 import graft.functions.{EwVar, EwVarAgg}
+import graft.ops.MaintainedView.{MaintainResult, Update}
 
 /** Streaming-maintained anomaly log: the q201 composition (EW
   * mean/variance fold → prior-state z-score → |z| > k flag) kept up to
@@ -27,26 +28,17 @@ import graft.functions.{EwVar, EwVarAgg}
   * Exactness: the spec asserts stream-built log == batch twin to the
   * last bit (same IEEE fold, same lag, same comparison).
   *
-  * Honesty rules (the [[IncrementalAgg]] / [[TimeSeriesView]]
-  * discipline): late or duplicate-timestamp data → full recompute
-  * (already-emitted rows' z-scores would be lies otherwise);
-  * non-append-only base lineage → full; an α/k change → full (pinned
-  * `__alpha`/`__k`); log and state are separate commits, so the state
-  * pins the log version it describes (`__log_version`) and a crash
-  * between the two commits is healed by a full recompute at the next
-  * maintain instead of double-appending the same delta.
+  * The maintain protocol (lineage, recompute rules, the sibling state
+  * table and its `__log_version` pin) is [[MaintainedView.drive]]'s.
+  * The view's own rules: the fold declines late or duplicate-timestamp
+  * data → full recompute (already-emitted rows' z-scores would be lies
+  * otherwise); α and k are pinned (`__alpha`/`__k`).
   */
 object AnomalyView {
 
-  final case class MaintainResult(logVersion: Int, mode: String,
-      filesScanned: Int)
-
-  private val BaseVCol = "__base_version"
   private val AlphaCol = "__alpha"
   private val KCol = "__k"
   private val LogVCol = "__log_version"
-
-  def statePath(logPath: String): String = logPath + "_state"
 
   private def nullSeed = lit(null).cast(EwVarAgg.stateType)
 
@@ -97,101 +89,26 @@ object AnomalyView {
       logPath: String, keys: Seq[String], tsCol: String, valueCol: String,
       alpha: Double, k: Double): MaintainResult = {
     require(k > 0.0, s"k must be positive, got $k")
-    val stPath = statePath(logPath)
-    val vBase = VersionedTable.latestVersion(spark, basePath)
-    require(vBase > 0, s"$basePath has no committed version to score")
-    val baseFiles = VersionedTable.files(spark, basePath, Some(vBase))
+    MaintainedView.drive(spark, basePath, logPath,
+      full = base => {
+        val sc = score(Resample.series(base, keys, tsCol, valueCol)
+          .withColumn("__seed", nullSeed), keys, alpha, k)
+        Update(toLog(sc, keys, valueCol), Some(_ => deriveState(sc, keys)))
+      },
+      delta = (st, rows) => extend(st,
+        Resample.series(rows, keys, tsCol, valueCol), keys, valueCol,
+        alpha, k),
+      params = Seq(AlphaCol -> alpha, KCol -> k),
+      statePin = Some(LogVCol))
+  }
 
-    def fullCompute(mode: String): MaintainResult = {
-      val base = VersionedTable.read(spark, basePath, Some(vBase))
-      val sc = score(Resample.series(base, keys, tsCol, valueCol)
-        .withColumn("__seed", nullSeed), keys, alpha, k)
-      val logV = VersionedTable.commitOverwrite(
-        toLog(sc, keys, valueCol), logPath)
-      val state = deriveState(sc, keys)
-        .withColumn(AlphaCol, lit(alpha))
-        .withColumn(KCol, lit(k))
-        .withColumn(BaseVCol, lit(vBase))
-        .withColumn(LogVCol, lit(logV))
-      VersionedTable.commitOverwrite(state, stPath)
-      MaintainResult(logV, mode, baseFiles.size)
-    }
-
-    val vState = VersionedTable.latestVersion(spark, stPath)
-    val stateEmpty = vState == 0 ||
-      VersionedTable.files(spark, stPath, Some(vState)).isEmpty
-
-    if (baseFiles.isEmpty) {
-      // an emptied base scores to the empty log
-      val vLog = VersionedTable.latestVersion(spark, logPath)
-      val logEmpty = vLog == 0 ||
-        VersionedTable.files(spark, logPath, Some(vLog)).isEmpty
-      if (logEmpty && stateEmpty) return MaintainResult(vLog, "noop", 0)
-      val logV =
-        if (logEmpty) vLog
-        else VersionedTable.commitOverwrite(
-          VersionedTable.read(spark, logPath, Some(vLog))
-            .filter(lit(false)), logPath)
-      if (!stateEmpty) VersionedTable.commitOverwrite(
-        VersionedTable.read(spark, stPath, Some(vState))
-          .filter(lit(false)), stPath)
-      return MaintainResult(logV, "full", 0)
-    }
-    if (vState == 0) return fullCompute("init")
-    if (stateEmpty) return fullCompute("full")
-
-    val state = VersionedTable.read(spark, stPath, Some(vState))
-    if (!Seq(BaseVCol, AlphaCol, KCol, LogVCol)
-        .forall(state.columns.contains(_)))
-      return fullCompute("full")
-    // one metadata job: reflected base/log versions + pinned params
-    val head = state.select(max(col(BaseVCol)), max(col(AlphaCol)),
-      max(col(KCol)), max(col(LogVCol))).collect().head
-    if (Option(head.get(1)).forall(_ != alpha) ||
-        Option(head.get(2)).forall(_ != k))
-      return fullCompute("full")
-    // crash-window detection (see TimeSeriesView): log ahead of the
-    // state's pin means the previous maintain died between commits
-    val logNow = VersionedTable.latestVersion(spark, logPath)
-    if (Option(head.get(3)).map(_.toString.toInt).getOrElse(-1)
-        != logNow)
-      return fullCompute("full")
-    val reflected = Option(head.get(0))
-      .map(_.toString.toInt).getOrElse(0)
-    if (reflected == vBase) return MaintainResult(logNow, "noop", 0)
-    if (reflected > vBase) return fullCompute("full")
-
-    val oldFiles =
-      VersionedTable.files(spark, basePath, Some(reflected)).toSet
-    val newFiles = baseFiles.filterNot(oldFiles.contains)
-    if (!oldFiles.subsetOf(baseFiles.toSet)) return fullCompute("full")
-    if (newFiles.isEmpty) {
-      // empty append: bump the reflected version, keys-sized write
-      VersionedTable.commitOverwrite(
-        state.withColumn(BaseVCol, lit(vBase)), stPath)
-      return MaintainResult(logNow, "incremental", 0)
-    }
-
-    val rd =
-      if (VersionedTable.isEvolved(spark, basePath))
-        spark.read.option("mergeSchema", "true")
-      else spark.read
-    val delta = Resample.series(rd.parquet(newFiles: _*), keys, tsCol,
-      valueCol)
-
-    val st = state.drop(BaseVCol, AlphaCol, KCol, LogVCol)
-    // a NULL-keyed series never matches the plain-equality state joins
-    // below — its late data would slip the guard — so it takes the
-    // honest full-recompute path (the batch twin handles NULL keys as
-    // real groups through groupBy/Window)
-    if (!delta.filter(keys.map(col(_).isNull).reduce(_ || _)).isEmpty)
-      return fullCompute("full")
-    // LATE data: an observation at or before a key's recorded last one
-    // would change already-emitted z-scores — honest recompute
-    val lateJoin = delta.join(st, keys)
-      .filter(col("__t_us") <= col("last_obs_t"))
-    if (!lateJoin.isEmpty) return fullCompute("full")
-
+  /** Score the delta observations forward from the per-key (μ, σ²)
+    * state: the log rows to append and the state after them, or None
+    * when the delta is late (or NULL-keyed) and history must be
+    * rewritten. */
+  private def extend(st: DataFrame, delta: DataFrame, keys: Seq[String],
+      valueCol: String, alpha: Double, k: Double): Option[Update] = {
+    if (!Resample.strictlyAfter(delta, st, keys, "last_obs_t")) return None
     // one seed pseudo-row per delta key with prior state: restores the
     // (μ, σ²) buffer at last_obs_t, then the delta folds after it
     val seeds = st
@@ -204,8 +121,6 @@ object AnomalyView {
       delta.withColumn("__seed", nullSeed).unionByName(seeds),
       keys, alpha, k)
       .filter(col("__v").isNotNull) // drop the seed rows
-    val logV = VersionedTable.commitAppend(
-      toLog(sc, keys, valueCol), logPath)
 
     // fold state forward: delta keys take the new extremes/state,
     // untouched keys carry verbatim
@@ -223,31 +138,17 @@ object AnomalyView {
         coalesce(col("__n_t"), col("last_obs_t")).as("last_obs_t"),
         coalesce(col("__n_m"), col("mean_state")).as("mean_state"),
         coalesce(col("__n_v"), col("var_state")).as("var_state")): _*)
-      .withColumn(AlphaCol, lit(alpha))
-      .withColumn(KCol, lit(k))
-      .withColumn(BaseVCol, lit(vBase))
-      .withColumn(LogVCol, lit(logV))
-    VersionedTable.commitOverwrite(newState, stPath)
-    MaintainResult(logV, "incremental", newFiles.size)
+    Some(Update(toLog(sc, keys, valueCol), Some(_ => newState)))
   }
 
-  /** Streaming sink: exactly-once micro-batch append to the base
-    * (marker protocol) then [[maintainAnomalies]] — a replayed batch
-    * finds its marker (no second append) and the maintain no-ops at
-    * the unchanged base version; a crash between append and maintain
-    * leaves the log one version behind until the next batch's
-    * multi-version delta catch-up. */
+  /** Streaming sink: [[MaintainedView.appendThenMaintain]] over
+    * [[maintainAnomalies]]. */
   def foreachBatchMaintainAnomalies(basePath: String, logPath: String,
       keys: Seq[String], tsCol: String, valueCol: String, alpha: Double,
-      k: Double): (DataFrame, Long) => Unit = {
-    val append = VersionedTable.foreachBatchAppend(basePath)
-    (batch, batchId) => {
-      append(batch, batchId)
+      k: Double): (DataFrame, Long) => Unit =
+    MaintainedView.appendThenMaintain(basePath)(batch =>
       maintainAnomalies(batch.sparkSession, basePath, logPath, keys,
-        tsCol, valueCol, alpha, k)
-      ()
-    }
-  }
+        tsCol, valueCol, alpha, k))
 
   /** The maintained log (clean by construction). */
   def read(spark: SparkSession, logPath: String): DataFrame =

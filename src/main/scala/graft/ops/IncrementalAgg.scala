@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.VersionedTable
+import graft.ops.MaintainedView.{BaseVCol, MaintainResult, Update}
 
 /** Incrementally maintained aggregate table — the materialized-view
   * shape over a [[VersionedTable]] base: `GROUP BY keys → (n_rows,
@@ -15,19 +16,12 @@ import graft.core.VersionedTable
   * over the full corpus is the single most wasteful recurring job a
   * pipeline runs: the base grows by appends, and the aggregate's
   * change is exactly the aggregate OF THE APPENDED FILES. [[maintain]]
-  * exploits that: when the base advanced append-only (the old
-  * version's file set nests inside the new one's — commitAppend
-  * lineages, including every streaming sink in this repo), it scans
-  * ONLY the new files, partial-aggregates them (map-side combinable),
-  * and merges into the existing aggregate with one keys-sized
-  * full-outer join. Cost is proportional to the DELTA, not the table.
-  *
-  * Non-nesting lineages (overwrite / MERGE / RESTORE rewrote history)
-  * fall back to a full recompute at the new snapshot — honestly: a
-  * rewrite invalidates per-file deltas, and a "diff"-based repair
-  * would scan both snapshots anyway, which is strictly more than the
-  * recompute. The mode taken is reported in the result so callers
-  * (and specs) can see which path ran.
+  * partial-aggregates ONLY the new files (map-side combinable) and
+  * merges them into the existing aggregate with one keys-sized
+  * re-aggregation. The lineage decision (delta, recompute or no-op)
+  * is [[MaintainedView.drive]]'s; the aggregate carries its own
+  * bookkeeping columns and publishes via commitOverwrite (keys-sized
+  * rewrite — the base is never rewritten).
   *
   * Aggregate semantics: `n_rows = count(*)`,
   * `sum_val = sum(coalesce(valueCol, 0))` — the null-as-zero
@@ -36,23 +30,9 @@ import graft.core.VersionedTable
   * must be integral, making the distributed sum exact and
   * order-free (the q108/q120 lesson: double sums are
   * partition-order-dependent). Averages derive as sum/count.
-  *
-  * The aggregate table records the base version it reflects in a
-  * constant `__base_version` column (snapshot-consistent by
-  * construction: the column is part of the committed version). A
-  * concurrent base commit between maintains is picked up by the next
-  * [[maintain]]; the aggregate itself publishes via commitOverwrite
-  * (keys-sized rewrite — the base is never rewritten).
   */
 object IncrementalAgg {
 
-  /** What a [[maintain]] call did: the committed aggregate version,
-    * which path ran ("init" | "incremental" | "full" | "noop"), and
-    * how many base files were scanned to get there. */
-  final case class MaintainResult(aggVersion: Int, mode: String,
-      filesScanned: Int)
-
-  private val BaseVCol = "__base_version"
   private val EpsCol = "__qsk_eps"
 
   private def aggregate(rows: DataFrame, keys: Seq[String],
@@ -77,111 +57,6 @@ object IncrementalAgg {
         s"$c is $dt — scale doubles to a fixed-point long first")
   }
 
-  /** The lineage scaffold shared by every maintained-view flavor:
-    * decide init / noop / full-recompute / delta from the manifest
-    * file sets, read the delta files with the evolved-schema
-    * discipline, and commit the result. The flavor plugs in its own
-    * full aggregation, delta merge, input validation, and
-    * state-schema check. */
-  private def drive(spark: SparkSession, basePath: String,
-      aggPath: String,
-      computeFull: DataFrame => DataFrame,
-      mergeDelta: (DataFrame, DataFrame) => DataFrame,
-      validate: DataFrame => Unit,
-      schemaOk: Seq[String] => Boolean,
-      stateAggs: Seq[org.apache.spark.sql.Column] = Nil,
-      stateOk: org.apache.spark.sql.Row => Boolean = _ => true)
-      : MaintainResult = {
-    val vBase = VersionedTable.latestVersion(spark, basePath)
-    require(vBase > 0, s"$basePath has no committed version to aggregate")
-    val baseFiles = VersionedTable.files(spark, basePath, Some(vBase))
-
-    def fullCompute(mode: String): MaintainResult = {
-      val agg = computeFull(
-        VersionedTable.read(spark, basePath, Some(vBase)))
-        .withColumn(BaseVCol, lit(vBase))
-      val v = VersionedTable.commitOverwrite(agg, aggPath)
-      MaintainResult(v, mode, baseFiles.size)
-    }
-
-    val vAgg = VersionedTable.latestVersion(spark, aggPath)
-    val aggEmpty = vAgg == 0 ||
-      VersionedTable.files(spark, aggPath, Some(vAgg)).isEmpty
-
-    // an EMPTY base snapshot (zero files — a legal version in this
-    // format, e.g. overwrite with a 0-row frame) aggregates to the
-    // empty table: commit an empty agg version, or no-op if the agg
-    // is already empty/absent
-    if (baseFiles.isEmpty) {
-      if (aggEmpty) return MaintainResult(vAgg, "noop", 0)
-      val current = VersionedTable.read(spark, aggPath, Some(vAgg))
-      val v = VersionedTable.commitOverwrite(
-        current.filter(lit(false)), aggPath)
-      return MaintainResult(v, "full", 0)
-    }
-    validate(VersionedTable.read(spark, basePath, Some(vBase)))
-    if (vAgg == 0) return fullCompute("init")
-    // the agg exists but its latest version is empty (the base was
-    // emptied and refilled): per-file deltas are gone — rebuild
-    if (aggEmpty) return fullCompute("full")
-
-    val current = VersionedTable.read(spark, aggPath, Some(vAgg))
-    require(current.columns.contains(BaseVCol),
-      s"$aggPath is not an IncrementalAgg table (missing $BaseVCol)")
-    // a state-shape change mid-life (minMax toggled, sum vs sketch
-    // flavor switched) is a schema change, not a delta: recompute
-    if (!schemaOk(current.columns.toSeq)) return fullCompute("full")
-    // ONE metadata job reads the reflected base version and any
-    // flavor-specific state parameters (sketch epsilon, dim version)
-    // together — a second collect per maintain measurably taxes
-    // high-frequency streaming maintenance
-    val head = current
-      .select((max(col(BaseVCol)) +: stateAggs): _*).collect().head
-    // a state-PARAMETER change the columns can't show (the sketch
-    // epsilon, the joined dim version) is a schema change too:
-    // merging mixed-parameter partials would report an envelope
-    // matching neither request
-    if (!stateOk(head)) return fullCompute("full")
-    val reflected = Option(head.get(0))
-      .map(_.toString.toInt).getOrElse(0)
-    if (reflected == vBase)
-      return MaintainResult(vAgg, "noop", 0)
-    // a RESTORE (or lost history) can move the base BACKWARD: the
-    // reflected version may exceed the latest — recompute
-    if (reflected > vBase) return fullCompute("full")
-
-    val oldFiles =
-      VersionedTable.files(spark, basePath, Some(reflected)).toSet
-    val newFiles = baseFiles.filterNot(oldFiles.contains)
-    if (!oldFiles.subsetOf(baseFiles.toSet)) return fullCompute("full")
-
-    // append-only advance: aggregate ONLY the new files and merge.
-    // An append that added zero files (empty batch) is a no-op at the
-    // new base version
-    val merged =
-      if (newFiles.isEmpty) current.withColumn(BaseVCol, lit(vBase))
-      else {
-        // a multi-version catch-up delta can span a commitAppendEvolve
-        // boundary (mixed-schema files): merge footers exactly when
-        // VersionedTable.read would, so the delta path resolves the
-        // evolved column the same way the full-recompute path does
-        mergeDelta(current.drop(BaseVCol),
-          VersionedTable.readFileSubset(spark, basePath, newFiles))
-          .withColumn(BaseVCol, lit(vBase))
-      }
-    val v = VersionedTable.commitOverwrite(merged, aggPath)
-    MaintainResult(v, "incremental", newFiles.size)
-  }
-
-  /** Create or refresh the aggregate at `aggPath` to reflect the
-    * latest committed version of `basePath`. `minMax = true` adds
-    * mergeable `min_val`/`max_val` columns: under the same
-    * append-only lineage the delta path already detects, an append
-    * can only introduce a new extremum, never retire one, so
-    * `least`/`greatest` against the delta's extrema is exact; every
-    * delete/overwrite/RESTORE lineage already falls back to full
-    * recompute, which is precisely where a retired extremum would
-    * otherwise go stale. */
   /** Merge two already-aggregated frames of the (n_rows, sum_val
     * [, min_val, max_val]) shape. The state is an additive monoid, so
     * merging IS re-aggregation of the UNION: one keys-sized exchange
@@ -212,17 +87,25 @@ object IncrementalAgg {
       .filter(col("n_rows") > 0)
   }
 
+  /** Create or refresh the aggregate at `aggPath` to reflect the
+    * latest committed version of `basePath`. `minMax = true` adds
+    * mergeable `min_val`/`max_val` columns: under the same
+    * append-only lineage the delta path already detects, an append
+    * can only introduce a new extremum, never retire one, so
+    * `least`/`greatest` against the delta's extrema is exact; every
+    * delete/overwrite/RESTORE lineage already falls back to full
+    * recompute, which is precisely where a retired extremum would
+    * otherwise go stale. */
   def maintain(spark: SparkSession, basePath: String, aggPath: String,
       keys: Seq[String], valueCol: String, minMax: Boolean = false)
       : MaintainResult =
-    drive(spark, basePath, aggPath,
-      computeFull = rows => aggregate(rows, keys, valueCol, minMax),
-      mergeDelta = (current, deltaRows) =>
-        mergeAggFrames(keys, minMax)(current,
-          aggregate(deltaRows, keys, valueCol, minMax)),
-      validate = df => requireIntegral(df, valueCol),
+    MaintainedView.drive(spark, basePath, aggPath,
+      full = rows => Update(aggregate(rows, keys, valueCol, minMax)),
+      delta = (current, rows) => Some(Update(mergeAggFrames(keys,
+        minMax)(current, aggregate(rows, keys, valueCol, minMax)))),
       schemaOk = cols =>
-        cols.contains("min_val") == minMax && !cols.contains("hll"))
+        cols.contains("min_val") == minMax && !cols.contains("hll"),
+      validate = df => requireIntegral(df, valueCol))
 
   private val DimVCol = "__dim_version"
 
@@ -231,9 +114,9 @@ object IncrementalAgg {
   // never go stale; the cache lets a streaming maintainJoined against
   // a STATIC dim skip dimDeltaRepair's metadata job entirely — without
   // it the repair adds a collect per micro-batch, the exact tax
-  // drive's single-metadata-job comment warns about. Driver-side and
-  // tiny (two ints per committed view version); cleared wholesale at a
-  // size no real session reaches.
+  // MaintainedView.drive's single-metadata-job comment warns about.
+  // In-memory and tiny (two ints per committed view version); cleared
+  // wholesale at a size no real session reaches.
   private val dimPinCache =
     scala.collection.concurrent.TrieMap.empty[(String, Int), Int]
   private def cacheDimPin(aggPath: String, v: Int, vDim: Int): Unit = {
@@ -355,8 +238,9 @@ object IncrementalAgg {
     * reflects (`__dim_version`); any dim commit invalidates per-file
     * deltas (an updated dim row rewrites history for already-counted
     * fact rows) and triggers an honest full recompute, exactly like a
-    * base rewrite. Fact-side lineage rules are [[drive]]'s: append-only
-    * advances are delta-scanned, rewrites recompute.
+    * base rewrite. Fact-side lineage rules are
+    * [[MaintainedView.drive]]'s: append-only advances are delta-scanned,
+    * rewrites recompute.
     *
     * The dim join uses Spark's own strategy (AQE/broadcast threshold)
     * — no forced broadcast hint: star-schema dims usually broadcast,
@@ -369,50 +253,47 @@ object IncrementalAgg {
     require(vDim > 0, s"$dimPath has no committed version to join")
     // slowly-changing-dim fast path: if ONLY the dim moved (or moved
     // alongside an append-only base advance), repair just the groups
-    // reachable from the CHANGED dim keys, then let the normal drive
+    // reachable from the CHANGED dim keys, then let MaintainedView.drive
     // handle any base delta against the re-pinned dim version
     val repaired = dimDeltaRepair(spark, basePath, dimPath, aggPath,
       joinKey, keys, valueCol, vDim)
     val dim = VersionedTable.read(spark, dimPath, Some(vDim))
     def joined(rows: DataFrame): DataFrame =
       rows.join(dim, Seq(joinKey))
-    val r = drive(spark, basePath, aggPath,
-      computeFull = rows =>
-        aggregate(joined(rows), keys, valueCol, minMax = false)
-          .withColumn(DimVCol, lit(vDim)),
-      mergeDelta = (current, deltaRows) =>
-        mergeAggFrames(keys, minMax = false)(current.drop(DimVCol),
-          aggregate(joined(deltaRows), keys, valueCol,
-            minMax = false))
-          .withColumn(DimVCol, lit(vDim)),
-      validate = df => requireIntegral(df, valueCol),
-      schemaOk = cols => cols.contains(DimVCol) && !cols.contains("hll"),
-      stateAggs = Seq(max(col(DimVCol))),
-      stateOk = row => Option(row.get(1)).forall(_.toString.toInt == vDim))
-    // whatever drive committed (or verified, for noop) pins vDim: every
-    // write path stamps lit(vDim), and noop means stateOk matched it —
+    def agg(rows: DataFrame): DataFrame =
+      aggregate(joined(rows), keys, valueCol, minMax = false)
+    val r = MaintainedView.drive(spark, basePath, aggPath,
+      full = rows => Update(agg(rows)),
+      delta = (current, rows) =>
+        Some(Update(mergeAggFrames(keys, minMax = false)(current,
+          agg(rows)))),
+      params = Seq(DimVCol -> vDim),
+      schemaOk = cols => !cols.contains("hll"),
+      validate = df => requireIntegral(df, valueCol))
+    // whatever drive committed (or verified, for noop) pins vDim:
+    // every commit stamps it, and noop means the pinned one matched —
     // recording it here is what makes the next static-dim repair free
-    recordDimPin(spark, aggPath, r.aggVersion, vDim)
+    recordDimPin(spark, aggPath, r.version, vDim)
     repaired match {
       case Repaired(n) if r.mode == "noop" =>
-        MaintainResult(r.aggVersion, "dim_delta", n)
+        r.copy(mode = "dim_delta", filesScanned = n)
       case Repaired(n) =>
-        MaintainResult(r.aggVersion, s"dim_delta+${r.mode}",
-          r.filesScanned + n)
+        r.copy(mode = s"dim_delta+${r.mode}",
+          filesScanned = r.filesScanned + n)
       // a decline that forced the recompute is OBSERVABLE in the mode:
       // a permanently-declining repair (vacuumed dim history, schema
       // churn) shows up in monitoring instead of masquerading as a
       // routine full refresh. A decline drive absorbed some other way
       // (noop/init/incremental) cost nothing — leave those unannotated.
       case Declined(reason) if r.mode == "full" =>
-        MaintainResult(r.aggVersion, s"full:$reason", r.filesScanned)
+        r.copy(mode = s"full:$reason")
       case _ => r
     }
   }
 
   /** What [[dimDeltaRepair]] decided. `Declined` carries the reason the
     * cheap path was refused (surfaced through `MaintainResult.mode` as
-    * `full:<reason>` when the caller's drive recomputes). */
+    * `full:<reason>` when [[MaintainedView.drive]] recomputes). */
   private sealed trait RepairOutcome
   private final case class Repaired(baseFilesScanned: Int)
       extends RepairOutcome
@@ -442,7 +323,7 @@ object IncrementalAgg {
     * scan to the candidate files before a row is read (the 100 TB
     * path; `MaintainResult.filesScanned` reports the pruned count).
     *
-    * Declines (the caller's drive recomputes honestly, and the reason
+    * Declines (drive then recomputes honestly, and the reason
     * rides out in `MaintainResult.mode` as `full:<reason>`): a dim
     * SCHEMA change (retypes the view's inputs), unreadable old dim
     * version (vacuumed/erased history), a dim RESTORE moving backward,
@@ -498,7 +379,7 @@ object IncrementalAgg {
       if (vD0 == vDim) return StaticDim
       if (vD0 > vDim) return Declined("dim_restore")
       // if the base lineage is not append-only from the pinned
-      // version, drive() recomputes anyway — don't pay the repair
+      // version, drive recomputes anyway — don't pay the repair
       val bf0 = VersionedTable.files(spark, basePath, Some(vB0)).toSet
       val bfN = VersionedTable.files(spark, basePath,
         Some(VersionedTable.latestVersion(spark, basePath))).toSet
@@ -617,25 +498,20 @@ object IncrementalAgg {
           hll_sketch_agg(col(distinctCol)).as("hll"),
           graft.functions.QuantileSketch.agg(
             col(valueCol).cast("double"), relativeError).as("qsk"))
-        // the epsilon is state, not schema: pin it in the table so a
-        // mid-life parameter change recomputes instead of merging
-        // mixed-epsilon partials
-        .withColumn(EpsCol, lit(relativeError))
-    drive(spark, basePath, aggPath,
-      computeFull = sketchAgg,
-      mergeDelta = (current, deltaRows) =>
-        current.unionByName(sketchAgg(deltaRows))
+    MaintainedView.drive(spark, basePath, aggPath,
+      full = rows => Update(sketchAgg(rows)),
+      delta = (current, rows) => Some(Update(
+        current.unionByName(sketchAgg(rows))
           .groupBy(keys.map(col): _*)
           .agg(sum(col("n_rows")).as("n_rows"),
             hll_union_agg(col("hll")).as("hll"),
             graft.functions.QuantileSketch.mergeAgg(col("qsk"))
-              .as("qsk"))
-          .withColumn(EpsCol, lit(relativeError)),
-      validate = _ => (),
-      schemaOk = cols => cols.contains("hll") && cols.contains("qsk") &&
-        cols.contains(EpsCol),
-      stateAggs = Seq(max(col(EpsCol))),
-      stateOk = row => Option(row.get(1)).forall(_ == relativeError))
+              .as("qsk")))),
+      // the epsilon is state, not schema: pinned so a mid-life
+      // parameter change recomputes instead of merging mixed-epsilon
+      // partials
+      params = Seq(EpsCol -> relativeError),
+      schemaOk = cols => cols.contains("hll") && cols.contains("qsk"))
   }
 
   /** The sketch view resolved to numbers: approximate distinct count
@@ -665,70 +541,41 @@ object IncrementalAgg {
     VersionedTable.read(spark, aggPath).drop(BaseVCol, DimVCol)
 
   /** Streaming materialized view: a `foreachBatch` sink that appends
-    * each micro-batch to the base table (the [[VersionedTable
-    * .foreachBatchAppend]] marker protocol — exactly-once under
-    * replay) and then [[maintain]]s the aggregate. The composition is
-    * crash-safe WITHOUT a joint transaction because maintain is
-    * idempotent per base version: a replayed batch finds its commit
-    * marker (no second append) and maintain no-ops at the unchanged
-    * version; a crash BETWEEN append and maintain just leaves the
-    * aggregate one version behind, and the next batch's maintain
-    * aggregates every file appended since the version it reflects —
-    * the delta path is multi-version by construction. */
+    * each micro-batch to the base exactly once and then [[maintain]]s
+    * the aggregate ([[MaintainedView.appendThenMaintain]]). */
   def foreachBatchMaintain(basePath: String, aggPath: String,
       keys: Seq[String], valueCol: String, minMax: Boolean = false)
       : (DataFrame, Long) => Unit =
-    appendThenMaintain(basePath)(batch =>
+    MaintainedView.appendThenMaintain(basePath)(batch =>
       maintain(batch.sparkSession, basePath, aggPath, keys, valueCol,
         minMax))
 
-  /** The one sink shape all three streaming views share: exactly-once
-    * micro-batch append (marker protocol), then the view refresh. Any
-    * change to the append/refresh boundary discipline lives here. */
-  private def appendThenMaintain(basePath: String)(
-      refresh: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    val append = VersionedTable.foreachBatchAppend(basePath)
-    (batch, batchId) => {
-      append(batch, batchId)
-      refresh(batch)
-      ()
-    }
-  }
-
   /** Streaming enrichment rollup: [[foreachBatchMaintain]]'s sink
     * shape over [[maintainJoined]] — each micro-batch of FACT rows
-    * appends to the base exactly once (marker protocol), then the
-    * join-aggregate view refreshes against the CURRENT dim version.
-    * The same idempotence argument carries verbatim: a replayed batch
-    * finds its marker (no second append) and maintainJoined no-ops at
-    * the unchanged (base, dim) version pair; a crash between append
-    * and maintain leaves the view one version behind until the next
-    * batch's multi-version delta catch-up. The one new case is a DIM
-    * commit between batches: the pinned `__dim_version` mismatch makes
-    * the next maintain an honest full recompute (stream-static
-    * enrichment's correctness rule — reference
-    * 07_kafka notebook's static-side refresh), after which delta
-    * maintenance resumes against the new pin. */
+    * appends to the base exactly once, then the join-aggregate view
+    * refreshes against the CURRENT dim version. The one case the sink
+    * adds is a DIM commit between batches: the pinned `__dim_version`
+    * mismatch makes the next maintain a dim-delta repair or an honest
+    * full recompute (stream-static enrichment's correctness rule —
+    * reference 07_kafka notebook's static-side refresh), after which
+    * delta maintenance resumes against the new pin. */
   def foreachBatchMaintainJoined(basePath: String, dimPath: String,
       aggPath: String, joinKey: String, keys: Seq[String],
       valueCol: String): (DataFrame, Long) => Unit =
-    appendThenMaintain(basePath)(batch =>
+    MaintainedView.appendThenMaintain(basePath)(batch =>
       maintainJoined(batch.sparkSession, basePath, dimPath, aggPath,
         joinKey, keys, valueCol))
 
   /** Streaming sketch view: the same sink shape over
     * [[maintainSketch]] — per micro-batch, exactly-once fact append
-    * then a delta-files-only refresh of the HLL + GK sketch state.
-    * Identical crash/replay argument to [[foreachBatchMaintain]]
-    * (marker protocol + per-version no-op); sketch merge algebra is
-    * what makes the per-batch refresh cheap — distinct counts and
-    * percentiles update from the batch's files without revisiting
-    * the value multiset. An epsilon change mid-stream recomputes
-    * (the pinned-state check), never merges mixed-epsilon partials. */
+    * then a delta-files-only refresh of the HLL + GK sketch state;
+    * sketch merge algebra is what makes the per-batch refresh cheap.
+    * An epsilon change mid-stream recomputes (the pinned parameter),
+    * never merges mixed-epsilon partials. */
   def foreachBatchMaintainSketch(basePath: String, aggPath: String,
       keys: Seq[String], distinctCol: String, valueCol: String,
       relativeError: Double = 0.01): (DataFrame, Long) => Unit =
-    appendThenMaintain(basePath)(batch =>
+    MaintainedView.appendThenMaintain(basePath)(batch =>
       maintainSketch(batch.sparkSession, basePath, aggPath, keys,
         distinctCol, valueCol, relativeError))
 }

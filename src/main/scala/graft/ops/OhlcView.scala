@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.VersionedTable
+import graft.ops.MaintainedView.{BaseVCol, MaintainResult, Update}
 
 /** Incrementally maintained OHLC gold table: q205's downsampling bars
   * (open/high/low/close + count per (key, bucket)) kept up to date
@@ -24,25 +25,25 @@ import graft.core.VersionedTable
   * Exactness needs the same event-time discipline as its siblings:
   * the batch twin collapses duplicate timestamps by max() BEFORE
   * aggregating, and that collapse cannot be merged across the
-  * delta boundary — so any delta observation at or before a key's
-  * recorded last one (`max(close_t)` over its bars — the gold IS the
-  * state, no sidecar table and therefore no torn-write window)
-  * triggers an honest full recompute, as do non-append-only lineage,
-  * a bucket-width change (pinned `__bucket_us`), and a base RESTORE.
+  * delta boundary — so the merge declines (an honest full recompute)
+  * any delta observation at or before a key's recorded last one
+  * (`max(close_t)` over its bars — the gold IS the state, no sidecar
+  * table and therefore no torn-write window). A bucket-width change
+  * recomputes too (pinned `__bucket_us`).
   *
   * Unlike the append-only smoothing/anomaly logs, bars REWRITE (the
-  * open bar absorbs rows until its bucket closes), so each maintain
-  * publishes via commitOverwrite — a bars-sized write, the
-  * [[IncrementalAgg]] convention. One commit per maintain keeps the
-  * whole refresh atomic.
+  * open bar absorbs rows until its bucket closes), so the view carries
+  * its own bookkeeping and each maintain publishes via commitOverwrite
+  * — a bars-sized write, the [[IncrementalAgg]] convention. One commit
+  * per maintain keeps the whole refresh atomic. The maintain protocol
+  * is [[MaintainedView.drive]]'s.
   */
 object OhlcView {
 
-  final case class MaintainResult(goldVersion: Int, mode: String,
-      filesScanned: Int)
-
-  private val BaseVCol = "__base_version"
   private val BucketCol = "__bucket_us"
+  private val BarCols =
+    Seq("bucket_us", "n", "open_t", "close_t", "open", "high", "low",
+      "close")
 
   /** Partial bars over a collapsed series (keys, __t_us, __v):
     * endpoint times ride along so bars stay mergeable. */
@@ -115,104 +116,29 @@ object OhlcView {
       goldPath: String, keys: Seq[String], tsCol: String,
       valueCol: String, bucketUs: Long): MaintainResult = {
     require(bucketUs > 0, "bucketUs must be positive")
-    val vBase = VersionedTable.latestVersion(spark, basePath)
-    require(vBase > 0, s"$basePath has no committed version to bar")
-    val baseFiles = VersionedTable.files(spark, basePath, Some(vBase))
-
-    def fullCompute(mode: String): MaintainResult = {
-      val base = VersionedTable.read(spark, basePath, Some(vBase))
-      val gold = ohlcBatch(base, keys, tsCol, valueCol, bucketUs)
-        .withColumn(BucketCol, lit(bucketUs))
-        .withColumn(BaseVCol, lit(vBase))
-      val v = VersionedTable.commitOverwrite(gold, goldPath)
-      MaintainResult(v, mode, baseFiles.size)
-    }
-
-    val vGold = VersionedTable.latestVersion(spark, goldPath)
-    val goldEmpty = vGold == 0 ||
-      VersionedTable.files(spark, goldPath, Some(vGold)).isEmpty
-
-    if (baseFiles.isEmpty) {
-      if (goldEmpty) return MaintainResult(vGold, "noop", 0)
-      val v = VersionedTable.commitOverwrite(
-        VersionedTable.read(spark, goldPath, Some(vGold))
-          .filter(lit(false)), goldPath)
-      return MaintainResult(v, "full", 0)
-    }
-    if (vGold == 0) return fullCompute("init")
-    if (goldEmpty) return fullCompute("full")
-
-    val current = VersionedTable.read(spark, goldPath, Some(vGold))
-    if (!Seq(BaseVCol, BucketCol, "bucket_us", "n", "open_t", "close_t",
-        "open", "high", "low", "close")
-        .forall(current.columns.contains(_)))
-      return fullCompute("full")
-    // one metadata job: reflected base version + pinned bucket width
-    val head = current
-      .select(max(col(BaseVCol)), max(col(BucketCol))).collect().head
-    if (Option(head.get(1)).forall(_ != bucketUs))
-      return fullCompute("full")
-    val reflected = Option(head.get(0))
-      .map(_.toString.toInt).getOrElse(0)
-    if (reflected == vBase) return MaintainResult(vGold, "noop", 0)
-    if (reflected > vBase) return fullCompute("full")
-
-    val oldFiles =
-      VersionedTable.files(spark, basePath, Some(reflected)).toSet
-    val newFiles = baseFiles.filterNot(oldFiles.contains)
-    if (!oldFiles.subsetOf(baseFiles.toSet)) return fullCompute("full")
-    val bare = current.drop(BaseVCol, BucketCol)
-    if (newFiles.isEmpty) {
-      val v = VersionedTable.commitOverwrite(
-        bare.withColumn(BucketCol, lit(bucketUs))
-          .withColumn(BaseVCol, lit(vBase)), goldPath)
-      return MaintainResult(v, "incremental", 0)
-    }
-
-    val rd =
-      if (VersionedTable.isEvolved(spark, basePath))
-        spark.read.option("mergeSchema", "true")
-      else spark.read
-    val delta = Resample.series(rd.parquet(newFiles: _*), keys, tsCol,
-      valueCol)
-
-    // a NULL-keyed series never matches the plain-equality guard join
-    // below — its late data would slip through — so it takes the
-    // honest full-recompute path (the batch twin handles NULL keys as
-    // real groups; mergeBars itself is already null-safe)
-    if (!delta.filter(keys.map(col(_).isNull).reduce(_ || _)).isEmpty)
-      return fullCompute("full")
-    // LATE or duplicate-timestamp data: the max()-collapse cannot be
-    // merged across the delta boundary — honest recompute. The gold
-    // IS the state: a key's last absorbed observation is max(close_t)
-    val lastT = bare.groupBy(keys.map(col): _*)
-      .agg(max(col("close_t")).as("__last_t"))
-    val lateJoin = delta.join(lastT, keys)
-      .filter(col("__t_us") <= col("__last_t"))
-    if (!lateJoin.isEmpty) return fullCompute("full")
-
-    val merged = mergeBars(keys)(bare, bars(delta, keys, bucketUs))
-      .withColumn(BucketCol, lit(bucketUs))
-      .withColumn(BaseVCol, lit(vBase))
-    val v = VersionedTable.commitOverwrite(merged, goldPath)
-    MaintainResult(v, "incremental", newFiles.size)
+    MaintainedView.drive(spark, basePath, goldPath,
+      full = rows => Update(ohlcBatch(rows, keys, tsCol, valueCol,
+        bucketUs)),
+      delta = (current, rows) => {
+        val obs = Resample.series(rows, keys, tsCol, valueCol)
+        val lastT = current.groupBy(keys.map(col): _*)
+          .agg(max(col("close_t")).as("__last_t"))
+        if (!Resample.strictlyAfter(obs, lastT, keys, "__last_t")) None
+        else Some(Update(
+          mergeBars(keys)(current, bars(obs, keys, bucketUs))))
+      },
+      params = Seq(BucketCol -> bucketUs),
+      schemaOk = cols => BarCols.forall(cols.contains))
   }
 
-  /** Streaming sink: exactly-once micro-batch append to the base
-    * (marker protocol) then [[maintainOhlc]] — a replayed batch finds
-    * its marker and the maintain no-ops at the unchanged base
-    * version. */
+  /** Streaming sink: [[MaintainedView.appendThenMaintain]] over
+    * [[maintainOhlc]]. */
   def foreachBatchMaintainOhlc(basePath: String, goldPath: String,
       keys: Seq[String], tsCol: String, valueCol: String,
-      bucketUs: Long): (DataFrame, Long) => Unit = {
-    val append = VersionedTable.foreachBatchAppend(basePath)
-    (batch, batchId) => {
-      append(batch, batchId)
+      bucketUs: Long): (DataFrame, Long) => Unit =
+    MaintainedView.appendThenMaintain(basePath)(batch =>
       maintainOhlc(batch.sparkSession, basePath, goldPath, keys, tsCol,
-        valueCol, bucketUs)
-      ()
-    }
-  }
+        valueCol, bucketUs))
 
   /** The maintained bars without bookkeeping columns. */
   def read(spark: SparkSession, goldPath: String): DataFrame =

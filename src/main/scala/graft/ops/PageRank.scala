@@ -148,10 +148,4 @@ object PageRank {
     ranks.select(col("node"), col("rank_s"),
       dround(col("rank_s").cast("double") / Scale, 6).as("rank"))
   }
-
-  /** Convenience: unweighted edges (every edge weight 1). */
-  def runUnweighted(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, damping: Double = 0.85): DataFrame =
-    run(edges.withColumn("__w", lit(1L)), srcCol, dstCol, "__w",
-      iters, damping)
 }

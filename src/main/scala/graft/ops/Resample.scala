@@ -81,6 +81,19 @@ object Resample {
       .groupBy((keyCols :+ "__t_us").map(col): _*)
       .agg(max(col("__v")).as("__v"))
 
+  /** Whether every observation of `delta` (a [[series]]) lies strictly
+    * after its key's last one in `last` (`keyCols :+ lastCol`) — what
+    * the maintained time-series views need to extend a key instead of
+    * rewriting its emitted history. A NULL-keyed observation fails it
+    * too: the plain-equality state joins of those views never match
+    * it, so its late data would slip through. One Spark action. */
+  private[graft] def strictlyAfter(delta: DataFrame, last: DataFrame,
+      keyCols: Seq[String], lastCol: String): Boolean =
+    delta.join(last, keyCols, "left")
+      .filter(keyCols.map(col(_).isNull).reduce(_ || _) ||
+        col("__t_us") <= col(lastCol))
+      .isEmpty
+
   /** LOCF resample: `keyCols :+ g_us :+ valueCol` at every aligned grid
     * point of each key's span, carrying the latest observation at-or-
     * before the grid point. Grid points never precede the first

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.VersionedTable
+import graft.ops.MaintainedView.{MaintainResult, Update}
 
 /** Streaming-maintained time-series gold table: LOCF grid resample
   * ([[Resample.locf]]) followed by EWMA smoothing
@@ -32,42 +33,22 @@ import graft.core.VersionedTable
   * grid point's predecessor visible without scanning history. The spec
   * asserts stream-built gold == batch-twin gold to the last bit.
   *
-  * Honesty rules (the [[IncrementalAgg]] discipline):
-  *  - LATE or duplicate-timestamp data (any delta observation at or
-  *    before a key's recorded last observation) rewrites history for
-  *    already-emitted grid rows → full recompute, reported as such.
-  *    Event-time-ordered feeds (the common sensor case) never trip it.
-  *  - Non-append-only base lineage (overwrite/MERGE/RESTORE) → full
-  *    recompute, exactly like [[IncrementalAgg.maintain]].
-  *  - A smoothing-parameter or step change mid-life is a state-schema
-  *    change → full recompute (pinned `__alpha`/`__step_us`).
-  *  - Gold and state are two separate commits; the state pins the gold
-  *    version it describes (`__gold_version`), so a crash BETWEEN the
-  *    gold append and the state overwrite is detected at the next
-  *    maintain (gold ahead of the pin) and healed by a full recompute
-  *    — re-folding the same delta would append duplicate grid rows.
-  *
-  * State lives in a sibling VersionedTable at `goldPath + "_state"`:
-  * one row per key — first/last observation, last grid point, the EWMA
-  * value there, and the reflected base version — overwritten per
-  * maintain (keys-sized, like the aggregate views).
+  * The maintain protocol (lineage, recompute rules, the sibling state
+  * table and its `__gold_version` pin) is [[MaintainedView.drive]]'s.
+  * The view's own rules: LATE or duplicate-timestamp data (any delta
+  * observation at or before a key's recorded last observation)
+  * rewrites history for already-emitted grid rows, so the fold
+  * declines it → full recompute, reported as such (event-time-ordered
+  * feeds, the common sensor case, never trip it); a smoothing-parameter
+  * or step change is pinned (`__alpha`/`__step_us`). The state holds
+  * one row per key — first/last observation, last grid point and the
+  * EWMA value there — overwritten per maintain (keys-sized).
   */
 object TimeSeriesView {
 
-  final case class MaintainResult(goldVersion: Int, mode: String,
-      filesScanned: Int)
-
-  private val BaseVCol = "__base_version"
   private val AlphaCol = "__alpha"
   private val StepCol = "__step_us"
-  // the GOLD version this state row describes: gold and state are two
-  // separate commits, so a crash between them leaves gold one version
-  // AHEAD of the state's pin — detected as a metadata-only check at
-  // the next maintain and healed by a full recompute (without it, the
-  // recovery would re-fold the same delta and APPEND duplicate rows)
   private val GoldVCol = "__gold_version"
-
-  def statePath(goldPath: String): String = goldPath + "_state"
 
   /** The batch twin (what the maintained gold table must equal): LOCF
     * resample onto the aligned grid, then EWMA over each key's grid
@@ -101,105 +82,26 @@ object TimeSeriesView {
       goldPath: String, keys: Seq[String], tsCol: String,
       valueCol: String, stepUs: Long, alpha: Double): MaintainResult = {
     require(stepUs > 0, "stepUs must be positive")
-    val stPath = statePath(goldPath)
-    val vBase = VersionedTable.latestVersion(spark, basePath)
-    require(vBase > 0, s"$basePath has no committed version to resample")
-    val baseFiles = VersionedTable.files(spark, basePath, Some(vBase))
+    MaintainedView.drive(spark, basePath, goldPath,
+      full = base => {
+        val obs = Resample.series(base, keys, tsCol, valueCol)
+        Update(smoothedBatch(base, keys, tsCol, valueCol, stepUs, alpha),
+          Some(goldV => deriveState(obs,
+            VersionedTable.read(spark, goldPath, Some(goldV)), keys)))
+      },
+      delta = (st, rows) => extend(st,
+        Resample.series(rows, keys, tsCol, valueCol), keys, valueCol,
+        stepUs, alpha),
+      params = Seq(AlphaCol -> alpha, StepCol -> stepUs),
+      statePin = Some(GoldVCol))
+  }
 
-    def fullCompute(mode: String): MaintainResult = {
-      val base = VersionedTable.read(spark, basePath, Some(vBase))
-      val gold = smoothedBatch(base, keys, tsCol, valueCol, stepUs, alpha)
-      val goldV = VersionedTable.commitOverwrite(gold, goldPath)
-      val obs = Resample.series(base, keys, tsCol, valueCol)
-      val state = deriveState(obs,
-        VersionedTable.read(spark, goldPath, Some(goldV)), keys)
-        .withColumn(AlphaCol, lit(alpha))
-        .withColumn(StepCol, lit(stepUs))
-        .withColumn(BaseVCol, lit(vBase))
-        .withColumn(GoldVCol, lit(goldV))
-      VersionedTable.commitOverwrite(state, stPath)
-      MaintainResult(goldV, mode, baseFiles.size)
-    }
-
-    val vState = VersionedTable.latestVersion(spark, stPath)
-    val stateEmpty = vState == 0 ||
-      VersionedTable.files(spark, stPath, Some(vState)).isEmpty
-
-    if (baseFiles.isEmpty) {
-      // an emptied base resamples to the empty gold table
-      val vGold = VersionedTable.latestVersion(spark, goldPath)
-      val goldEmpty = vGold == 0 ||
-        VersionedTable.files(spark, goldPath, Some(vGold)).isEmpty
-      if (goldEmpty && stateEmpty)
-        return MaintainResult(vGold, "noop", 0)
-      val goldV =
-        if (goldEmpty) vGold
-        else VersionedTable.commitOverwrite(
-          VersionedTable.read(spark, goldPath, Some(vGold))
-            .filter(lit(false)), goldPath)
-      if (!stateEmpty) VersionedTable.commitOverwrite(
-        VersionedTable.read(spark, stPath, Some(vState))
-          .filter(lit(false)), stPath)
-      return MaintainResult(goldV, "full", 0)
-    }
-    if (vState == 0) return fullCompute("init")
-    if (stateEmpty) return fullCompute("full")
-
-    val state = VersionedTable.read(spark, stPath, Some(vState))
-    if (!Seq(BaseVCol, AlphaCol, StepCol, GoldVCol)
-        .forall(state.columns.contains(_)))
-      return fullCompute("full")
-    // one metadata job: reflected base/gold versions + pinned params
-    val head = state.select(max(col(BaseVCol)), max(col(AlphaCol)),
-      max(col(StepCol)), max(col(GoldVCol))).collect().head
-    if (Option(head.get(1)).forall(_ != alpha) ||
-        Option(head.get(2)).forall(_ != stepUs))
-      return fullCompute("full")
-    // crash-window detection: gold and state are SEPARATE commits, so
-    // a crash after the gold append but before the state overwrite
-    // leaves gold ahead of the state's pin; re-folding the same delta
-    // would append duplicates — recompute instead (overwrite heals)
-    val goldNow = VersionedTable.latestVersion(spark, goldPath)
-    if (Option(head.get(3)).map(_.toString.toInt).getOrElse(-1)
-        != goldNow)
-      return fullCompute("full")
-    val reflected = Option(head.get(0))
-      .map(_.toString.toInt).getOrElse(0)
-    if (reflected == vBase) return MaintainResult(goldNow, "noop", 0)
-    if (reflected > vBase) return fullCompute("full")
-
-    val oldFiles =
-      VersionedTable.files(spark, basePath, Some(reflected)).toSet
-    val newFiles = baseFiles.filterNot(oldFiles.contains)
-    if (!oldFiles.subsetOf(baseFiles.toSet)) return fullCompute("full")
-    if (newFiles.isEmpty) {
-      // empty append: bump the reflected version, keys-sized write
-      VersionedTable.commitOverwrite(
-        state.withColumn(BaseVCol, lit(vBase)), stPath)
-      return MaintainResult(
-        VersionedTable.latestVersion(spark, goldPath), "incremental", 0)
-    }
-
-    val rd =
-      if (VersionedTable.isEvolved(spark, basePath))
-        spark.read.option("mergeSchema", "true")
-      else spark.read
-    val delta = Resample.series(rd.parquet(newFiles: _*), keys, tsCol,
-      valueCol)
-
-    val st = state.drop(BaseVCol, AlphaCol, StepCol, GoldVCol)
-    // a NULL-keyed series never matches the plain-equality state joins
-    // below — its late data would slip the guard and its state row
-    // would never be found — so it takes the honest full-recompute
-    // path (the batch twin handles NULL keys as real groups)
-    if (!delta.filter(keys.map(col(_).isNull).reduce(_ || _)).isEmpty)
-      return fullCompute("full")
-    // LATE data: any delta observation at or before a key's recorded
-    // last observation rewrites emitted history — honest recompute
-    val lateJoin = delta.join(st, keys)
-      .filter(col("__t_us") <= col("last_obs_t"))
-    if (!lateJoin.isEmpty) return fullCompute("full")
-
+  /** Fold the delta observations forward from the per-key state: the
+    * new grid rows to append and the state after them, or None when
+    * the delta is late (or NULL-keyed) and history must be rewritten. */
+  private def extend(st: DataFrame, delta: DataFrame, keys: Seq[String],
+      valueCol: String, stepUs: Long, alpha: Double): Option[Update] = {
+    if (!Resample.strictlyAfter(delta, st, keys, "last_obs_t")) return None
     // per-key delta stats, joined to (possibly absent) prior state
     val dstats = delta.groupBy(keys.map(col): _*).agg(
       min(col("__t_us")).as("__dmin"),
@@ -257,7 +159,6 @@ object TimeSeriesView {
         graft.functions.Ewma.ewma(col("__fold"), alpha).over(w))
       .filter(col(valueCol).isNotNull)
       .drop("__fold")
-    val goldV = VersionedTable.commitAppend(newGold, goldPath)
 
     // fold state forward: delta keys take the batch's extremes and the
     // last new grid point's EWMA; untouched keys carry verbatim
@@ -278,33 +179,17 @@ object TimeSeriesView {
         coalesce(col("__dlastv"), col("last_obs_v")).as("last_obs_v"),
         coalesce(col("__ngrid"), col("last_grid_t")).as("last_grid_t"),
         coalesce(col("__newma"), col("ewma_state")).as("ewma_state")): _*)
-      .withColumn(AlphaCol, lit(alpha))
-      .withColumn(StepCol, lit(stepUs))
-      .withColumn(BaseVCol, lit(vBase))
-      .withColumn(GoldVCol, lit(goldV))
-    VersionedTable.commitOverwrite(newState, stPath)
-    MaintainResult(goldV, "incremental", newFiles.size)
+    Some(Update(newGold, Some(_ => newState)))
   }
 
-  /** Streaming sink: exactly-once micro-batch append to the base
-    * (marker protocol) then [[maintainSmoothed]] — the
-    * [[IncrementalAgg.foreachBatchMaintain]] composition for the
-    * time-series family, with the identical crash/replay argument: a
-    * replayed batch finds its marker (no second append) and the
-    * maintain no-ops at the unchanged base version; a crash between
-    * append and maintain leaves the gold one version behind until the
-    * next batch's multi-version delta catch-up. */
+  /** Streaming sink: [[MaintainedView.appendThenMaintain]] over
+    * [[maintainSmoothed]]. */
   def foreachBatchMaintainSmoothed(basePath: String, goldPath: String,
       keys: Seq[String], tsCol: String, valueCol: String, stepUs: Long,
-      alpha: Double): (DataFrame, Long) => Unit = {
-    val append = VersionedTable.foreachBatchAppend(basePath)
-    (batch, batchId) => {
-      append(batch, batchId)
+      alpha: Double): (DataFrame, Long) => Unit =
+    MaintainedView.appendThenMaintain(basePath)(batch =>
       maintainSmoothed(batch.sparkSession, basePath, goldPath, keys,
-        tsCol, valueCol, stepUs, alpha)
-      ()
-    }
-  }
+        tsCol, valueCol, stepUs, alpha))
 
   /** The maintained gold table (no bookkeeping columns to drop — gold
     * is clean by construction). */

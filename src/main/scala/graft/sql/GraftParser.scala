@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types._
 
 import graft.core.VersionedTable
+import graft.ops.MaintainedView.MaintainResult
 
 /** SQL statements for the engine's table-maintenance verbs — the
   * missing half of the SQL surface ([[GraftExtensions]] already
@@ -222,6 +223,16 @@ object GraftSqlParser {
 
   private[sql] def attr(name: String, dt: DataType): AttributeReference =
     AttributeReference(name, dt, nullable = true)()
+
+  /** The `(<pathCol>, mode, version, files_scanned)` columns every
+    * `REFRESH … VIEW` command leads its output with. */
+  private[sql] def maintainAttrs(pathCol: String): Seq[Attribute] = Seq(
+    attr(pathCol, StringType), attr("mode", StringType),
+    attr("version", IntegerType), attr("files_scanned", IntegerType))
+
+  /** The values of [[maintainAttrs]] for one maintain of `path`. */
+  private[sql] def maintainValues(path: String, r: MaintainResult)
+      : Seq[Any] = Seq(path, r.mode, r.version, r.filesScanned)
 }
 
 /** `OPTIMIZE '<t>'` = bin-pack compaction; with `ZORDER BY` = Morton
@@ -347,11 +358,8 @@ case class ReplaceWhereCommand(path: String, predicateSql: String,
 case class RefreshViewCommand(aggPath: String, basePath: String,
     dim: Option[(String, String)], keys: Seq[String], valueCol: String,
     minMax: Boolean) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    GraftSqlParser.attr("agg_path", StringType),
-    GraftSqlParser.attr("mode", StringType),
-    GraftSqlParser.attr("version", IntegerType),
-    GraftSqlParser.attr("files_scanned", IntegerType))
+  override val output: Seq[Attribute] =
+    GraftSqlParser.maintainAttrs("agg_path")
   override def run(spark: SparkSession): Seq[Row] = {
     val r = dim match {
       case Some((dimPath, joinKey)) =>
@@ -364,7 +372,7 @@ case class RefreshViewCommand(aggPath: String, basePath: String,
         graft.ops.IncrementalAgg.maintain(spark, basePath, aggPath,
           keys, valueCol, minMax)
     }
-    Seq(Row(aggPath, r.mode, r.aggVersion, r.filesScanned))
+    Seq(Row.fromSeq(GraftSqlParser.maintainValues(aggPath, r)))
   }
 }
 
@@ -377,15 +385,12 @@ case class RefreshViewCommand(aggPath: String, basePath: String,
 case class RefreshSmoothedViewCommand(goldPath: String,
     basePath: String, keys: Seq[String], tsCol: String, valueCol: String,
     stepUs: Long, alpha: Double) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    GraftSqlParser.attr("gold_path", StringType),
-    GraftSqlParser.attr("mode", StringType),
-    GraftSqlParser.attr("version", IntegerType),
-    GraftSqlParser.attr("files_scanned", IntegerType))
+  override val output: Seq[Attribute] =
+    GraftSqlParser.maintainAttrs("gold_path")
   override def run(spark: SparkSession): Seq[Row] = {
     val r = graft.ops.TimeSeriesView.maintainSmoothed(spark, basePath,
       goldPath, keys, tsCol, valueCol, stepUs, alpha)
-    Seq(Row(goldPath, r.mode, r.goldVersion, r.filesScanned))
+    Seq(Row.fromSeq(GraftSqlParser.maintainValues(goldPath, r)))
   }
 }
 
@@ -398,15 +403,12 @@ case class RefreshSmoothedViewCommand(goldPath: String,
 case class RefreshAnomalyViewCommand(logPath: String,
     basePath: String, keys: Seq[String], tsCol: String, valueCol: String,
     alpha: Double, k: Double) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    GraftSqlParser.attr("log_path", StringType),
-    GraftSqlParser.attr("mode", StringType),
-    GraftSqlParser.attr("version", IntegerType),
-    GraftSqlParser.attr("files_scanned", IntegerType))
+  override val output: Seq[Attribute] =
+    GraftSqlParser.maintainAttrs("log_path")
   override def run(spark: SparkSession): Seq[Row] = {
     val r = graft.ops.AnomalyView.maintainAnomalies(spark, basePath,
       logPath, keys, tsCol, valueCol, alpha, k)
-    Seq(Row(logPath, r.mode, r.logVersion, r.filesScanned))
+    Seq(Row.fromSeq(GraftSqlParser.maintainValues(logPath, r)))
   }
 }
 
@@ -418,15 +420,12 @@ case class RefreshAnomalyViewCommand(logPath: String,
 case class RefreshOhlcViewCommand(goldPath: String, basePath: String,
     keys: Seq[String], tsCol: String, valueCol: String, bucketUs: Long)
     extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    GraftSqlParser.attr("gold_path", StringType),
-    GraftSqlParser.attr("mode", StringType),
-    GraftSqlParser.attr("version", IntegerType),
-    GraftSqlParser.attr("files_scanned", IntegerType))
+  override val output: Seq[Attribute] =
+    GraftSqlParser.maintainAttrs("gold_path")
   override def run(spark: SparkSession): Seq[Row] = {
     val r = graft.ops.OhlcView.maintainOhlc(spark, basePath, goldPath,
       keys, tsCol, valueCol, bucketUs)
-    Seq(Row(goldPath, r.mode, r.goldVersion, r.filesScanned))
+    Seq(Row.fromSeq(GraftSqlParser.maintainValues(goldPath, r)))
   }
 }
 
@@ -440,11 +439,8 @@ case class RefreshOhlcViewCommand(goldPath: String, basePath: String,
   * to the one-shot rocAuc). `auc` is null while a class is absent. */
 case class RefreshAucViewCommand(aggPath: String, basePath: String,
     scoreCol: String, labelCol: String) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    GraftSqlParser.attr("agg_path", StringType),
-    GraftSqlParser.attr("mode", StringType),
-    GraftSqlParser.attr("version", IntegerType),
-    GraftSqlParser.attr("files_scanned", IntegerType),
+  override val output: Seq[Attribute] =
+    GraftSqlParser.maintainAttrs("agg_path") ++ Seq(
     GraftSqlParser.attr("auc", DoubleType),
     GraftSqlParser.attr("n_pos", LongType),
     GraftSqlParser.attr("n_neg", LongType))
@@ -461,8 +457,8 @@ case class RefreshAucViewCommand(aggPath: String, basePath: String,
     // the honest null-auc/0-count row instead
     def cnt(c: String): Long =
       Option(v.getAs[Any](c)).fold(0L)(_.asInstanceOf[Long])
-    Seq(Row(aggPath, r.mode, r.aggVersion, r.filesScanned,
-      v.getAs[Any]("auc"), cnt("n_pos"), cnt("n_neg")))
+    Seq(Row.fromSeq(GraftSqlParser.maintainValues(aggPath, r) ++
+      Seq(v.getAs[Any]("auc"), cnt("n_pos"), cnt("n_neg"))))
   }
 }
 
@@ -484,11 +480,8 @@ case class RefreshAucViewCommand(aggPath: String, basePath: String,
 case class RefreshKsViewCommand(aggPath: String, basePath: String,
     valueCol: String, refPath: String, maxSupport: Int = 1 << 20,
     coarsenTo: Int = 0) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    GraftSqlParser.attr("agg_path", StringType),
-    GraftSqlParser.attr("mode", StringType),
-    GraftSqlParser.attr("version", IntegerType),
-    GraftSqlParser.attr("files_scanned", IntegerType),
+  override val output: Seq[Attribute] =
+    GraftSqlParser.maintainAttrs("agg_path") ++ Seq(
     GraftSqlParser.attr("n_ref", LongType),
     GraftSqlParser.attr("n_cur", LongType),
     GraftSqlParser.attr("ks_at", LongType),
@@ -510,12 +503,12 @@ case class RefreshKsViewCommand(aggPath: String, basePath: String,
       case Some(v) =>
         def cnt(c: String): Long =
           Option(v.getAs[Any](c)).fold(0L)(_.asInstanceOf[Long])
-        Seq(Row(aggPath, r.mode, r.aggVersion, r.filesScanned,
-          cnt("n_ref"), cnt("n_cur"), v.getAs[Any]("ks_at"),
-          v.getAs[Any]("ks"), v.getAs[Any]("ks_hi")))
+        Seq(Row.fromSeq(GraftSqlParser.maintainValues(aggPath, r) ++
+          Seq(cnt("n_ref"), cnt("n_cur"), v.getAs[Any]("ks_at"),
+            v.getAs[Any]("ks"), v.getAs[Any]("ks_hi"))))
       case None =>
-        Seq(Row(aggPath, r.mode, r.aggVersion, r.filesScanned,
-          0L, 0L, null, null, null))
+        Seq(Row.fromSeq(GraftSqlParser.maintainValues(aggPath, r) ++
+          Seq(0L, 0L, null, null, null)))
     }
   }
 }

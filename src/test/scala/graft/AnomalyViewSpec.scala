@@ -199,4 +199,54 @@ class AnomalyViewSpec extends SparkTestBase {
     assert(VersionedTable.latestVersion(spark, log) === vLog,
       "replayed batch must not commit a new log version")
   }
+
+  test("an emptied base commits an empty view, then noops") {
+    val root = tmp()
+    val (base, log) = (s"$root/base", s"$root/log")
+    VersionedTable.commitAppend(
+      rows(("a", 1L, 10.0), ("a", 2L, 12.0)), base)
+    assert(maintain(base, log).mode === "init")
+    commitNoFiles(base)
+    assert(VersionedTable.files(spark, base).isEmpty)
+    val r = maintain(base, log)
+    assert(r.mode === "full" && r.filesScanned === 0)
+    assert(r.version === VersionedTable.latestVersion(spark, log))
+    assert(VersionedTable.files(spark, log).isEmpty ||
+      AnomalyView.read(spark, log).isEmpty)
+    val again = maintain(base, log)
+    assert(again.mode === "noop" && again.version === r.version)
+  }
+
+  test("a NULL-keyed series recomputes honestly on the delta path") {
+    val root = tmp()
+    val (base, log) = (s"$root/base", s"$root/log")
+    def nrows(xs: (Option[String], Long, Double)*): DataFrame =
+      xs.map { case (k, t, v) => (k.orNull, ts(t * 1000000L), v) }
+        .toDF("k", "t", "v")
+    VersionedTable.commitAppend(
+      nrows((Some("a"), 1L, 5.0), (None, 2L, 3.0)), base)
+    maintain(base, log)
+    assert(logSet(log) === twinSet(base))
+    // a strictly-later delta for the NULL key: the plain-equality
+    // state joins can't see it — the view must recompute, not fold
+    VersionedTable.commitAppend(nrows((None, 5L, 7.0)), base)
+    val r = maintain(base, log)
+    assert(r.mode === "full",
+      "NULL-keyed delta must take the honest recompute path")
+    assert(logSet(log) === twinSet(base))
+  }
+
+  test("an incremental maintain runs a pinned number of jobs") {
+    val root = tmp()
+    val (base, log) = (s"$root/base", s"$root/log")
+    VersionedTable.commitAppend(
+      rows(("a", 1L, 10.0), ("b", 1L, 5.0)), base)
+    maintain(base, log)
+    VersionedTable.commitAppend(
+      rows(("a", 2L, 12.0), ("b", 2L, 5.5)), base)
+    var mode = ""
+    val jobs = counted { mode = maintain(base, log).mode }.jobs
+    assert(mode === "incremental")
+    assert(jobs === 17)
+  }
 }

@@ -831,4 +831,50 @@ class IncrementalAggSpec extends SparkTestBase {
     assert(exchanges == 1,
       s"merge should plan exactly one exchange, got $exchanges:\n$plan")
   }
+
+  test("an emptied base commits an empty view, then noops") {
+    val root = tmp()
+    val (base, agg) = (s"$root/base", s"$root/agg")
+    VersionedTable.commitAppend(
+      Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), base)
+    assert(IncrementalAgg.maintain(spark, base, agg, Seq("k"), "v")
+      .mode === "init")
+    commitNoFiles(base)
+    assert(VersionedTable.files(spark, base).isEmpty)
+    val r = IncrementalAgg.maintain(spark, base, agg, Seq("k"), "v")
+    assert(r.mode === "full" && r.filesScanned === 0)
+    assert(r.version === VersionedTable.latestVersion(spark, agg))
+    assert(VersionedTable.files(spark, agg).isEmpty ||
+      IncrementalAgg.read(spark, agg).isEmpty)
+    val again = IncrementalAgg.maintain(spark, base, agg, Seq("k"), "v")
+    assert(again.mode === "noop" && again.version === r.version)
+  }
+
+  test("a target without __base_version fails loudly, untouched") {
+    val root = tmp()
+    val (base, agg) = (s"$root/base", s"$root/agg")
+    VersionedTable.commitAppend(Seq(("a", 1L)).toDF("k", "v"), base)
+    // some other table already lives at the view's path
+    VersionedTable.commitAppend(Seq(("x", 9L)).toDF("k", "n_rows"), agg)
+    val e = intercept[IllegalArgumentException] {
+      IncrementalAgg.maintain(spark, base, agg, Seq("k"), "v")
+    }
+    assert(e.getMessage.contains("__base_version"))
+    assert(VersionedTable.latestVersion(spark, agg) === 1)
+  }
+
+  test("an incremental maintain runs a pinned number of jobs") {
+    val root = tmp()
+    val (base, agg) = (s"$root/base", s"$root/agg")
+    VersionedTable.commitAppend(
+      Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), base)
+    IncrementalAgg.maintain(spark, base, agg, Seq("k"), "v")
+    VersionedTable.commitAppend(Seq(("a", 3L)).toDF("k", "v"), base)
+    var mode = ""
+    val jobs = counted {
+      mode = IncrementalAgg.maintain(spark, base, agg, Seq("k"), "v").mode
+    }.jobs
+    assert(mode === "incremental")
+    assert(jobs === 5)
+  }
 }

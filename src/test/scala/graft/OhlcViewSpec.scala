@@ -181,4 +181,46 @@ class OhlcViewSpec extends SparkTestBase {
     assert(VersionedTable.latestVersion(spark, gold) === vGold,
       "replayed batch must not commit a new gold version")
   }
+
+  test("an emptied base commits an empty view, then noops") {
+    val root = tmp()
+    val (base, gold) = (s"$root/base", s"$root/gold")
+    VersionedTable.commitAppend(
+      rows(("a", 1L, 5.0), ("b", 2L, 3.0)), base)
+    assert(maintain(base, gold).mode === "init")
+    commitNoFiles(base)
+    assert(VersionedTable.files(spark, base).isEmpty)
+    val r = maintain(base, gold)
+    assert(r.mode === "full" && r.filesScanned === 0)
+    assert(r.version === VersionedTable.latestVersion(spark, gold))
+    assert(VersionedTable.files(spark, gold).isEmpty ||
+      OhlcView.read(spark, gold).isEmpty)
+    val again = maintain(base, gold)
+    assert(again.mode === "noop" && again.version === r.version)
+  }
+
+  test("a target without __base_version fails loudly, untouched") {
+    val root = tmp()
+    val (base, gold) = (s"$root/base", s"$root/gold")
+    VersionedTable.commitAppend(rows(("a", 1L, 5.0)), base)
+    // some other table already lives at the view's path
+    VersionedTable.commitAppend(rows(("x", 9L, 1.0)), gold)
+    val e = intercept[IllegalArgumentException](maintain(base, gold))
+    assert(e.getMessage.contains("__base_version"))
+    assert(VersionedTable.latestVersion(spark, gold) === 1)
+  }
+
+  test("an incremental maintain runs a pinned number of jobs") {
+    val root = tmp()
+    val (base, gold) = (s"$root/base", s"$root/gold")
+    VersionedTable.commitAppend(
+      rows(("a", 1L, 5.0), ("b", 2L, 3.0)), base)
+    maintain(base, gold)
+    VersionedTable.commitAppend(
+      rows(("a", 7L, 11.0), ("b", 13L, 6.0)), base)
+    var mode = ""
+    val jobs = counted { mode = maintain(base, gold).mode }.jobs
+    assert(mode === "incremental")
+    assert(jobs === 11)
+  }
 }

@@ -12,4 +12,15 @@ trait SparkTestBase extends AnyFunSuite {
 
   /** The Spark work `body` started (see [[JobCounters.during]]). */
   def counted(body: => Any): JobCounters = JobCounters.during(spark)(body)._2
+
+  /** Publish the next version of the VersionedTable at `path` with no
+    * data files: legal in the format (another writer's empty snapshot),
+    * though every commit API writes at least one file. */
+  def commitNoFiles(path: String): Unit = {
+    val v = graft.core.VersionedTable.latestVersion(spark, path) + 1
+    val p = new org.apache.hadoop.fs.Path(f"$path/_manifests/v$v%05d.json")
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(p, false)
+    try out.write("#done\n".getBytes("UTF-8")) finally out.close()
+  }
 }

@@ -193,4 +193,54 @@ class TimeSeriesViewSpec extends SparkTestBase {
     assert(VersionedTable.latestVersion(spark, gold) === vGold,
       "replayed batch must not commit a new gold version")
   }
+
+  test("an emptied base commits an empty view, then noops") {
+    val root = tmp()
+    val (base, gold) = (s"$root/base", s"$root/gold")
+    VersionedTable.commitAppend(
+      rows(("a", 400000L, 10.0), ("a", 2100000L, 30.0)), base)
+    assert(maintain(base, gold).mode === "init")
+    commitNoFiles(base)
+    assert(VersionedTable.files(spark, base).isEmpty)
+    val r = maintain(base, gold)
+    assert(r.mode === "full" && r.filesScanned === 0)
+    assert(r.version === VersionedTable.latestVersion(spark, gold))
+    assert(VersionedTable.files(spark, gold).isEmpty ||
+      TimeSeriesView.read(spark, gold).isEmpty)
+    val again = maintain(base, gold)
+    assert(again.mode === "noop" && again.version === r.version)
+  }
+
+  test("a NULL-keyed series recomputes honestly on the delta path") {
+    val root = tmp()
+    val (base, gold) = (s"$root/base", s"$root/gold")
+    def nrows(xs: (Option[String], Long, Double)*): DataFrame =
+      xs.map { case (k, t, v) => (k.orNull, ts(t), v) }
+        .toDF("k", "t", "v")
+    VersionedTable.commitAppend(
+      nrows((Some("a"), 400000L, 5.0), (None, 900000L, 3.0)), base)
+    maintain(base, gold)
+    assert(goldSet(gold) === twinSet(base))
+    // a strictly-later delta for the NULL key: the plain-equality
+    // state joins can't see it — the view must recompute, not fold
+    VersionedTable.commitAppend(nrows((None, 3200000L, 7.0)), base)
+    val r = maintain(base, gold)
+    assert(r.mode === "full",
+      "NULL-keyed delta must take the honest recompute path")
+    assert(goldSet(gold) === twinSet(base))
+  }
+
+  test("an incremental maintain runs a pinned number of jobs") {
+    val root = tmp()
+    val (base, gold) = (s"$root/base", s"$root/gold")
+    VersionedTable.commitAppend(
+      rows(("a", 400000L, 10.0), ("b", 500000L, 5.0)), base)
+    maintain(base, gold)
+    VersionedTable.commitAppend(
+      rows(("a", 2100000L, 30.0), ("b", 3200000L, 9.0)), base)
+    var mode = ""
+    val jobs = counted { mode = maintain(base, gold).mode }.jobs
+    assert(mode === "incremental")
+    assert(jobs === 29)
+  }
 }
