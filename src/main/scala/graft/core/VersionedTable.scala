@@ -58,9 +58,15 @@ import org.apache.spark.sql.functions.col
   * close — a stalled writer whose claim was reclaimed and reused gets
   * a `ConcurrentModificationException` instead of a silent lost
   * update, so exactly one of the racing committers reports success.
-  * Tables written by a pre-terminator build are readable by setting
-  * `spark.graft.manifest.formatCutoffMs` to the upgrade timestamp:
-  * older terminator-less manifests are treated as complete.
+  *
+  * Every writer goes through three private primitives, so each step of
+  * the protocol exists once: `writeCommitDir` writes the fresh
+  * `data/<uuid>` dir under the `commit <table>` job label;
+  * `claimVersion` claims one manifest version, writes its lines and
+  * the terminator, and verifies the publish (won, lost or fenced);
+  * `retrying` is the one bounded loop (20 attempts) that reclaims a
+  * stale claim and retries on the latest version. Streaming sinks
+  * skip a replayed micro-batch through [[oncePerBatch]]'s marker.
   *
   * `vacuum` deletes data files unreferenced by the retained manifests
   * — the storage-reclaim half of time travel.
@@ -178,23 +184,12 @@ object VersionedTable {
       out
     } else f.create(target, false)
 
-  /** Manifests written before this epoch-ms cutoff predate the
-    * terminator protocol: treat them as COMPLETE as-is instead of
-    * polling/reclaiming them (the upgrade path for tables written by
-    * a pre-terminator build — set it to the upgrade timestamp).
-    * Default 0 = no legacy manifests. */
-  private def formatCutoff(spark: SparkSession): Long =
-    confMs(spark, "spark.graft.manifest.formatCutoffMs", 0L)
-
   /** One non-polling completeness check: Some(file list) if `mp` is
-    * terminated — or predates the terminator format — else None. */
-  private def completeNow(spark: SparkSession, f: FileSystem,
-      mp: Path): Option[List[String]] =
+    * terminated, else None. */
+  private def completeNow(f: FileSystem, mp: Path): Option[List[String]] =
     try {
       val lines = readManifest(f, mp)
       if (lines.lastOption.contains(Terminator)) Some(lines.dropRight(1))
-      else if (f.getFileStatus(mp).getModificationTime <
-          formatCutoff(spark)) Some(lines)
       else None
     } catch { case _: java.io.IOException => None }
 
@@ -227,7 +222,7 @@ object VersionedTable {
       confMs(spark, "spark.graft.manifest.pollMs", 10000L)
     var gone = version.isEmpty && !f.exists(mp)
     while (!gone && System.currentTimeMillis() <= deadline) {
-      completeNow(spark, f, mp) match {
+      completeNow(f, mp) match {
         case Some(fl) => return fl
         case None =>
           // a reclaimed (deleted/renamed-aside) latest never completes
@@ -242,7 +237,7 @@ object VersionedTable {
       var w = v - 1
       while (w >= 1) {
         val wp = manifestPath(path, w)
-        if (f.exists(wp)) completeNow(spark, f, wp) match {
+        if (f.exists(wp)) completeNow(f, wp) match {
           case Some(fl) => return fl
           case None => // also abandoned; keep walking down
         }
@@ -384,41 +379,25 @@ object VersionedTable {
     // race RECOMPUTES discovery against the winner's snapshot — a
     // blind retry would republish a stale file list and silently drop
     // the concurrent commit.
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20,
-        s"gave up deleting from $path after 20 version races")
-      val v = latestVersion(spark, path)
-      try {
-        val all = files(spark, path, Some(v))
-        if (all.isEmpty) return v
+    retrying(spark, path, "deleting from") { v =>
+      val all = files(spark, path, Some(v))
+      if (all.isEmpty) Some(v)
+      else {
         val candidates = bloomCandidates(spark, path, v, all, keys,
           keyCols).getOrElse(all)
         val touched = touchedFiles(spark, path, candidates, all, k,
           cond)
-        if (touched.isEmpty) {
-          // nothing to delete: a metadata-only commit (same file
-          // list) — callers still get their "delete landed as a new
-          // version"
-          if (claimExactNext(spark, path, v, all)) return v + 1
-        } else {
-          val rewritten = readFileSubset(spark, path, touched)
-            .join(k, cond, "left_anti")
-          if (tryRewriteClaim(spark, path, v,
-              all.filterNot(touched.toSet), rewritten)) return v + 1
-        }
-      } catch {
-        // IllegalStateException: abandoned half-publish at v (poll
-        // timed out). IllegalArgumentException: v's manifest vanished
-        // under us (a concurrent reclaimer renamed it aside between
-        // our latestVersion and files reads) — both mean "reclaim if
-        // stale, re-read latest, recompute discovery beneath"
-        case _: IllegalStateException | _: IllegalArgumentException =>
-          reclaimIfStale(spark, fs(spark, path), manifestPath(path, v))
+        // nothing to delete: a metadata-only commit (same file list)
+        // — callers still get their "delete landed as a new version"
+        val won =
+          if (touched.isEmpty) claimVersion(spark, path, v + 1, all) == Won
+          else tryRewriteClaim(spark, path, v,
+            all.filterNot(touched.toSet),
+            readFileSubset(spark, path, touched)
+              .join(k, cond, "left_anti"))
+        Option.when(won)(v + 1)
       }
     }
-    -1 // unreachable
   }
 
   /** If `df`'s optimized plan is a bare parquet file-source scan (no
@@ -473,30 +452,20 @@ object VersionedTable {
       predicate: org.apache.spark.sql.Column): Int = {
     import org.apache.spark.sql.functions.{input_file_name, lit,
       coalesce, not}
+    require(latestVersion(spark, path) > 0,
+      s"$path has no committed data to replace into")
     // the pre-loop snapshot read races the same reclaim/half-publish
     // window the OCC loop handles — bounded retry here too, or a
     // concurrent reclaimer crashes the backfill before the loop ever
     // starts. files() errors only (validateAppendSchema's own
     // IllegalArgumentException is a REAL schema mismatch and must
-    // propagate, so it stays outside the try)
-    var v0Attempts = 0
-    var snapshotNonEmpty: Option[Boolean] = None
-    while (snapshotNonEmpty.isEmpty) {
-      v0Attempts += 1
-      require(v0Attempts <= 20,
-        s"gave up resolving $path's latest snapshot after 20 races")
-      val v0 = latestVersion(spark, path)
-      require(v0 > 0, s"$path has no committed data to replace into")
-      try snapshotNonEmpty = Some(files(spark, path, Some(v0)).nonEmpty)
-      catch {
-        case _: IllegalStateException | _: IllegalArgumentException =>
-          reclaimIfStale(spark, fs(spark, path), manifestPath(path, v0))
-      }
-    }
+    // propagate, so it stays outside the retry)
+    val snapshotNonEmpty = retrying(spark, path, "resolving the latest " +
+      "snapshot of")(v0 => Some(files(spark, path, Some(v0)).nonEmpty))
     // an EMPTY committed snapshot (zero files — a legal version) has
     // no footer to validate against; the replacement becomes the
     // window's only content below
-    if (snapshotNonEmpty.get)
+    if (snapshotNonEmpty)
       validateAppendSchema(replacement, path, allowAdded = false)
     val evolved = fs(spark, path).exists(evolvedMarker(path))
     // three-valued logic: "matches" means predicate IS TRUE; NULL and
@@ -528,42 +497,29 @@ object VersionedTable {
         "every replacement row must satisfy the REPLACE WHERE predicate")
       // optimistic concurrency (the commitMerge discipline): a lost
       // version race recomputes discovery against the winner's snapshot
-      var attempts = 0
-      while (true) {
-        attempts += 1
-        require(attempts <= 20,
-          s"gave up replacing into $path after 20 version races")
-        val v = latestVersion(spark, path)
-        try {
-          val all = files(spark, path, Some(v))
-          val touched =
-            if (all.isEmpty) Seq.empty[String]
-            else {
-              val touchedNorm = readFileSubset(spark, path, all)
-                .withColumn("__file", input_file_name())
-                .filter(matches)
-                .select(col("__file")).distinct()
-                .collect().map(r => normPath(r.getString(0))).toSet
-              all.filter(p => touchedNorm.contains(normPath(p)))
-            }
-          val kept =
-            if (touched.isEmpty) repl // pure insert into window
-            else readFileSubset(spark, path, touched)
-              .filter(not(matches))
-              // a touched subset that predates a schema evolution lacks
-              // the added columns; null-fill them exactly like a
-              // whole-table mergeSchema read would
-              .unionByName(repl, allowMissingColumns = evolved)
-          if (tryRewriteClaim(spark, path, v,
-              all.filterNot(touched.toSet), kept)) return v + 1
-        } catch {
-          // same pair as commitDelete: half-publish at v, or v's
-          // manifest reclaimed out from under us — retry beneath
-          case _: IllegalStateException | _: IllegalArgumentException =>
-            reclaimIfStale(spark, fs(spark, path), manifestPath(path, v))
-        }
+      retrying(spark, path, "replacing into") { v =>
+        val all = files(spark, path, Some(v))
+        val touched =
+          if (all.isEmpty) Seq.empty[String]
+          else {
+            val touchedNorm = readFileSubset(spark, path, all)
+              .withColumn("__file", input_file_name())
+              .filter(matches)
+              .select(col("__file")).distinct()
+              .collect().map(r => normPath(r.getString(0))).toSet
+            all.filter(p => touchedNorm.contains(normPath(p)))
+          }
+        val kept =
+          if (touched.isEmpty) repl // pure insert into window
+          else readFileSubset(spark, path, touched)
+            .filter(not(matches))
+            // a touched subset that predates a schema evolution lacks
+            // the added columns; null-fill them exactly like a
+            // whole-table mergeSchema read would
+            .unionByName(repl, allowMissingColumns = evolved)
+        Option.when(tryRewriteClaim(spark, path, v,
+          all.filterNot(touched.toSet), kept))(v + 1)
       }
-      -1 // unreachable
     } finally scratch.foreach(Scratch.drop(spark, _))
   }
 
@@ -643,29 +599,6 @@ object VersionedTable {
       subset: Seq[String]): DataFrame =
     readFiles(spark, subset, fs(spark, path).exists(evolvedMarker(path)))
 
-  /** Claim EXACTLY version `vPrev + 1` with `manifestFiles`. True =
-    * published and ownership-verified; false = lost the version race
-    * (or a stalled claim was reclaimed beneath us) — the caller must
-    * recompute against the new snapshot, never blind-retry a stale
-    * file list. */
-  private def claimExactNext(spark: SparkSession, path: String,
-      vPrev: Int, manifestFiles: Seq[String]): Boolean = {
-    val f = fs(spark, path)
-    val written = (manifestFiles :+ Terminator).toList
-    val target = manifestPath(path, vPrev + 1)
-    f.mkdirs(new Path(manifestDir(path)))
-    try {
-      val out = atomicClaim(f, target)
-      try out.write(written.mkString("", "\n", "\n").getBytes("UTF-8"))
-      finally out.close()
-      verifyOwnPublish(spark, f, target, written)
-      true
-    } catch {
-      case _: java.io.IOException => false
-      case _: java.util.ConcurrentModificationException => false
-    }
-  }
-
   /** One attempt of the file-granular rewrite: write `rewritten` as a
     * fresh commit dir and claim exactly the next version naming the
     * carried files (by reference, zero bytes copied) plus the new
@@ -674,14 +607,92 @@ object VersionedTable {
   private def tryRewriteClaim(spark: SparkSession, path: String,
       vPrev: Int, carried: Seq[String], rewritten: DataFrame)
       : Boolean = {
-    val f = fs(spark, path)
-    val commitDir = s"$path/data/${java.util.UUID.randomUUID()}"
-    rewritten.write.mode(SaveMode.ErrorIfExists).parquet(commitDir)
-    val newFiles = f.listStatus(new Path(commitDir))
+    val (commitDir, newFiles) = writeCommitDir(rewritten, path)
+    val won = claimVersion(spark, path, vPrev + 1, carried ++ newFiles) == Won
+    if (!won) fs(spark, path).delete(commitDir, true)
+    won
+  }
+
+  /** Write `df` to a fresh `data/<uuid>` dir of the table (nothing is
+    * ever written in place) under the `commit <table>` job label.
+    * Returns the dir and its data files. */
+  private def writeCommitDir(df: DataFrame, path: String)
+      : (Path, Seq[String]) = {
+    val sc = df.sparkSession.sparkContext
+    val commitDir = new Path(s"$path/data/${java.util.UUID.randomUUID()}")
+    val prevDesc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"commit ${new Path(path).getName}")
+    try df.write.mode(SaveMode.ErrorIfExists).parquet(commitDir.toString)
+    finally sc.setJobDescription(prevDesc)
+    val newFiles = fs(df.sparkSession, path).listStatus(commitDir)
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
       .map(_.getPath.toString).toSeq
-    if (claimExactNext(spark, path, vPrev, carried ++ newFiles)) true
-    else { f.delete(new Path(commitDir), true); false }
+    (commitDir, newFiles)
+  }
+
+  /** Outcome of one [[claimVersion]]. */
+  private sealed trait Claim
+  /** The version is ours and holds our lines. */
+  private case object Won extends Claim
+  /** Another writer created the version first. */
+  private case object Lost extends Claim
+  /** Our claim went stale and was reclaimed and reused (see
+    * [[verifyOwnPublish]]): this writer did NOT publish. */
+  private final case class Fenced(
+      e: java.util.ConcurrentModificationException) extends Claim
+
+  /** The one version claim: atomically create manifest `v` (O_EXCL on
+    * local, atomic create on HDFS), write `manifestFiles` plus the
+    * terminator (readers poll for it — see [[files]]), then run the
+    * fencing verify. */
+  private def claimVersion(spark: SparkSession, path: String, v: Int,
+      manifestFiles: Seq[String]): Claim = {
+    val f = fs(spark, path)
+    val target = manifestPath(path, v)
+    val written = (manifestFiles :+ Terminator).toList
+    f.mkdirs(new Path(manifestDir(path)))
+    try {
+      val out = atomicClaim(f, target)
+      try out.write(written.mkString("", "\n", "\n").getBytes("UTF-8"))
+      finally out.close()
+    } catch { case _: java.io.IOException => return Lost }
+    // fencing verify: a writer stalled past staleMs may have had its
+    // claim reclaimed and the version reused by a concurrent committer
+    // — its close() then lands on an orphaned inode and BOTH
+    // committers would report success (silent lost update). Success
+    // is only success if the manifest at `target` holds OUR content
+    // (the commit-UUID data paths make it unique per writer).
+    try { verifyOwnPublish(spark, f, target, written); Won }
+    catch { case e: java.util.ConcurrentModificationException => Fenced(e) }
+  }
+
+  /** The one bounded optimistic-concurrency loop: run `attempt` on the
+    * latest version until it returns a result, at most 20 times (`what`
+    * names the operation in the give-up error). An
+    * IllegalStateException (the version is an abandoned half-publish:
+    * the poll timed out) or IllegalArgumentException (its manifest
+    * vanished under us: a concurrent reclaimer renamed it aside)
+    * reclaims that version's manifest once stale, then retries on the
+    * state beneath it. `attempt` returns None on a lost race; it must
+    * recompute against the new snapshot, never blind-retry a stale
+    * file list. */
+  @annotation.tailrec
+  private def retrying[T](spark: SparkSession, path: String, what: String,
+      attempts: Int = 1)(attempt: Int => Option[T]): T = {
+    require(attempts <= 20,
+      s"gave up $what $path after 20 version races")
+    val v = latestVersion(spark, path)
+    val result =
+      try attempt(v)
+      catch {
+        case _: IllegalStateException | _: IllegalArgumentException =>
+          reclaimIfStale(spark, fs(spark, path), manifestPath(path, v))
+          None
+      }
+    result match {
+      case Some(r) => r
+      case None => retrying(spark, path, what, attempts + 1)(attempt)
+    }
   }
 
   /** SHALLOW CLONE (the Delta `CREATE TABLE ... SHALLOW CLONE`
@@ -715,87 +726,34 @@ object VersionedTable {
   }
 
   private def commit(df: DataFrame, path: String,
-      carryPrevious: Boolean): Int = {
-    val spark = df.sparkSession
-    val f = fs(spark, path)
-    // 1. write the immutable data files for this commit
-    val commitDir = s"$path/data/${java.util.UUID.randomUUID()}"
-    val prevDesc = spark.sparkContext.getLocalProperty(
-      "spark.job.description")
-    spark.sparkContext.setJobDescription(
-      s"commit ${new Path(path).getName}")
-    try df.write.mode(SaveMode.ErrorIfExists).parquet(commitDir)
-    finally spark.sparkContext.setJobDescription(prevDesc)
-    val newFiles = f.listStatus(new Path(commitDir))
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-      .map(_.getPath.toString).toSeq
-    publishFiles(spark, path, newFiles, carryPrevious)
-  }
+      carryPrevious: Boolean): Int =
+    publishFiles(df.sparkSession, path, writeCommitDir(df, path)._2,
+      carryPrevious)
 
   /** Publish a manifest naming `newFiles` as the next version — the
     * commit protocol minus the data write (the files may live under
     * ANOTHER table's data dir — [[cloneFrom]]). On a version race,
-    * re-reads the winner's state and retries on top of it. */
+    * re-reads the winner's state and retries on top of it; a fenced
+    * claim throws its ConcurrentModificationException. */
   private def publishFiles(spark: SparkSession, path: String,
-      newFiles: Seq[String], carryPrevious: Boolean): Int = {
-    val f = fs(spark, path)
-    // publish: create the next manifest; on a version race, re-read
-    // the winner's state and retry on top of it
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"gave up publishing to $path " +
-        "after 20 version races")
-      // read the version NUMBER once and derive the carried file list
-      // from exactly that (immutable) manifest — listing "latest"
-      // twice would let a commit that lands in between vanish from
-      // the published manifest (lost update) even though our create
-      // of v+1 succeeds
-      val vPrev = latestVersion(spark, path)
-      try {
-        val prev =
-          if (carryPrevious && vPrev > 0) files(spark, path, Some(vPrev))
-          else Nil
-        val v = vPrev + 1
-        f.mkdirs(new Path(manifestDir(path)))
-        val target = manifestPath(path, v)
-        try {
-          // the atomic claim on version v (O_EXCL on local, atomic
-          // create on HDFS); the terminator line marks the content
-          // complete (readers poll for it — see files())
-          val written = (prev ++ newFiles :+ Terminator).toList
-          val out = atomicClaim(f, target)
-          try out.write(written.mkString("", "\n", "\n")
-            .getBytes("UTF-8"))
-          finally out.close()
-          // fencing verify: a writer stalled past staleMs may have had
-          // its claim reclaimed and the version reused by a concurrent
-          // committer — its close() then lands on an orphaned inode
-          // and BOTH committers would report success (silent lost
-          // update). Success is only success if the manifest at
-          // `target` holds OUR content (the commit-UUID data paths
-          // make it unique per writer).
-          verifyOwnPublish(spark, f, target, written)
-          return v
-        } catch {
-          case _: java.io.IOException =>
-            Thread.sleep(10) // lost the race for v; let the winner close
-        }
-      } catch {
-        // files(vPrev) outlived the poll window: the claim we would
-        // build on is an ABANDONED half-publish (writer died between
-        // create and close). Reclaim it once stale — otherwise that
-        // version number is wedged forever — then retry on the state
-        // beneath it.
-        // ... or vPrev's manifest vanished between latestVersion and
-        // files (a concurrent reclaimer renamed it aside): same
-        // remedy — re-read latest and retry beneath
-        case _: IllegalStateException | _: IllegalArgumentException =>
-          reclaimIfStale(spark, f, manifestPath(path, vPrev))
+      newFiles: Seq[String], carryPrevious: Boolean): Int =
+    // the version NUMBER is read once per attempt and the carried file
+    // list derived from exactly that (immutable) manifest — listing
+    // "latest" twice would let a commit that lands in between vanish
+    // from the published manifest (lost update) even though our
+    // create of v+1 succeeds
+    retrying(spark, path, "publishing to") { vPrev =>
+      val prev =
+        if (carryPrevious && vPrev > 0) files(spark, path, Some(vPrev))
+        else Nil
+      claimVersion(spark, path, vPrev + 1, prev ++ newFiles) match {
+        case Won => Some(vPrev + 1)
+        case Lost =>
+          Thread.sleep(10) // lost the race; let the winner close
+          None
+        case Fenced(e) => throw e
       }
     }
-    -1 // unreachable
-  }
 
   /** Post-close fencing check: block until the manifest at `target`
     * holds exactly the lines this writer wrote, or fail the commit.
@@ -833,15 +791,12 @@ object VersionedTable {
     * (rename preserves the inode an open stream writes to), otherwise
     * the orphan is deleted. A plain delete-after-check could destroy
     * a manifest that completed (and was verified by its writer)
-    * between the check and the delete. Legacy pre-terminator
-    * manifests (older than `spark.graft.manifest.formatCutoffMs`)
-    * are complete by definition and never reclaimed. */
+    * between the check and the delete. */
   private def reclaimIfStale(spark: SparkSession, f: FileSystem,
       target: Path): Unit = {
     val stale = confMs(spark, "spark.graft.manifest.staleMs", 60000L)
     try {
       val st = f.getFileStatus(target)
-      if (st.getModificationTime < formatCutoff(spark)) return
       if (readManifest(f, target).lastOption.contains(Terminator)) return
       if (st.getModificationTime >=
         System.currentTimeMillis() - stale) return
@@ -887,31 +842,57 @@ object VersionedTable {
     else if (!restored) { f.delete(aside, false); () }
   }
 
-  /** Idempotent streaming sink: a `foreachBatch` writer that commits
-    * each micro-batch as one table version and SKIPS batch ids it has
-    * already committed — after a restart, Structured Streaming replays
-    * the last micro-batch, and without this dedup the table would
-    * double-append it (the Delta streaming sink's txn-id pattern).
-    * The marker is claimed with the same create-fails-if-exists
-    * primitive as version publication, AFTER the data commit: a crash
-    * in the narrow window between commit and marker re-appends that
-    * one batch on restart. Every row therefore carries `_batch_id`,
-    * so that residual duplicate is detectable and removable with a
-    * (_batch_id, version)-latest dedup downstream — at-least-once
-    * storage, exactly-once after the stamp-aware read. */
-  def foreachBatchAppend(path: String)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    val spark = batch.sparkSession
-    val f = fs(spark, path)
+  /** The per-batch marker of every single-commit `foreachBatch` sink:
+    * run `commit` for micro-batch `batchId` of the table at `path`
+    * unless `<path>/_commits/b<batchId>` exists, then claim that
+    * marker. After a restart Structured Streaming replays the last
+    * micro-batch, and without the marker the sink would commit it
+    * twice (the Delta streaming sink's txn-id pattern); `commit` is
+    * by-name, so a replay also skips whatever computes the rows. The
+    * marker is claimed with a create-fails-if-exists AFTER the
+    * commit: a crash in the narrow window between the two re-runs
+    * that one batch on restart. Returns whether `commit` ran. */
+  def oncePerBatch(spark: SparkSession, path: String, batchId: Long)(
+      commit: => Unit): Boolean = {
     val marker = new Path(s"$path/_commits/b$batchId")
-    if (!f.exists(marker)) {
-      commitAppend(batch.withColumn("_batch_id",
-        org.apache.spark.sql.functions.lit(batchId)), path)
-      f.mkdirs(new Path(s"$path/_commits"))
-      try f.create(marker, false).close()
-      catch { case _: java.io.IOException => () } // lost claim: done
+    val f = fs(spark, path)
+    if (f.exists(marker)) false
+    else {
+      commit
+      claimMarker(f, marker)
+      true
     }
   }
+
+  /** Create the empty marker file `marker` (and its directory); a
+    * marker that already exists is a claim another run won, which is
+    * just as done. */
+  private[core] def claimMarker(f: FileSystem, marker: Path): Unit = {
+    f.mkdirs(marker.getParent)
+    try f.create(marker, false).close()
+    catch { case _: java.io.IOException => () }
+  }
+
+  /** Append `rows`, stamped with `_batch_id`, once per micro-batch
+    * ([[oncePerBatch]]). Every row carries the stamp so the residual
+    * duplicate of a crash between commit and marker is detectable and
+    * removable with a (_batch_id, version)-latest dedup downstream —
+    * at-least-once storage, exactly-once after the stamp-aware read. */
+  def appendBatch(spark: SparkSession, path: String, batchId: Long)(
+      rows: => DataFrame): Boolean =
+    oncePerBatch(spark, path, batchId) {
+      commitAppend(rows.withColumn("_batch_id",
+        org.apache.spark.sql.functions.lit(batchId)), path)
+      ()
+    }
+
+  /** Idempotent streaming sink: a `foreachBatch` writer that commits
+    * each micro-batch as one table version through [[appendBatch]],
+    * skipping batch ids it has already committed. */
+  def foreachBatchAppend(path: String): (DataFrame, Long) => Unit =
+    (batch, batchId) => {
+      appendBatch(batch.sparkSession, path, batchId)(batch); ()
+    }
 
   /** MERGE upsert as a new version (the Delta `whenMatchedUpdateAll.
     * whenNotMatchedInsertAll` shape on this format — ref:
@@ -941,65 +922,48 @@ object VersionedTable {
   def commitMerge(df: DataFrame, path: String,
       keyCols: Seq[String]): Int = {
     val spark = df.sparkSession
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20,
-        s"gave up merging into $path after 20 version races")
-      val vPrev = latestVersion(spark, path)
-      try {
-        // empty table: the merge result is just `df` — but publish it
-        // through THIS loop's no-blind-retry claim on v1, never via
-        // commitOverwrite (whose internal retry is a blind overwrite
-        // that would drop a concurrent commit racing table creation)
-        // an empty committed snapshot (e.g. commitOverwrite of a
-        // 0-partition DataFrame) must merge like the no-table case:
-        // read(vPrev) would throw IllegalArgumentException on every
-        // iteration and spin the race loop to exhaustion
-        val all =
-          if (vPrev == 0) Seq.empty[String]
-          else files(spark, path, Some(vPrev))
-        // file-granular: rewrite only files colliding with the batch
-        // keys; carry the rest by reference. Recomputed per attempt —
-        // a lost race means a new snapshot and a new touched set.
-        val (merged, untouched) =
-          if (all.isEmpty) (df, Seq.empty[String])
-          else {
-            val k = df
-              .select(keyCols.map(c => col(c).as(s"__k_$c")): _*)
-              .distinct()
-            // MERGE's historical key match is null-UNSAFE (a NULL key
-            // never collides) — plain equality, unlike delete's <=>
-            val cond = keyCols.map(c => col(c) === col(s"__k_$c"))
-              .reduce(_ && _)
-            val touched = touchedFiles(spark, path, all, all, k, cond)
-            val rewritten =
-              if (touched.isEmpty) df
-              else readFileSubset(spark, path, touched)
-                .join(k, cond, "left_anti")
-                // a touched subset predating a schema evolution lacks
-                // the added columns; null-fill exactly like a
-                // whole-table mergeSchema read would
-                .unionByName(df, allowMissingColumns =
-                  fs(spark, path).exists(evolvedMarker(path)))
-            (rewritten, all.filterNot(touched.toSet))
-          }
-        if (tryRewriteClaim(spark, path, vPrev, untouched, merged))
-          return vPrev + 1
-        // lost the version to a concurrent commit (or our claim was
-        // reclaimed as stalled): the snapshot we merged against is
-        // stale — recompute against the winner
-      } catch {
-        // IllegalStateException: vPrev is an abandoned half-publish
-        // (poll timed out). IllegalArgumentException: vPrev's manifest
-        // vanished under us (a concurrent reclaimer renamed it aside,
-        // or an empty version) — both mean "re-read latest and retry"
-        case _: IllegalStateException | _: IllegalArgumentException =>
-          reclaimIfStale(spark, fs(spark, path),
-            manifestPath(path, vPrev))
-      }
+    retrying(spark, path, "merging into") { vPrev =>
+      // empty table: the merge result is just `df` — but publish it
+      // through THIS loop's no-blind-retry claim on v1, never via
+      // commitOverwrite (whose internal retry is a blind overwrite
+      // that would drop a concurrent commit racing table creation)
+      // an empty committed snapshot (e.g. commitOverwrite of a
+      // 0-partition DataFrame) must merge like the no-table case:
+      // read(vPrev) would throw IllegalArgumentException on every
+      // iteration and spin the race loop to exhaustion
+      val all =
+        if (vPrev == 0) Seq.empty[String]
+        else files(spark, path, Some(vPrev))
+      // file-granular: rewrite only files colliding with the batch
+      // keys; carry the rest by reference. Recomputed per attempt —
+      // a lost race means a new snapshot and a new touched set.
+      val (merged, untouched) =
+        if (all.isEmpty) (df, Seq.empty[String])
+        else {
+          val k = df
+            .select(keyCols.map(c => col(c).as(s"__k_$c")): _*)
+            .distinct()
+          // MERGE's historical key match is null-UNSAFE (a NULL key
+          // never collides) — plain equality, unlike delete's <=>
+          val cond = keyCols.map(c => col(c) === col(s"__k_$c"))
+            .reduce(_ && _)
+          val touched = touchedFiles(spark, path, all, all, k, cond)
+          val rewritten =
+            if (touched.isEmpty) df
+            else readFileSubset(spark, path, touched)
+              .join(k, cond, "left_anti")
+              // a touched subset predating a schema evolution lacks
+              // the added columns; null-fill exactly like a
+              // whole-table mergeSchema read would
+              .unionByName(df, allowMissingColumns =
+                fs(spark, path).exists(evolvedMarker(path)))
+          (rewritten, all.filterNot(touched.toSet))
+        }
+      // a lost version (or our claim reclaimed as stalled) means the
+      // snapshot we merged against is stale — recompute on the winner
+      Option.when(tryRewriteClaim(spark, path, vPrev, untouched,
+        merged))(vPrev + 1)
     }
-    -1 // unreachable
   }
 
   /** Row-level diff between two committed versions — the
@@ -1257,7 +1221,6 @@ object VersionedTable {
     val totalSmall = small.map(_._2).sum
     val nOut = math.max(1,
       math.ceil(totalSmall.toDouble / targetBytes).toInt)
-    val commitDir = s"$path/data/${java.util.UUID.randomUUID()}"
     // evolved tables must merge footers here: the small files can have
     // heterogeneous (additive) schemas, and a plain read would rewrite
     // them to whichever sampled footer won — silently dropping the
@@ -1266,31 +1229,16 @@ object VersionedTable {
       if (f.exists(evolvedMarker(path)))
         spark.read.option("mergeSchema", "true")
       else spark.read
-    rd.parquet(small.map(_._1): _*).coalesce(nOut)
-      .write.mode(SaveMode.ErrorIfExists).parquet(commitDir)
-    val newFiles = f.listStatus(new Path(commitDir))
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-      .map(_.getPath.toString).toSeq
-    val written = (big.map(_._1) ++ newFiles :+ Terminator).toList
-    val target = manifestPath(path, vPrev + 1)
-    f.mkdirs(new Path(manifestDir(path)))
-    try {
-      val out = atomicClaim(f, target)
-      try out.write(written.mkString("", "\n", "\n").getBytes("UTF-8"))
-      finally out.close()
-      verifyOwnPublish(spark, f, target, written)
-      vPrev + 1
-    } catch {
-      case _: java.io.IOException =>
-        // a real commit won the version — abandon the rewrite
-        f.delete(new Path(commitDir), true)
-        latestVersion(spark, path)
-      case _: java.util.ConcurrentModificationException =>
-        // stalled past staleMs, claim reclaimed and version reused by
-        // a real committer: losing is compaction's documented contract
-        // — clean up and report the winner instead of crashing the
-        // ingest sink that auto-compacts
-        f.delete(new Path(commitDir), true)
+    val (commitDir, newFiles) =
+      writeCommitDir(rd.parquet(small.map(_._1): _*).coalesce(nOut), path)
+    claimVersion(spark, path, vPrev + 1, big.map(_._1) ++ newFiles) match {
+      case Won => vPrev + 1
+      case Lost | Fenced(_) =>
+        // a real commit won the version (or our claim went stale and a
+        // real committer reused it): losing is compaction's documented
+        // contract — abandon the rewrite and report the winner instead
+        // of crashing the ingest sink that auto-compacts
+        f.delete(commitDir, true)
         latestVersion(spark, path)
     }
   }

@@ -36,8 +36,10 @@ import org.apache.spark.sql.types._
   *    0)` of the old pair frame);
   *  - null-rel candidates are never selected (the heap skipped null
   *    scores);
-  *  - a candidate id already selected is skipped even if the corpus
-  *    join duplicated its row (the old anti-join removed by id).
+  *  - every packed row is its own candidate id: a repeated id (the
+  *    corpus side of the join broke MmrRerank's unique-id
+  *    precondition) fails the query, since duplicates would tie on
+  *    (score, id) and resolve by the nondeterministic collect order.
   *
   * Input: `array<struct<neighbor_id:long, rel:double,
   * vec:array<double>>>`; output `array<struct<neighbor_id:long,
@@ -93,7 +95,7 @@ object MmrSelect {
     val cap = graft.operators.MmrRerank.MaxShortlistPerQuery
     // hard physical bound first: a duplicated-corpus-id join fan-out
     // (precondition violation, see MmrRerank) must not buy an
-    // unbounded O(k·n) loop before the distinct-id check below can
+    // unbounded allocation before the distinct-id check below can
     // even count
     require(n <= 16 * cap,
       s"mmr: a query packed $n rows (hard bound ${16 * cap}) — the " +
@@ -113,17 +115,17 @@ object MmrSelect {
       if (!row.isNullAt(2)) vecs(i) = row.getArray(2)
       i += 1
     }
-    // the shortlist ceiling counts CANDIDATES (distinct ids), not
-    // packed rows, so corpus-side join fan-out can never spuriously
-    // fail a legal shortlist
-    require(distinctIds.size <= cap,
-      s"mmr: a query has a ${distinctIds.size}-candidate shortlist " +
+    require(distinctIds.size == n,
+      s"mmr: a query packed $n rows for ${distinctIds.size} distinct " +
+        "ids — the corpus side of the rerank join has duplicated ids " +
+        "(MmrRerank's documented precondition is a unique-id corpus)")
+    require(n <= cap,
+      s"mmr: a query has a $n-candidate shortlist " +
         s"(max $cap); the in-task selection is O(k·n) per query — " +
         "cut the retriever's candidate list before reranking")
     val maxsim = new Array[Double](n)
     val hasSim = new Array[Boolean](n)
     val taken = new Array[Boolean](n)
-    val picked = new java.util.HashSet[java.lang.Long]()
     val out = new scala.collection.mutable.ArrayBuffer[InternalRow](
       math.min(k, n))
     var r = 1
@@ -133,7 +135,7 @@ object MmrSelect {
       var bestScore = 0.0
       i = 0
       while (i < n) {
-        if (!taken(i) && !relNull(i) && !picked.contains(ids(i))) {
+        if (!taken(i) && !relNull(i)) {
           val div = if (r == 1) 0.0
             else (1.0 - lambda) * (if (hasSim(i)) maxsim(i) else 0.0)
           val score =
@@ -151,7 +153,6 @@ object MmrSelect {
       if (best < 0) done = true
       else {
         taken(best) = true
-        picked.add(ids(best))
         out += new GenericInternalRow(
           Array[Any](ids(best), bestScore, r))
         if (vecs(best) != null) {

@@ -116,56 +116,33 @@ object Bm25Index {
     * Exactly-once per batch, CRASH-SAFE ACROSS THE MULTI-TABLE UPDATE:
     * [[update]] spans four commits (postings, doclen, termstats,
     * stats), and a marker-only protocol (the
-    * [[graft.core.VersionedTable.foreachBatchAppend]] shape) would
+    * [[graft.core.VersionedTable.oncePerBatch]] shape) would
     * double-append postings if the job died between the first commit
     * and the marker. This sink writes a WRITE-AHEAD INTENT first — the
     * current version of all four tables — so a replay that finds the
     * intent without the done-marker ROLLS BACK (re-publishes each
     * table's pinned pre-batch snapshot as a new version; append-only
     * versioning makes rollback just another commit) and re-applies the
-    * batch. Rollback is itself idempotent: the pinned versions are
-    * fixed, so a crash mid-rollback re-rolls harmlessly. The first
-    * batch [[publish]]es, which is replay-safe as-is (all overwrites).
+    * batch. The first batch [[publish]]es, which is replay-safe as-is
+    * (all overwrites). Journal, publish marker and done-marker:
+    * [[graft.core.TxnJournal.ingestOnce]].
     */
   def foreachBatchIngest(path: String, idCol: String, textCol: String,
       compactEvery: Int = 0)
       : (DataFrame, Long) => Unit = { (batch, batchId) =>
     val spark = batch.sparkSession
-    val f = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(s"$path/_txn/b$batchId.done")
-    if (!f.exists(done)) {
-      val docs = batch.select(col(idCol), col(textCol))
-      // the publish marker is written BEFORE publishing: a replay that
-      // finds it re-publishes (overwrite-idempotent) instead of taking
-      // the update path — without it, a crash after publish but before
-      // the done-marker would re-ingest the first batch as an APPEND
-      val pubMarker = new org.apache.hadoop.fs.Path(
-        s"$path/_txn/b$batchId.publish")
-      val isFirst = f.exists(pubMarker) ||
-        VersionedTable.latestVersion(spark, postingsPath(path)) == 0
-      if (isFirst) {
-        f.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_txn"))
-        try f.create(pubMarker, false).close()
-        catch { case _: java.io.IOException => () }
-        publish(docs, idCol, textCol, path)
-        f.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_txn"))
-        try f.create(done, false).close()
-        catch { case _: java.io.IOException => () } // lost claim: done
-      } else {
-        graft.core.TxnJournal.exactlyOnce(spark, path, batchId,
-          componentPaths(path)) {
-          update(docs, idCol, textCol, path)
-        }
-        ()
-      }
-      // periodic maintenance OUTSIDE the txn journal: compaction is a
-      // pure layout optimization (a lost version race just skips it),
-      // so it needs no exactly-once protection — and it must not, or a
-      // replayed batch would block on an already-compacted layout
-      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-        compactIndex(spark, path)
-    }
+    val docs = batch.select(col(idCol), col(textCol))
+    val ran = graft.core.TxnJournal.ingestOnce(spark, path, batchId,
+        postingsPath(path), componentPaths(path))(
+      publish(docs, idCol, textCol, path))(
+      update(docs, idCol, textCol, path))
+    // periodic maintenance OUTSIDE the txn journal: compaction is a
+    // pure layout optimization (a lost version race just skips it),
+    // so it needs no exactly-once protection — and it must not, or a
+    // replayed batch would block on an already-compacted layout
+    if (ran && compactEvery > 0 && batchId > 0 &&
+        batchId % compactEvery == 0)
+      compactIndex(spark, path)
   }
 
   /** Streaming SERVING tap: each micro-batch of queries searches the
@@ -174,25 +151,18 @@ object Bm25Index {
     * of a retrieval service (the log feeds [[RetrievalMetrics]],
     * drift monitors, A/B tables). Per-batch idempotence and the
     * batch-id column come from [[graft.core.VersionedTable
-    * .foreachBatchAppend]]'s marker protocol; each batch's search
-    * pins whatever index versions are current when it runs, so an
-    * ingest landing mid-stream changes results only from the NEXT
-    * batch on (the snapshot-isolation spec's guarantee, per batch). */
+    * .appendBatch]], which skips the search itself on a replayed
+    * batch; each batch's search pins whatever index versions are
+    * current when it runs, so an ingest landing mid-stream changes
+    * results only from the NEXT batch on (the snapshot-isolation
+    * spec's guarantee, per batch). */
   def foreachBatchServe(indexPath: String, logPath: String,
       qIdCol: String, qTextCol: String, idCol: String, k: Int)
       : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    val inner = VersionedTable.foreachBatchAppend(logPath)
-    val spark = batch.sparkSession
-    // skip the search itself on a replayed batch — the marker check
-    // inside the append sink would drop the rows anyway, but only
-    // after paying for the search
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$logPath/_commits/b$batchId")
-    val f = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(marker)) {
-      inner(searchFrom(spark, indexPath, batch, qIdCol, qTextCol,
-        idCol, k), batchId)
-    }
+    VersionedTable.appendBatch(batch.sparkSession, logPath, batchId)(
+      searchFrom(batch.sparkSession, indexPath, batch, qIdCol, qTextCol,
+        idCol, k))
+    ()
   }
 
   /** Maintenance: bin-pack every component table's small files

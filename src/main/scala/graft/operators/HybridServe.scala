@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.VersionedTable
+import graft.core.{TxnJournal, VersionedTable}
 
 /** Cross-index hybrid retrieval serving — the tap a real RAG service
   * runs: each query micro-batch searches BOTH the BM25 index and the
@@ -31,50 +31,19 @@ import graft.core.VersionedTable
 object HybridServe {
 
   /** Last consistent committed versions of a journal-maintained
-    * multi-table index: latest versions of `subs`, clamped to any open
-    * intent under `root/_txn`. Named intents (`name:version` entries —
-    * the current [[graft.core.TxnJournal]] format) clamp each sub BY
-    * NAME, so an intent from a sink generation with more or fewer
-    * sub-tables still pins the ones it shares with the reader. Legacy
-    * bare-version intents carry no names and clamp element-wise only
-    * when the arity matches (a different arity belongs to a different
-    * sink generation and is ignored — safe, because such sinks commit
-    * single tables atomically). */
+    * multi-table index: latest versions of `subs`, each clamped BY
+    * NAME to the pins of any open journal intent under `root`
+    * ([[graft.core.TxnJournal.openPins]]), so an intent from a sink
+    * generation with more or fewer sub-tables still pins the ones it
+    * shares with the reader. The latest versions are read first: an
+    * update whose intent lands after the listing cannot have
+    * committed before them. */
   def pinConsistent(spark: SparkSession, root: String,
       subs: Seq[String]): Seq[Int] = {
     val latest = subs.map(VersionedTable.latestVersion(spark, _))
-    val segs = subs.map(s => s.stripSuffix("/").split('/').last)
-    val txn = new org.apache.hadoop.fs.Path(s"$root/_txn")
-    val f = txn.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(txn)) return latest
-    val open = f.listStatus(txn).map(_.getPath.getName)
-      .filter(_.matches("[a-z]\\d+")) // b<batch> sinks + f<op> forgets
-      .filterNot(n => f.exists(
-        new org.apache.hadoop.fs.Path(txn, s"$n.done")))
-    open.foldLeft(latest) { (acc, name) =>
-      val in = f.open(new org.apache.hadoop.fs.Path(txn, name))
-      val line =
-        try scala.io.Source.fromInputStream(in).mkString.trim
-        finally in.close()
-      if (line.contains(":")) {
-        val byName = line.split(" ").flatMap { e =>
-          val i = e.lastIndexOf(':')
-          // an entry without ':' in a named-format line is corrupt —
-          // skip it here (serving must stay available; TxnJournal
-          // replay is where corruption fails loudly)
-          if (i < 0) None
-          else e.substring(i + 1).toIntOption.map(v =>
-            e.substring(0, i) -> v)
-        }.toMap
-        acc.zip(segs).map { case (l, s) =>
-          byName.get(s).fold(l)(math.min(l, _))
-        }
-      } else {
-        val pinned = line.split(" ").flatMap(_.toIntOption).toSeq
-        if (pinned.size == acc.size) acc.zip(pinned).map {
-          case (l, p) => math.min(l, p)
-        } else acc
-      }
+    val open = TxnJournal.openPins(spark, root)
+    subs.zip(latest).map { case (s, l) =>
+      open.flatMap(_.get(TxnJournal.seg(s))).foldLeft(l)(math.min)
     }
   }
 
@@ -88,11 +57,7 @@ object HybridServe {
       nprobe: Int = 4): (DataFrame, Long) => Unit = {
     (batch, batchId) =>
       val spark = batch.sparkSession
-      val marker = new org.apache.hadoop.fs.Path(
-        s"$logPath/_commits/b$batchId")
-      val f = marker.getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      if (!f.exists(marker)) {
+      VersionedTable.appendBatch(spark, logPath, batchId) {
         val bmPin = pinConsistent(spark, bm25Path,
           Bm25Index.componentPaths(bm25Path))
         val ivfPin = pinConsistent(spark, ivfPath,
@@ -105,9 +70,8 @@ object HybridServe {
           Some(ivfPin(0)), Some(ivfPin(1)), batch, qIdCol, qVecCol,
           idCol, inK, nprobe, excludeSelf = false,
           deletesV = Some(ivfPin(4)))
-        VersionedTable.foreachBatchAppend(logPath)(
-          HybridSearch.rrf(sparse, idCol, dense, "neighbor_id", k),
-          batchId)
+        HybridSearch.rrf(sparse, idCol, dense, "neighbor_id", k)
       }
+      ()
   }
 }

@@ -144,24 +144,18 @@ object IncrementalClusters {
     * VersionedTables. The first batch publishes; later batches
     * [[update]].
     *
-    * Exactly-once per batch via the same claimed-marker protocol as
-    * [[graft.core.VersionedTable.foreachBatchAppend]]: a replayed
-    * micro-batch (Structured Streaming re-runs the last batch after a
-    * restart) is skipped once its marker exists, and a crash BETWEEN
-    * the commits and the marker is absorbed because [[update]] is
-    * idempotent (re-admitting an already-admitted batch produces the
-    * identical map; duplicate store rows only add candidates that
+    * Exactly-once per batch via
+    * [[graft.core.VersionedTable.oncePerBatch]]'s marker; a crash
+    * BETWEEN the commits and the marker is absorbed because [[update]]
+    * is idempotent (re-admitting an already-admitted batch produces
+    * the identical map; duplicate store rows only add candidates that
     * dedup away).
     */
   def foreachBatchAdmit(path: String, idCol: String, textCol: String,
       threshold: Double = 0.95): (DataFrame, Long) => Unit = {
     (batch, batchId) =>
       val spark = batch.sparkSession
-      val marker = new org.apache.hadoop.fs.Path(
-        s"$path/_admits/b$batchId")
-      val f = marker.getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      if (!f.exists(marker)) {
+      VersionedTable.oncePerBatch(spark, path, batchId) {
         val docs = batch.select(col(idCol), col(textCol))
         if (VersionedTable.latestVersion(spark, clustersPath(path)) == 0)
           publish(docs, idCol, textCol, path, threshold)
@@ -169,9 +163,8 @@ object IncrementalClusters {
           update(docs, VersionedTable.read(spark, docsPath(path)),
             idCol, textCol, path, threshold)
         VersionedTable.commitAppend(docs, docsPath(path))
-        f.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_admits"))
-        try f.create(marker, false).close()
-        catch { case _: java.io.IOException => () } // lost claim: done
+        ()
       }
+      ()
   }
 }

@@ -94,41 +94,23 @@ object IvfIndex {
     * appending — the continuous-ingestion shape of ANN index
     * maintenance. First batch [[publish]]es (training the codebook on
     * it); later batches [[update]]. Exactly-once per batch via
-    * [[graft.core.TxnJournal]]: although an update is a single append,
-    * a crash between the append and a bare marker would double-admit
-    * the batch on replay, so the journal's rollback covers it too. */
+    * [[graft.core.TxnJournal.ingestOnce]]: although an update is a
+    * single append, a crash between the append and a bare marker would
+    * double-admit the batch on replay, so the journal's rollback covers
+    * it too. */
   def foreachBatchIngest(path: String, idCol: String, vecCol: String,
       cells: Int = 16, trainIters: Int = 0, compactEvery: Int = 0)
       : (DataFrame, Long) => Unit = { (batch, batchId) =>
     val spark = batch.sparkSession
-    val f = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(s"$path/_txn/b$batchId.done")
-    if (!f.exists(done)) {
-      val vecs = batch.select(col(idCol), col(vecCol))
-      val pubMarker = new org.apache.hadoop.fs.Path(
-        s"$path/_txn/b$batchId.publish")
-      val isFirst = f.exists(pubMarker) ||
-        VersionedTable.latestVersion(spark, assignedPath(path)) == 0
-      if (isFirst) {
-        f.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_txn"))
-        try f.create(pubMarker, false).close()
-        catch { case _: java.io.IOException => () }
-        publish(vecs, idCol, vecCol, path, cells, trainIters)
-        f.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_txn"))
-        try f.create(done, false).close()
-        catch { case _: java.io.IOException => () } // lost claim: done
-      } else {
-        graft.core.TxnJournal.exactlyOnce(spark, path, batchId,
-          Seq(assignedPath(path))) {
-          update(vecs, idCol, vecCol, path)
-        }
-        ()
-      }
-      // layout maintenance outside the journal (see Bm25Index note)
-      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-        compactIndex(spark, path)
-    }
+    val vecs = batch.select(col(idCol), col(vecCol))
+    val ran = graft.core.TxnJournal.ingestOnce(spark, path, batchId,
+        assignedPath(path), Seq(assignedPath(path)))(
+      publish(vecs, idCol, vecCol, path, cells, trainIters))(
+      update(vecs, idCol, vecCol, path))
+    // layout maintenance outside the journal (see Bm25Index note)
+    if (ran && compactEvery > 0 && batchId > 0 &&
+        batchId % compactEvery == 0)
+      compactIndex(spark, path)
   }
 
   /** Cell histogram of an assignment frame — `(bucket, n)` rows,
@@ -183,27 +165,12 @@ object IvfIndex {
       psiThreshold: Double = 0.25): (DataFrame, Long) => Unit = {
     (batch, batchId) =>
       val spark = batch.sparkSession
-      val f = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val done = new org.apache.hadoop.fs.Path(
-        s"$path/_txn/b$batchId.done")
-      if (!f.exists(done) && !batch.isEmpty) {
+      // an empty micro-batch has nothing to train on or to score
+      if (!batch.isEmpty) {
         val vecs = batch.select(col(idCol),
           col(vecCol).cast("array<double>").as("vec"))
-        val pubMarker = new org.apache.hadoop.fs.Path(
-          s"$path/_txn/b$batchId.publish")
-        val isFirst = f.exists(pubMarker) ||
-          VersionedTable.latestVersion(spark, assignedPath(path)) == 0
-        if (isFirst) {
-          f.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_txn"))
-          try f.create(pubMarker, false).close()
-          catch { case _: java.io.IOException => () }
-          publish(vecs, idCol, "vec", path, cells, trainIters)
-          seedReference(spark, path, batchId)
-          f.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_txn"))
-          try f.create(done, false).close()
-          catch { case _: java.io.IOException => () } // lost claim: done
-        } else {
+        graft.core.TxnJournal.ingestOnce(spark, path, batchId,
+            assignedPath(path), journalPaths(path), prepare = {
           // upgrade path: an index created by the drift-UNAWARE sink
           // has no refdist/driftlog yet; they must exist (v >= 1)
           // BEFORE the journal pins them, or a crash rollback would
@@ -215,56 +182,56 @@ object IvfIndex {
             VersionedTable.commitOverwrite(
               vecs.select(col(idCol)).filter(lit(false)),
               deletesPath(path))
-          graft.core.TxnJournal.exactlyOnce(spark, path, batchId,
-            journalPaths(path)) {
-            val codebook = readCodebook(spark, path)
-            val batchAssigned = assign(vecs, idCol, "vec", codebook)
-            val p = graft.ops.DriftMonitor.psiFromCounts(
-                VersionedTable.read(spark, refDistPath(path)),
-                cellHistogram(batchAssigned), cells)
-              .agg(max(col("psi"))).collect()(0).getDouble(0)
-            if (p <= psiThreshold) {
-              VersionedTable.commitAppend(batchAssigned,
-                assignedPath(path))
-              VersionedTable.commitAppend(
-                driftRow(spark, batchId, p, retrained = false),
-                driftLogPath(path))
-            } else {
-              // breach: retrain on current snapshot + batch, rebuild.
-              // Tombstoned vectors are PURGED here: excluded from the
-              // retrain corpus and the rebuilt assignments, then the
-              // deletes table resets — all inside this journal, so a
-              // crash-replay re-purges consistently
-              val corpus = VersionedTable
-                .read(spark, assignedPath(path))
-                .join(VersionedTable.read(spark, deletesPath(path)),
-                  Seq(idCol), "left_anti")
-                .select(col(idCol), col("vec"))
-                .unionByName(vecs)
-              val cb2 = SimilarityOps.kmeansTrain(
-                corpus, idCol, "vec", cells, math.max(1, trainIters))
-              import spark.implicits._
-              VersionedTable.commitOverwrite(
-                cb2.zipWithIndex
-                  .map { case (v, i) => (i, v.toSeq) }.toSeq
-                  .toDF("cell", "centroid"),
-                codebookPath(path))
-              VersionedTable.commitOverwrite(
-                assign(corpus, idCol, "vec", cb2), assignedPath(path))
-              // reference histogram from the COMMITTED rebuild (not a
-              // recomputed plan) so refdist always matches assigned
-              VersionedTable.commitOverwrite(
-                cellHistogram(VersionedTable.read(spark,
-                  assignedPath(path))), refDistPath(path))
-              VersionedTable.commitAppend(
-                driftRow(spark, batchId, p, retrained = true),
-                driftLogPath(path))
-              VersionedTable.commitOverwrite(
-                vecs.select(col(idCol)).filter(lit(false)),
-                deletesPath(path))
-            }
+        }) {
+          publish(vecs, idCol, "vec", path, cells, trainIters)
+          seedReference(spark, path, batchId)
+        } {
+          val codebook = readCodebook(spark, path)
+          val batchAssigned = assign(vecs, idCol, "vec", codebook)
+          val p = graft.ops.DriftMonitor.psiFromCounts(
+              VersionedTable.read(spark, refDistPath(path)),
+              cellHistogram(batchAssigned), cells)
+            .agg(max(col("psi"))).collect()(0).getDouble(0)
+          if (p <= psiThreshold) {
+            VersionedTable.commitAppend(batchAssigned,
+              assignedPath(path))
+            VersionedTable.commitAppend(
+              driftRow(spark, batchId, p, retrained = false),
+              driftLogPath(path))
+          } else {
+            // breach: retrain on current snapshot + batch, rebuild.
+            // Tombstoned vectors are PURGED here: excluded from the
+            // retrain corpus and the rebuilt assignments, then the
+            // deletes table resets — all inside this journal, so a
+            // crash-replay re-purges consistently
+            val corpus = VersionedTable
+              .read(spark, assignedPath(path))
+              .join(VersionedTable.read(spark, deletesPath(path)),
+                Seq(idCol), "left_anti")
+              .select(col(idCol), col("vec"))
+              .unionByName(vecs)
+            val cb2 = SimilarityOps.kmeansTrain(
+              corpus, idCol, "vec", cells, math.max(1, trainIters))
+            import spark.implicits._
+            VersionedTable.commitOverwrite(
+              cb2.zipWithIndex
+                .map { case (v, i) => (i, v.toSeq) }.toSeq
+                .toDF("cell", "centroid"),
+              codebookPath(path))
+            VersionedTable.commitOverwrite(
+              assign(corpus, idCol, "vec", cb2), assignedPath(path))
+            // reference histogram from the COMMITTED rebuild (not a
+            // recomputed plan) so refdist always matches assigned
+            VersionedTable.commitOverwrite(
+              cellHistogram(VersionedTable.read(spark,
+                assignedPath(path))), refDistPath(path))
+            VersionedTable.commitAppend(
+              driftRow(spark, batchId, p, retrained = true),
+              driftLogPath(path))
+            VersionedTable.commitOverwrite(
+              vecs.select(col(idCol)).filter(lit(false)),
+              deletesPath(path))
           }
-          ()
         }
       }
   }
@@ -286,22 +253,17 @@ object IvfIndex {
   /** Streaming SERVING tap — the dense twin of
     * [[Bm25Index.foreachBatchServe]]: each query micro-batch probes
     * the index's current snapshot, ranked results (+`_batch_id`)
-    * append to a versioned log under the same marker idempotence
-    * (replays skip the search). */
+    * append to a versioned log once per batch
+    * ([[graft.core.VersionedTable.appendBatch]]; replays skip the
+    * search). */
   def foreachBatchServe(indexPath: String, logPath: String,
       queryIdCol: String, vecCol: String, idCol: String, k: Int,
       nprobe: Int = 4): (DataFrame, Long) => Unit = {
     (batch, batchId) =>
-      val inner = VersionedTable.foreachBatchAppend(logPath)
-      val spark = batch.sparkSession
-      val marker = new org.apache.hadoop.fs.Path(
-        s"$logPath/_commits/b$batchId")
-      val f = marker.getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      if (!f.exists(marker)) {
-        inner(searchFrom(spark, indexPath, batch, queryIdCol, vecCol,
-          idCol, k, nprobe, excludeSelf = false), batchId)
-      }
+      VersionedTable.appendBatch(batch.sparkSession, logPath, batchId)(
+        searchFrom(batch.sparkSession, indexPath, batch, queryIdCol,
+          vecCol, idCol, k, nprobe, excludeSelf = false))
+      ()
   }
 
   /** Physical purge of forgotten vectors without waiting for a drift

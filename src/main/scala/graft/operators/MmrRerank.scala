@@ -57,14 +57,11 @@ object MmrRerank {
       col(relCol).cast("double").as("__rel"))
     // PRECONDITION: corpus ids are unique (every declared caller joins
     // a primary-key corpus). A duplicated corpus id would fan the left
-    // join out — each duplicate row enters the greedy loop as its own
-    // candidate (selection is by id, so nothing double-selects, but
-    // the duplicate's vector choice is the row's own). The shortlist
-    // ceiling is enforced inside MmrSelect on the DISTINCT id count,
-    // so join fan-out can never spuriously fail a legal shortlist.
-    // (A semi-join + dedupe of the vecs side was measured at +0.9 s on
-    // q154 — two extra stages on the hot path to defend a documented
-    // precondition; the in-expression distinct count costs nothing.)
+    // join out, and MmrSelect fails any query whose packed rows exceed
+    // its distinct ids. (A semi-join + dedupe of the vecs side was
+    // measured at +0.9 s on q154 — two extra stages on the hot path to
+    // defend a documented precondition; the in-expression distinct
+    // count costs nothing.)
     //
     // left join: a candidate without a corpus vector still competes on
     // relevance and contributes no sim — the old pair frame's

@@ -38,24 +38,21 @@ object DriftMonitor {
     * pipeline tails the log for `psi > 0.25` rows. The reference is
     * materialized by the caller (a frozen training-time snapshot);
     * each batch costs one aggregation over the batch plus the bounded
-    * bucket math. Exactly-once per batch via the marker protocol (a
-    * single commitAppend, so no multi-table journal needed). */
+    * bucket math. Exactly-once per batch via
+    * [[graft.core.VersionedTable.oncePerBatch]] (a single
+    * commitAppend, so no multi-table journal needed). */
   def foreachBatchPsi(ref: DataFrame, valueCol: String,
       edges: Seq[Double], logPath: String, eps: Double = 1e-6)
       : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$logPath/_psi_commits/b$batchId")
-    val f = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(marker)) {
+    graft.core.VersionedTable.oncePerBatch(batch.sparkSession, logPath,
+        batchId) {
       graft.core.VersionedTable.commitAppend(
         psi(ref, batch, valueCol, edges, eps)
           .withColumn("batch_id", lit(batchId)),
         logPath)
-      f.mkdirs(new org.apache.hadoop.fs.Path(s"$logPath/_psi_commits"))
-      try f.create(marker, false).close()
-      catch { case _: java.io.IOException => () } // lost claim: done
+      ()
     }
+    ()
   }
 
   /** Per-bucket drift table: (bucket, n_ref, n_cur, psi_term, psi) —
@@ -359,16 +356,13 @@ object DriftMonitor {
     * re-scanning a raw reference slice per batch is the scale tax
     * [[psiFromCounts]]'s doc warns about) and appends the one-row KS
     * verdict, tagged with the batch id, to a [[graft.core
-    * .VersionedTable]] monitor log. Exactly-once per batch via the
-    * same marker protocol as [[foreachBatchPsi]]. */
+    * .VersionedTable]] monitor log. Exactly-once per batch via
+    * [[graft.core.VersionedTable.oncePerBatch]]. */
   def foreachBatchKs(refCounts: DataFrame, valueCol: String,
       logPath: String, maxSupport: Int = 1 << 20, coarsenTo: Int = 0)
       : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$logPath/_ks_commits/b$batchId")
-    val f = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(marker)) {
+    graft.core.VersionedTable.oncePerBatch(batch.sparkSession, logPath,
+        batchId) {
       val dt = batch.schema(valueCol).dataType.simpleString
       require(Seq("bigint", "int", "smallint", "tinyint").contains(dt),
         s"foreachBatchKs needs an integral (quantized) value column; " +
@@ -383,10 +377,9 @@ object DriftMonitor {
         ksGuarded(refCounts, curCounts, maxSupport, coarsenTo)
           .withColumn("batch_id", lit(batchId)),
         logPath)
-      f.mkdirs(new org.apache.hadoop.fs.Path(s"$logPath/_ks_commits"))
-      try f.create(marker, false).close()
-      catch { case _: java.io.IOException => () } // lost claim: done
+      ()
     }
+    ()
   }
 
   /** KS from PRE-AGGREGATED (v, n) count tables — for monitors whose

@@ -160,6 +160,12 @@ object MaintainedView {
     val vView =
       if (statePin.isEmpty) vTarget
       else VersionedTable.latestVersion(spark, viewPath)
+    // a table with files but no rows (a zero-row commit still writes
+    // one empty file) has no row to carry the reflected version: it is
+    // current while the base holds no rows either
+    if (head.get(0) == null &&
+        VersionedTable.read(spark, basePath, Some(vBase)).isEmpty)
+      return MaintainResult(vView, "noop", 0)
     // crash window: the view ahead of the state's pin means the last
     // maintain died between its two commits
     if (statePin.isDefined && Option(head.get(pinned.size))

@@ -116,9 +116,10 @@ object DeterministicSample {
     * [[weightedTopK]] over everything ingested so far (the
     * batch-order-invariance spec pins this), and the update is
     * IDEMPOTENT (id-dedup before ranking), so a crash between the
-    * overwrite and the marker replays to the same state — no journal
-    * needed. Contract: ids are unique across batches (append-only
-    * corpus, the [[graft.operators.Bm25Index]] ingestion discipline).
+    * overwrite and the [[graft.core.VersionedTable.oncePerBatch]]
+    * marker replays to the same state — no journal needed. Contract:
+    * ids are unique across batches (append-only corpus, the
+    * [[graft.operators.Bm25Index]] ingestion discipline).
     *
     * Per batch cost: the batch scan + a k-row state read; the merge
     * ranks (k + |batch|) rows through the bounded heap. */
@@ -126,26 +127,23 @@ object DeterministicSample {
       weightCol: String, k: Int, seed: String)
       : (DataFrame, Long) => Unit = { (batch, batchId) =>
     val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$path/_commits/b$batchId")
-    val f = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(marker) && !batch.isEmpty) {
-      val keyed = batch.filter(col(weightCol) > 0)
-        .select(col(idCol),
-          aesKey(idCol, weightCol, seed).as("__key"))
-      val merged =
-        if (graft.core.VersionedTable.latestVersion(spark, path) == 0)
-          keyed
-        else graft.core.VersionedTable.read(spark, path)
-          .select(col(idCol), col("__key"))
-          .unionByName(keyed)
-          .dropDuplicates(idCol)
-      graft.core.VersionedTable.commitOverwrite(
-        rankByAesKey(merged, idCol, k), path)
-      f.mkdirs(marker.getParent)
-      try f.create(marker, false).close()
-      catch { case _: java.io.IOException => () } // lost claim: done
+    graft.core.VersionedTable.oncePerBatch(spark, path, batchId) {
+      if (!batch.isEmpty) {
+        val keyed = batch.filter(col(weightCol) > 0)
+          .select(col(idCol),
+            aesKey(idCol, weightCol, seed).as("__key"))
+        val merged =
+          if (graft.core.VersionedTable.latestVersion(spark, path) == 0)
+            keyed
+          else graft.core.VersionedTable.read(spark, path)
+            .select(col(idCol), col("__key"))
+            .unionByName(keyed)
+            .dropDuplicates(idCol)
+        graft.core.VersionedTable.commitOverwrite(
+          rankByAesKey(merged, idCol, k), path)
+      }
     }
+    ()
   }
 
   /** The current reservoir, ranked 1..k with rounded keys (the

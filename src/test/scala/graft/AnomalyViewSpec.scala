@@ -200,6 +200,21 @@ class AnomalyViewSpec extends SparkTestBase {
       "replayed batch must not commit a new log version")
   }
 
+  test("a zero-row base overwrite maintains once, then noops") {
+    // the view keeps files but no rows, so no row carries the version
+    // it reflects: the base holding no rows either makes it current
+    val root = tmp()
+    val (base, log) = (s"$root/base", s"$root/log")
+    val seed = rows(("a", 1L, 10.0), ("a", 2L, 12.0))
+    VersionedTable.commitAppend(seed, base)
+    assert(maintain(base, log).mode === "init")
+    VersionedTable.commitOverwrite(seed.limit(0), base)
+    val rs = (1 to 3).map(_ => maintain(base, log))
+    assert(rs.map(_.mode) === Seq("full", "noop", "noop"))
+    assert(rs.map(_.version).distinct.size === 1)
+    assert(rs.head.version === VersionedTable.latestVersion(spark, log))
+  }
+
   test("an emptied base commits an empty view, then noops") {
     val root = tmp()
     val (base, log) = (s"$root/base", s"$root/log")

@@ -100,7 +100,7 @@ class Bm25ForgetSpec extends SparkTestBase {
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_txn"))
     val out = fs.create(
       new org.apache.hadoop.fs.Path(s"$path/_txn/f1"), false)
-    out.write(pinned.mkString(" ").getBytes("UTF-8")); out.close()
+    out.write(namedIntent(subs, pinned).getBytes("UTF-8")); out.close()
     VersionedTable.commitOverwrite(
       Seq(("junktoken", 123L)).toDF("token", "df"), s"$path/termstats")
     // the real op with the same opId: rollback junk, apply
@@ -171,7 +171,7 @@ class Bm25ForgetSpec extends SparkTestBase {
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_txn"))
     val out = fs.create(
       new org.apache.hadoop.fs.Path(s"$path/_txn/f7"), false)
-    out.write(pinned.mkString(" ").getBytes("UTF-8")); out.close()
+    out.write(namedIntent(subs, pinned).getBytes("UTF-8")); out.close()
     VersionedTable.commitOverwrite(
       Seq((1L, 1L)).toDF("n_docs", "sum_dl"), s"$path/stats")
     val pin = graft.operators.HybridServe.pinConsistent(

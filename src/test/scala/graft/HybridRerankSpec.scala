@@ -123,6 +123,23 @@ class HybridRerankSpec extends SparkTestBase {
     assert(out.map(_.getInt(3)).sorted.toSeq == Seq(1, 2))
   }
 
+  test("mmr: a duplicated corpus id fails loudly, naming the " +
+      "precondition") {
+    // id 0 twice with different vectors: the duplicates would tie on
+    // (score, id) and pick by collect order, so the query must fail
+    val corpus = Seq((0L, Seq(1.0f, 0.0f)), (0L, Seq(0.0f, 1.0f)),
+      (1L, Seq(0.0f, 1.0f))).toDF("vec_id", "embedding")
+    val cands = Seq((5L, 0L, 0.9), (5L, 1L, 0.8))
+      .toDF("query_id", "neighbor_id", "cos_sim")
+    val e = intercept[Exception] {
+      MmrRerank.rerank(cands, "cos_sim", corpus, "vec_id",
+        "embedding", k = 2, lambda = 0.7).collect()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).exists(t => Option(t.getMessage)
+        .exists(_.contains("unique-id corpus"))), e.toString)
+  }
+
   // ---- KnnClassifier ---------------------------------------------------
 
   test("knn classifier: separable clumps classify correctly via the " +

@@ -124,17 +124,18 @@ class HybridServeSpec extends SparkTestBase {
     // intent (no done-marker) + partially-landed junk commits
     val fs = new org.apache.hadoop.fs.Path(bm).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    def forgeIntent(root: String, pinned: Seq[Int]): Unit = {
+    def forgeIntent(root: String, subs: Seq[String], pinned: Seq[Int])
+        : Unit = {
       fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/_txn"))
       val out = fs.create(
         new org.apache.hadoop.fs.Path(s"$root/_txn/b9"), false)
-      out.write(pinned.mkString(" ").getBytes("UTF-8")); out.close()
+      out.write(namedIntent(subs, pinned).getBytes("UTF-8")); out.close()
     }
-    forgeIntent(bm, bmPin)
+    forgeIntent(bm, Bm25Index.componentPaths(bm), bmPin)
     VersionedTable.commitAppend(
       Seq((424242L, "junktoken", 99L)).toDF("doc_id", "token", "tf"),
       s"$bm/postings")
-    forgeIntent(ivf, ivfPin)
+    forgeIntent(ivf, IvfIndex.journalPaths(ivf), ivfPin)
     VersionedTable.commitOverwrite(
       (0 until 8).map(c => (c, Seq.fill(64)(9.9))).toDF("cell", "centroid"),
       s"$ivf/codebook")
@@ -155,16 +156,16 @@ class HybridServeSpec extends SparkTestBase {
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/_txn"))
-    // open NAMED intent from a sink generation with different arity
-    // (pins a and a table c this reader doesn't serve): legacy
-    // arity-matching would ignore it entirely; named pins must still
+    // open intent from a sink generation with different arity (pins
+    // a and a table c this reader doesn't serve): named pins must
     // clamp a to its pinned version while leaving b at latest
     val out = fs.create(
       new org.apache.hadoop.fs.Path(s"$root/_txn/b5"), false)
     out.write("a:1 c:3".getBytes("UTF-8")); out.close()
     assert(HybridServe.pinConsistent(spark, root, Seq(a, b))
       === Seq(1, 1))
-    // legacy bare intent of mismatched arity is still ignored
+    // a bare-version intent has no named entry: serving skips it as
+    // malformed (its replay fails loudly)
     val out2 = fs.create(
       new org.apache.hadoop.fs.Path(s"$root/_txn/b6"), false)
     out2.write("0 0 0".getBytes("UTF-8")); out2.close()

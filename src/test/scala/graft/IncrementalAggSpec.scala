@@ -832,6 +832,22 @@ class IncrementalAggSpec extends SparkTestBase {
       s"merge should plan exactly one exchange, got $exchanges:\n$plan")
   }
 
+  test("a zero-row base overwrite maintains once, then noops") {
+    // the view keeps files but no rows, so no row carries the version
+    // it reflects: the base holding no rows either makes it current
+    val root = tmp()
+    val (base, agg) = (s"$root/base", s"$root/agg")
+    def maintain() = IncrementalAgg.maintain(spark, base, agg, Seq("k"), "v")
+    val seed = Seq(("a", 1L), ("b", 2L)).toDF("k", "v")
+    VersionedTable.commitAppend(seed, base)
+    assert(maintain().mode === "init")
+    VersionedTable.commitOverwrite(seed.limit(0), base)
+    val rs = (1 to 3).map(_ => maintain())
+    assert(rs.map(_.mode) === Seq("full", "noop", "noop"))
+    assert(rs.map(_.version).distinct.size === 1)
+    assert(rs.head.version === VersionedTable.latestVersion(spark, agg))
+  }
+
   test("an emptied base commits an empty view, then noops") {
     val root = tmp()
     val (base, agg) = (s"$root/base", s"$root/agg")

@@ -126,7 +126,7 @@ class IvfDriftSpec extends SparkTestBase {
       spark.sparkContext.hadoopConfiguration)
     val out = fs.create(
       new org.apache.hadoop.fs.Path(s"$path/_txn/b2"), false)
-    out.write(v1.mkString(" ").getBytes("UTF-8")); out.close()
+    out.write(namedIntent(subs, v1).getBytes("UTF-8")); out.close()
     VersionedTable.commitAppend(
       Seq((0, 99999L, vec(9.0, 9.0, 9.0))).toDF("cell", "vec_id", "vec"),
       s"$path/assigned")

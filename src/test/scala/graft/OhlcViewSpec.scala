@@ -182,6 +182,21 @@ class OhlcViewSpec extends SparkTestBase {
       "replayed batch must not commit a new gold version")
   }
 
+  test("a zero-row base overwrite maintains once, then noops") {
+    // the view keeps files but no rows, so no row carries the version
+    // it reflects: the base holding no rows either makes it current
+    val root = tmp()
+    val (base, gold) = (s"$root/base", s"$root/gold")
+    val seed = rows(("a", 1L, 5.0), ("b", 2L, 3.0))
+    VersionedTable.commitAppend(seed, base)
+    assert(maintain(base, gold).mode === "init")
+    VersionedTable.commitOverwrite(seed.limit(0), base)
+    val rs = (1 to 3).map(_ => maintain(base, gold))
+    assert(rs.map(_.mode) === Seq("full", "noop", "noop"))
+    assert(rs.map(_.version).distinct.size === 1)
+    assert(rs.head.version === VersionedTable.latestVersion(spark, gold))
+  }
+
   test("an emptied base commits an empty view, then noops") {
     val root = tmp()
     val (base, gold) = (s"$root/base", s"$root/gold")

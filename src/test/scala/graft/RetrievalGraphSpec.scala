@@ -289,7 +289,7 @@ class RetrievalGraphSpec extends SparkTestBase {
       spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/_txn"))
     val out = fs.create(new org.apache.hadoop.fs.Path(s"$path/_txn/b2"), false)
-    out.write(pinned.mkString(" ").getBytes("UTF-8")); out.close()
+    out.write(namedIntent(subs, pinned).getBytes("UTF-8")); out.close()
     VersionedTable.commitAppend(
       Seq((999L, "zzz", 7L)).toDF("doc_id", "token", "tf"),
       s"$path/postings")
@@ -348,7 +348,7 @@ class RetrievalGraphSpec extends SparkTestBase {
     val pinned = graft.core.VersionedTable
       .latestVersion(spark, s"$path/assigned")
     val out = fs.create(new org.apache.hadoop.fs.Path(s"$path/_txn/b2"), false)
-    out.write(pinned.toString.getBytes("UTF-8")); out.close()
+    out.write(s"assigned:$pinned".getBytes("UTF-8")); out.close()
     graft.core.VersionedTable.commitAppend(
       Seq((0, 99999L, Seq(0.0))).toDF("cell", "vec_id", "vec"),
       s"$path/assigned")

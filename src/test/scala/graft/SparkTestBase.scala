@@ -23,4 +23,11 @@ trait SparkTestBase extends AnyFunSuite {
       .create(p, false)
     try out.write("#done\n".getBytes("UTF-8")) finally out.close()
   }
+
+  /** A [[graft.core.TxnJournal]] intent line pinning each of `subs`
+    * at the matching version of `versions` (for forging a crash). */
+  def namedIntent(subs: Seq[String], versions: Seq[Int]): String =
+    subs.zip(versions)
+      .map { case (s, v) => s"${graft.core.TxnJournal.seg(s)}:$v" }
+      .mkString(" ")
 }

@@ -214,39 +214,6 @@ class VersionedTableSpec extends SparkTestBase {
     } finally spark.conf.unset("spark.graft.manifest.pollMs")
   }
 
-  test("pre-terminator manifests read as complete past the cutoff") {
-    val path = tbl()
-    VersionedTable.commitAppend(Seq((1L, "a")).toDF("id", "v"), path)
-    // rewrite v1 as a legacy-format manifest: same file list, no
-    // terminator, mtime before the declared format cutoff
-    val m1 = java.nio.file.Paths.get(s"$path/_manifests/v00001.json")
-    val legacyLines = scala.jdk.CollectionConverters
-      .ListHasAsScala(java.nio.file.Files.readAllLines(m1)).asScala
-      .filterNot(_ == "#done")
-    java.nio.file.Files.writeString(m1,
-      legacyLines.mkString("", "\n", "\n"))
-    // the original commit left a Hadoop LocalFileSystem checksum for
-    // the terminated content — drop it, as a genuinely legacy-written
-    // manifest's crc would match its own content
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$path/_manifests/.v00001.json.crc"))
-    spark.conf.set("spark.graft.manifest.pollMs", "200")
-    spark.conf.set("spark.graft.manifest.formatCutoffMs",
-      (System.currentTimeMillis() + 1000L).toString)
-    try {
-      // readable as-is, and a new commit builds on it instead of
-      // reclaiming it as a crashed half-publish
-      assert(VersionedTable.read(spark, path)
-        .select("id").as[Long].collect().toSeq == Seq(1L))
-      VersionedTable.commitAppend(Seq((2L, "b")).toDF("id", "v"), path)
-      assert(VersionedTable.read(spark, path)
-        .select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
-    } finally {
-      spark.conf.unset("spark.graft.manifest.pollMs")
-      spark.conf.unset("spark.graft.manifest.formatCutoffMs")
-    }
-  }
-
   test("latestVersion ignores reclaim temp files") {
     val path = tbl()
     VersionedTable.commitAppend(Seq((1L, "a")).toDF("id", "v"), path)
@@ -515,10 +482,10 @@ class VersionedTableSpec extends SparkTestBase {
   }
 
   test("journal replay of a pre-upgrade intent rolls back the prefix") {
-    // sub-table lists may only grow by APPENDING (BM25's deletes was
-    // added as a 5th component); an intent written before the growth
-    // pins fewer tables — replay must roll back exactly those, not
-    // throw and jam the stream
+    // a sub-table list can grow (BM25's deletes was added as a 5th
+    // component); an intent written before the growth pins fewer
+    // tables — replay must roll back exactly those, not throw and jam
+    // the stream
     val root = Files.createTempDirectory("txn").toString
     val (a, b) = (s"$root/a", s"$root/b")
     VersionedTable.commitAppend(Seq(1L).toDF("id"), a)
@@ -530,7 +497,7 @@ class VersionedTableSpec extends SparkTestBase {
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/_txn"))
     val out = fs.create(
       new org.apache.hadoop.fs.Path(s"$root/_txn/b7"), false)
-    out.write("1".getBytes("UTF-8")); out.close()
+    out.write("a:1".getBytes("UTF-8")); out.close()
     VersionedTable.commitAppend(Seq(2L).toDF("id"), a)
     // replay under the GROWN list (a, b): rolls back a to v1, leaves
     // b untouched, then re-applies over both
@@ -548,11 +515,11 @@ class VersionedTableSpec extends SparkTestBase {
     // corruption: fail with the remediation message, never guess
     val out2 = fs.create(
       new org.apache.hadoop.fs.Path(s"$root/_txn/b8"), false)
-    out2.write("1 1 1".getBytes("UTF-8")); out2.close()
+    out2.write("a:1 b:1 c:1".getBytes("UTF-8")); out2.close()
     val e = intercept[IllegalArgumentException] {
       graft.core.TxnJournal.exactlyOnce(spark, root, 8L, Seq(a, b))(())
     }
-    assert(e.getMessage.contains("only grow by appending"))
+    assert(e.getMessage.contains("the caller did not pass"))
   }
 
   test("commitDelete is file-granular: untouched files carry by reference") {
@@ -906,11 +873,7 @@ class VersionedTableSpec extends SparkTestBase {
     assert(e2.getMessage.contains("zz"))
   }
 
-  test("legacy replay survives colliding segments; named guards are loud") {
-    // two sub-tables sharing a last path segment — LEGAL under the
-    // legacy positional format. The named-format invariants (segment
-    // uniqueness, no whitespace) must not block replay of a valid
-    // pre-upgrade intent, or the crashed batch becomes unrecoverable
+  test("named guards are loud; a bare-version intent fails replay") {
     val root = Files.createTempDirectory("txn3").toString
     val (a, b) = (s"$root/x/events", s"$root/y/events")
     VersionedTable.commitAppend(Seq(1L).toDF("id"), a)
@@ -918,22 +881,8 @@ class VersionedTableSpec extends SparkTestBase {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/_txn"))
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$root/_txn/b12"), false)
-    out.write("1 1".getBytes("UTF-8")); out.close()
-    // the crashed apply half-landed an append to a
-    VersionedTable.commitAppend(Seq(2L).toDF("id"), a)
-    val ran = graft.core.TxnJournal.exactlyOnce(spark, root, 12L,
-      Seq(a, b)) {
-      VersionedTable.commitAppend(Seq(3L).toDF("id"), a)
-    }
-    assert(ran)
-    assert(VersionedTable.read(spark, a).select("id").as[Long]
-      .collect().sorted.toSeq == Seq(1L, 3L))
-    assert(VersionedTable.read(spark, b).select("id").as[Long]
-      .collect().sorted.toSeq == Seq(10L))
-    // ... but writing a NEW (named) intent over colliding segments is
-    // refused loudly — the names would be ambiguous pins
+    // writing an intent over colliding segments is refused loudly —
+    // the names would be ambiguous pins
     val e = intercept[IllegalArgumentException] {
       graft.core.TxnJournal.exactlyOnce(spark, root, 13L, Seq(a, b))(())
     }
@@ -964,14 +913,44 @@ class VersionedTableSpec extends SparkTestBase {
       graft.core.TxnJournal.exactlyOnce(spark, root, 16L, Seq(a))(())
     }
     assert(e4.getMessage.contains("non-numeric"))
-    // the LEGACY (bare-version) branch gets the same loud remediation
-    // for a truncated write, not a raw NumberFormatException
+    // a bare-version intent (no names) is not a format replay reads:
+    // it fails with the same remediation, never a positional guess
     val out4 = fs.create(
       new org.apache.hadoop.fs.Path(s"$root/_txn/b17"), false)
-    out4.write("12 3a".getBytes("UTF-8")); out4.close()
+    out4.write("1".getBytes("UTF-8")); out4.close()
     val e5 = intercept[IllegalArgumentException] {
-      graft.core.TxnJournal.exactlyOnce(spark, root, 17L, Seq(a, b))(())
+      graft.core.TxnJournal.exactlyOnce(spark, root, 17L, Seq(a))(())
     }
-    assert(e5.getMessage.contains("not a version number"))
+    assert(e5.getMessage.contains("no ':'") &&
+      e5.getMessage.contains("resolve the crashed batch manually"))
+  }
+
+  test("merge, delete, replace-where and compact label their data writes") {
+    // every commit-dir write (its shuffle job included) runs under the
+    // `commit <table>` job label. The job totals are the ones measured
+    // before these writes carried it, when all of them were `unlabeled`
+    val path = tbl()
+    (0 until 4).foreach(i => VersionedTable.commitAppend(
+      Seq((i.toLong, s"v$i")).toDF("id", "v").coalesce(1), path))
+    val ops = Seq(
+      ("merge", 5, Map("commit" -> 2, "unlabeled" -> 3),
+        counted(VersionedTable.commitMerge(
+          Seq((1L, "m")).toDF("id", "v"), path, Seq("id")))),
+      ("delete", 5, Map("commit" -> 2, "unlabeled" -> 3),
+        counted(VersionedTable.commitDelete(spark, path,
+          Seq(2L).toDF("id"), Seq("id")))),
+      ("replace-where", 6,
+        Map("commit" -> 1, "scratch" -> 1, "unlabeled" -> 4),
+        counted(VersionedTable.commitReplaceWhere(spark, path,
+          Seq((3L, "r")).toDF("id", "v"), col("id") === 3L))),
+      ("compact", 2, Map("commit" -> 1, "unlabeled" -> 1),
+        counted(VersionedTable.compact(spark, path))))
+    for ((op, jobs, labels, c) <- ops) {
+      assert(c.jobs == jobs, s"$op ran ${c.json}")
+      assert(c.jobsByLabel == labels, s"$op ran ${c.json}")
+    }
+    assert(VersionedTable.files(spark, path).size == 1)
+    assert(VersionedTable.read(spark, path).as[(Long, String)].collect()
+      .sorted.toSeq == Seq((0L, "v0"), (1L, "m"), (3L, "r")))
   }
 }
