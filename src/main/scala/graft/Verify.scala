@@ -2,10 +2,11 @@ package graft
 import graft.core.Sessions
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
-  * oracle_sql.json for the DuckDB oracle compare, and
-  * failures.json (`{name: "<class>: <message>"}`) naming every query
-  * that threw, so the compare counts it as a fail instead of missing
-  * its directory. */
+  * oracle_sql.json for the DuckDB oracle compare, rows_only.json
+  * (`{name: reason}`) naming why each query without an oracle has
+  * none, and failures.json (`{name: "<class>: <message>"}`) naming
+  * every query that threw, so the compare counts it as a fail instead
+  * of missing its directory. */
 object Verify {
   /** JSON string literal: escapes backslash, quote, and ALL control
     * chars (<0x20) — a tab or CR in oracle SQL would otherwise make
@@ -29,12 +30,6 @@ object Verify {
     // out dir pull their fixture query in automatically — a filter
     // selecting only q24 would otherwise compare against a missing or
     // stale fixture and silently mis-verify.
-    val fixtureDeps = Map(
-      "q24_minhash_neardups" -> "q104_minhash_band_fixture",
-      "q25_simhash_neardups" -> "q103_simhash_fixture",
-      "q30_embedding_neardups" -> "q105_lsh_bucket_fixture",
-      "q187_compress_gate" -> "q171_compress_ratio",
-      "q196_image_ann_ivf" -> "q192_image_resize")
     val only: Option[Set[String]] =
       if (args.length > 2) {
         val asked = args(2).split(",").toSet
@@ -43,7 +38,8 @@ object Verify {
         require(unknown.isEmpty,
           s"unknown query name(s): ${unknown.mkString(", ")} — " +
             s"valid names are in SparkEntry.queries")
-        Some(asked ++ asked.flatMap(fixtureDeps.get))
+        Some(asked ++ Queries.catalog.filter(q => asked(q.name))
+          .flatMap(_.fixtures))
       } else None
     val spark = Sessions.local(Sessions.envCores, "graft-verify")
     new java.io.File(outDir).mkdirs()
@@ -72,6 +68,10 @@ object Verify {
           jsonString(v.replace("__VERIFY_OUT__", outAbs)) }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/rows_only.json"), Queries.catalog
+      .collect { case Query(k, _, Oracle.RowsOnly(why)) =>
+        s"${jsonString(k)}: ${jsonString(why)}" }
+      .mkString("{", ",", "}"))
     spark.stop()
   }
 }

@@ -1224,13 +1224,11 @@ object VersionedTable {
     // evolved tables must merge footers here: the small files can have
     // heterogeneous (additive) schemas, and a plain read would rewrite
     // them to whichever sampled footer won — silently dropping the
-    // evolved column from the compacted files
-    val rd =
-      if (f.exists(evolvedMarker(path)))
-        spark.read.option("mergeSchema", "true")
-      else spark.read
-    val (commitDir, newFiles) =
-      writeCommitDir(rd.parquet(small.map(_._1): _*).coalesce(nOut), path)
+    // evolved column from the compacted files. readFileSubset merges
+    // them, and resolves the schema on the driver instead of in a
+    // footer-inference job
+    val (commitDir, newFiles) = writeCommitDir(
+      readFileSubset(spark, path, small.map(_._1)).coalesce(nOut), path)
     claimVersion(spark, path, vPrev + 1, big.map(_._1) ++ newFiles) match {
       case Won => vPrev + 1
       case Lost | Fenced(_) =>

@@ -61,7 +61,7 @@ class AnonymitySpec extends SparkTestBase {
   }
 
   test("q165 runs and matches a direct group-by") {
-    val df = Queries.all("q165_k_anonymity")(spark,
+    val df = SparkEntry.queries("q165_k_anonymity")(spark,
       "/root/testdata/sf0.001")
     val direct = graft.core.Tables
       .load(spark, "/root/testdata/sf0.001", "customer")

@@ -73,7 +73,7 @@ class GzipDecodeSpec extends SparkTestBase {
   }
 
   test("q162 matches the generator's closed form on a spot doc") {
-    val df = Queries.all("q162_gzip_decode")(spark, "unused")
+    val df = SparkEntry.queries("q162_gzip_decode")(spark, "unused")
     assert(df.count() == 80) // every third payload is corrupted
     val i = 7
     val r = df.filter(col("doc_id") === i).collect().head

@@ -89,7 +89,7 @@ class JaroWinklerSpec extends SparkTestBase {
   }
 
   test("q164 blocked linkage returns plausible scored pairs") {
-    val df = Queries.all("q164_jaro_link")(spark, "/root/testdata/sf0.001")
+    val df = SparkEntry.queries("q164_jaro_link")(spark, "/root/testdata/sf0.001")
     val rows = df.collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

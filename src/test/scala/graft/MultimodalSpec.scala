@@ -302,7 +302,7 @@ class MultimodalSpec extends SparkTestBase {
   test("decode queries agree with the generator's closed forms") {
     // spot-check one BMP asset end-to-end: decoded means equal the
     // formula means (the full cross-check is the q127/q128 oracle)
-    val df = Queries.all("q127_bmp_decode")(spark, "unused")
+    val df = SparkEntry.queries("q127_bmp_decode")(spark, "unused")
     val r = df.filter(col("asset_id") === 12).collect().head
     val (w, h) = (8 + 12 % 9, 6 + 12 % 7)
     val pix = for (x <- 0 until w; y <- 0 until h)

@@ -44,7 +44,7 @@ class NfcNormalizeSpec extends SparkTestBase {
   }
 
   test("q163 matches the JDK normalizer on a spot doc") {
-    val df = Queries.all("q163_nfc_normalize")(spark, "unused")
+    val df = SparkEntry.queries("q163_nfc_normalize")(spark, "unused")
     assert(df.count() == 90)
     val i = 11
     val r = df.filter(col("doc_id") === i).collect().head

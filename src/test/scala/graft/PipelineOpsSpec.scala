@@ -118,7 +118,7 @@ class PipelineOpsSpec extends SparkTestBase {
     // hashes, and counts — the text column stays map-side only
     val sfDir = "/root/testdata/sf0.001"
     for (name <- Seq("q65_decontam", "q68_corpus_mix")) {
-      val df = Queries.all(name)(spark, sfDir)
+      val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect()
       val shuffled = PlanAsserts
         .collectPlan(df.queryExecution.executedPlan)

@@ -86,7 +86,7 @@ class PngDecodeSpec extends SparkTestBase {
   }
 
   test("q161 matches the generator's closed form on a spot asset") {
-    val df = Queries.all("q161_png_decode")(spark, "unused")
+    val df = SparkEntry.queries("q161_png_decode")(spark, "unused")
     // 80 of 120 assets decode (every third is noise)
     assert(df.count() == 80)
     val i = 13 // i % 3 == 1 → RGBA

@@ -165,7 +165,7 @@ class SimilaritySpec extends SparkTestBase {
     // which measures 0.82 here) turns this red instead of passing.
     // Current config (nprobe=4, rerank=100) measures 0.92 at sf0.01;
     // the search is deterministic, so 0.90 is real headroom.
-    val recalls = Queries.all("q118_ann_recall")(
+    val recalls = SparkEntry.queries("q118_ann_recall")(
       spark, "/root/testdata/sf0.01")
       .select(col("recall_at_5").cast("double")).collect()
       .map(_.getDouble(0))
@@ -181,7 +181,7 @@ class SimilaritySpec extends SparkTestBase {
     // cell-assignment + probe plumbing, so a silent nprobe/codebook
     // regression turns red instead of passing on "50 rows came back"
     val sf = "/root/testdata/sf0.01"
-    def pairs(q: String) = Queries.all(q)(spark, sf)
+    def pairs(q: String) = SparkEntry.queries(q)(spark, sf)
       .select(col("query_id").cast("long"),
         col("neighbor_id").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

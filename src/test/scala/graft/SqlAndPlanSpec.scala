@@ -38,9 +38,9 @@ class SqlAndPlanSpec extends SparkTestBase {
   test("oracle string-list literals escape embedded apostrophes") {
     // a stopword like don't spliced unescaped would terminate the SQL
     // literal early and break the q120 oracle
-    assert(Oracles.sqlStringList(Seq("don't", "the")) ==
+    assert(OracleSql.sqlStringList(Seq("don't", "the")) ==
       "['don''t', 'the']")
-    assert(Oracles.sqlStringList(Seq("it's")) == "['it''s']")
+    assert(OracleSql.sqlStringList(Seq("it's")) == "['it''s']")
   }
 
   // ---- plan assertions: the scale contract ---------------------------
@@ -60,7 +60,7 @@ class SqlAndPlanSpec extends SparkTestBase {
   }
 
   private def executedNodes(name: String): Seq[SparkPlan] = {
-    val df = Queries.all(name)(spark, sfDir)
+    val df = SparkEntry.queries(name)(spark, sfDir)
     df.collect() // force AQE to finalize
     collectPlan(df.queryExecution.executedPlan)
   }
@@ -114,7 +114,10 @@ class SqlAndPlanSpec extends SparkTestBase {
       "q226_incremental_ks", // same guard scalar-attach over the maintained histogram
       "q224_unigram_soft_em", // q182's scalar-attach over the soft-EM kept set
       "q227_unigram_train") // q224's scalar-attach per training round + the final vocab-sized rescore
-    Queries.all.keys.filterNot(allowed).toSeq.sorted.foreach { name =>
+    // a renamed query must fail here, not leave a dead allowance
+    val dead = allowed -- SparkEntry.queries.keySet
+    assert(dead.isEmpty, s"allowlisted names not in the catalog: $dead")
+    SparkEntry.queries.keys.filterNot(allowed).toSeq.sorted.foreach { name =>
       val cartesian = executedNodes(name).exists {
         case _: CartesianProductExec => true
         case b: org.apache.spark.sql.execution.joins
@@ -251,7 +254,7 @@ class SqlAndPlanSpec extends SparkTestBase {
     // permitted exchange is the deterministic output ordering
     Seq("q161_png_decode", "q162_gzip_decode", "q163_nfc_normalize")
       .foreach { n =>
-        val df = Queries.all(n)(spark, sfDir)
+        val df = SparkEntry.queries(n)(spark, sfDir)
         assert(PlanAsserts.countShuffles(df) <= 1,
           s"$n shuffled before the output sort")
       }
@@ -279,14 +282,14 @@ class SqlAndPlanSpec extends SparkTestBase {
     // shuffle (q201), and the bucket rollup (q205) likewise stays here
     for (q <- Seq("q200_ewvar", "q207_kalman", "q201_ew_anomaly",
         "q205_ohlc_bars", "q206_rolling_autocorr")) {
-      val df = Queries.all(q)(spark, sfDir)
+      val df = SparkEntry.queries(q)(spark, sfDir)
       assert(PlanAsserts.countShuffles(df) <= 3, s"$q over-shuffled")
     }
     // decomposition adds the slot-grain stats + centering + join back;
     // bound it so a future edit can't quietly go quadratic in
     // exchanges (collapse, keyed window, slot agg, slot window, join
     // sides, presentation sort)
-    val dec = Queries.all("q199_seasonal_decompose")(spark, sfDir)
+    val dec = SparkEntry.queries("q199_seasonal_decompose")(spark, sfDir)
     assert(PlanAsserts.countShuffles(dec) <= 7, "q199 over-shuffled")
   }
 
@@ -304,7 +307,7 @@ class SqlAndPlanSpec extends SparkTestBase {
         "q217_markov_transitions" -> 5, // lag window, transition agg, sort
         "q218_lead_lag" -> 7, // two bucket aggs, aligned join, lag agg, sort
         "q220_source_gini" -> 5)) { // mass agg, rank window, group agg, sort
-      val df = Queries.all(q)(spark, sfDir)
+      val df = SparkEntry.queries(q)(spark, sfDir)
       val n = PlanAsserts.countShuffles(df)
       assert(n <= budget, s"$q over-shuffled: $n > $budget")
     }

@@ -928,7 +928,9 @@ class VersionedTableSpec extends SparkTestBase {
   test("merge, delete, replace-where and compact label their data writes") {
     // every commit-dir write (its shuffle job included) runs under the
     // `commit <table>` job label. The job totals are the ones measured
-    // before these writes carried it, when all of them were `unlabeled`
+    // before these writes carried it, when all of them were `unlabeled`,
+    // except compact's: it reads its small files with a driver-resolved
+    // schema, so its one job is the commit
     val path = tbl()
     (0 until 4).foreach(i => VersionedTable.commitAppend(
       Seq((i.toLong, s"v$i")).toDF("id", "v").coalesce(1), path))
@@ -943,7 +945,7 @@ class VersionedTableSpec extends SparkTestBase {
         Map("commit" -> 1, "scratch" -> 1, "unlabeled" -> 4),
         counted(VersionedTable.commitReplaceWhere(spark, path,
           Seq((3L, "r")).toDF("id", "v"), col("id") === 3L))),
-      ("compact", 2, Map("commit" -> 1, "unlabeled" -> 1),
+      ("compact", 1, Map("commit" -> 1),
         counted(VersionedTable.compact(spark, path))))
     for ((op, jobs, labels, c) <- ops) {
       assert(c.jobs == jobs, s"$op ran ${c.json}")

@@ -11,6 +11,11 @@ compares: schema (column names), row count, and cell values (columns
 sorted by name, rows sorted, exact match after canonicalization).
 Also gates on the oracle's DuckDB result types (see bad_types).
 
+A query without an oracle is rows-only: its record carries the reason
+Verify wrote to rows_only.json, and a query with neither an oracle nor
+a reason there counts as a fail. A dump without rows_only.json counts
+every query without an oracle as rows-only.
+
 With jsonOut, additionally writes a machine-readable per-query record
 (the CORRECTNESS_sf01.json artifact committed per round, so the
 "full suite green at sf0.1" claim is a checked file, not prose).
@@ -95,6 +100,10 @@ def main():
     failures_path = f"{out_dir}/failures.json"
     failures = (json.load(open(failures_path))
                 if os.path.exists(failures_path) else {})
+    # dumps older than rows_only.json carry no reasons
+    rows_only_path = f"{out_dir}/rows_only.json"
+    rows_only = (json.load(open(rows_only_path))
+                 if os.path.exists(rows_only_path) else None)
     n_pass = n_fail = 0
     for name, err in sorted(failures.items()):
         print(f"✗ {name}: SPARK FAILED: {err[:200]}")
@@ -111,10 +120,18 @@ def main():
                 "SELECT " + ", ".join(f'"{c}"' for c in spark_cols) +
                 f" FROM spark_rel").fetchall())
         if name not in oracles:
+            if rows_only is not None and name not in rows_only:
+                print(f"✗ {name}: NO ORACLE and no rows-only reason")
+                record[name] = {"status": "no_reason",
+                                "spark_rows": len(spark_rows)}
+                n_fail += 1
+                continue
             print(f"  {name}: NO-ORACLE rows={len(spark_rows)} "
                   f"cols={spark_cols}")
             record[name] = {"status": "no_oracle",
                             "spark_rows": len(spark_rows)}
+            if rows_only is not None:
+                record[name]["reason"] = rows_only[name]
             continue
         try:
             ora = con.sql(oracles[name])
