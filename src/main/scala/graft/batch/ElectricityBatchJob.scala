@@ -70,20 +70,18 @@ object ElectricityBatchJob {
     // keep the landing `date` partition column: variant-C CSVs
     // (date+hour, no ts) depend on it for timestamp reconstruction
     val bronze = toBronze(newRaw)
-    TableIO.append(bronze, layout, layout.bronze("electricity_prices"),
+    TableIO.append(bronze, layout.bronze("electricity_prices"),
       partitionCols = Seq("ingest_date"))
 
-    val bronzeAll = TableIO.read(spark, layout,
-      layout.bronze("electricity_prices"))
+    val bronzeAll = TableIO.read(spark, layout.bronze("electricity_prices"))
     val sv = silver(bronzeAll)
-    TableIO.overwrite(sv, layout, layout.silver("electricity_prices"),
+    TableIO.overwrite(sv, layout.silver("electricity_prices"),
       partitionCols = Seq("date"))
 
-    val svFinal = TableIO.read(spark, layout,
-      layout.silver("electricity_prices"))
-    TableIO.overwrite(goldDailyStats(svFinal), layout,
+    val svFinal = TableIO.read(spark, layout.silver("electricity_prices"))
+    TableIO.overwrite(goldDailyStats(svFinal),
       layout.gold("electricity_daily"))
-    TableIO.overwrite(goldPeakHours(svFinal), layout,
+    TableIO.overwrite(goldPeakHours(svFinal),
       layout.gold("electricity_peak_hours"))
 
     // the state date is silver's newest `date=` directory: silver is

@@ -116,12 +116,10 @@ object StructuredBatchJob {
     * only, nothing replaced, no isolation hazard). */
   def run(spark: SparkSession, layout: LakeLayout, rawPools: DataFrame,
       rawEvents: DataFrame, upsertSilver: Boolean = true): Unit = {
-    TableIO.append(toBronze(rawPools), layout, layout.bronze("pools_dim"))
-    TableIO.append(toBronze(rawEvents), layout,
-      layout.bronze("maintenance_events"))
+    TableIO.append(toBronze(rawPools), layout.bronze("pools_dim"))
+    TableIO.append(toBronze(rawEvents), layout.bronze("maintenance_events"))
 
-    val bronzePools = TableIO.read(spark, layout,
-      layout.bronze("pools_dim"))
+    val bronzePools = TableIO.read(spark, layout.bronze("pools_dim"))
     val sp = silverPools(bronzePools)
     val silverPoolsPath = layout.silver("pools_dim")
     val mergedPools =
@@ -132,18 +130,17 @@ object StructuredBatchJob {
       } else sp
     // the merge reads the table it replaces: safe, because the commit
     // writes a fresh data dir and the old version's files are immutable
-    // (the previous tmp-write + swap dance is subsumed by the manifest)
-    TableIO.publishSnapshot(mergedPools, layout, silverPoolsPath)
+    TableIO.publishSnapshot(mergedPools, silverPoolsPath)
 
     val poolsFinal = TableIO.readSnapshot(spark, silverPoolsPath)
     DataQuality.assertEmpty("pools pk unique",
       DataQuality.duplicateKeys(poolsFinal, Seq("pool_id")))
 
-    val bronzeEvents = TableIO.read(spark, layout,
+    val bronzeEvents = TableIO.read(spark,
       layout.bronze("maintenance_events"))
     val se = silverEvents(bronzeEvents, poolsFinal)
     val silverEventsPath = layout.silver("maintenance_events")
-    TableIO.publishSnapshot(se, layout, silverEventsPath)
+    TableIO.publishSnapshot(se, silverEventsPath)
 
     val seFinal = TableIO.readSnapshot(spark, silverEventsPath)
     DataQuality.assertEmpty("events pk unique",
@@ -157,11 +154,11 @@ object StructuredBatchJob {
     // unchanged
     val ge = goldEnrichedEvents(seFinal, poolsFinal)
     val goldEnrichedPath = layout.gold("events_enriched")
-    TableIO.publishSnapshot(ge, layout, goldEnrichedPath)
+    TableIO.publishSnapshot(ge, goldEnrichedPath)
     val geFinal = TableIO.readSnapshot(spark, goldEnrichedPath)
-    TableIO.publishSnapshot(goldDailyMetrics(geFinal), layout,
+    TableIO.publishSnapshot(goldDailyMetrics(geFinal),
       layout.gold("daily_metrics"))
-    TableIO.publishSnapshot(goldLatestEvent(geFinal), layout,
+    TableIO.publishSnapshot(goldLatestEvent(geFinal),
       layout.gold("latest_event"))
   }
 }

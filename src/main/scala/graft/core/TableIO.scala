@@ -3,15 +3,10 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Path-addressed medallion table IO (SURVEY.md §1.1): the reference's
-  * Delta-on-MinIO layout re-expressed with a pluggable format — parquet
-  * in this offline environment, delta when the jars are present. Write
-  * modes mirror the reference's append (bronze), overwrite (silver/gold
-  * snapshot) and partitioned-write semantics
-  * (02_ingest_smartpool.py:68-72; 03_silver_smartpool.py:29-43;
-  * 05_ingest_electricity_csv.py:82-87).
-  */
-final case class LakeLayout(root: String, format: String = "parquet") {
+/** The lake's path naming (SURVEY.md §1.1): the reference's bucket
+  * prefix with its bronze/silver/gold/_state/_checkpoints layers
+  * (smartpool_config.py:13-17). */
+final case class LakeLayout(root: String) {
   def bronze(name: String): String = s"$root/bronze/$name"
   def silver(name: String): String = s"$root/silver/$name"
   def gold(name: String): String = s"$root/gold/$name"
@@ -19,6 +14,15 @@ final case class LakeLayout(root: String, format: String = "parquet") {
   def checkpoints(name: String): String = s"$root/_checkpoints/$name"
 }
 
+/** Path-addressed parquet table IO for the plain (Hive-partitioned)
+  * medallion tables: the reference's append (bronze), overwrite
+  * (silver/gold snapshot) and partitioned-write semantics
+  * (02_ingest_smartpool.py:68-72; 03_silver_smartpool.py:29-43;
+  * 05_ingest_electricity_csv.py:82-87), with Delta-style schema
+  * enforcement. History, compaction, partition replace and upsert are
+  * [[VersionedTable]]'s (`compact`, `vacuum`, `commitReplaceWhere`,
+  * `commitMerge`, and `DESCRIBE DETAIL` over its manifests); the
+  * snapshot tables publish through it ([[publishSnapshot]]). */
 object TableIO {
 
   def exists(spark: SparkSession, path: String): Boolean = {
@@ -32,20 +36,17 @@ object TableIO {
     * column read as null) — the read half of additive schema evolution
     * (reference mergeSchema, 05_ingest_electricity_csv.ipynb §4).
     *
-    * A parquet table's data schema is resolved from its footers on the
-    * driver ([[ParquetSchema.ofPath]]) and passed with `.schema(...)`,
-    * so the read launches no inference job; Spark still infers the
-    * partition columns from the `k=v` directories. Other formats, and
-    * paths the driver cannot resolve, keep Spark's own resolution. */
-  def read(spark: SparkSession, layout: LakeLayout, path: String,
+    * The data schema is resolved from the footers on the driver
+    * ([[ParquetSchema.ofPath]]) and passed with `.schema(...)`, so the
+    * read launches no inference job; Spark still infers the partition
+    * columns from the `k=v` directories. Paths the driver cannot
+    * resolve keep Spark's own resolution. */
+  def read(spark: SparkSession, path: String,
       mergeSchema: Boolean = false): DataFrame = {
-    val r0 = spark.read.format(layout.format)
+    val r0 = spark.read.format("parquet")
     val r = if (mergeSchema) r0.option("mergeSchema", "true") else r0
-    val known =
-      if (layout.format == "parquet")
-        ParquetSchema.ofPath(spark, path, mergeSchema)
-      else None
-    known.fold(r)(r.schema).load(path)
+    ParquetSchema.ofPath(spark, path, mergeSchema).fold(r)(r.schema)
+      .load(path)
   }
 
   private def fieldNames(s: StructType): Set[String] =
@@ -57,13 +58,13 @@ object TableIO {
     s.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
 
   /** Existing-table schema for the evolution guards (resolved like
-    * [[read]]: no job for parquet); None when the path holds nothing
+    * [[read]]: no job); None when the path holds nothing
     * readable (e.g. an empty dir from an aborted write) — then there
     * is no schema to enforce against. */
-  private def existingSchema(spark: SparkSession, layout: LakeLayout,
-      path: String): Option[StructType] =
+  private def existingSchema(spark: SparkSession, path: String)
+      : Option[StructType] =
     if (!exists(spark, path)) None
-    else scala.util.Try(read(spark, layout, path).schema).toOption
+    else scala.util.Try(read(spark, path).schema).toOption
 
   /** Append with Delta-style schema enforcement: writing NEW columns
     * into an existing table is refused unless `mergeSchema = true`
@@ -71,10 +72,10 @@ object TableIO {
     * 05_ingest_electricity_csv.ipynb §4). With it, the new files carry
     * the wider schema and `read(…, mergeSchema = true)` reconstructs
     * the union. */
-  def append(df: DataFrame, layout: LakeLayout, path: String,
+  def append(df: DataFrame, path: String,
       partitionCols: Seq[String] = Nil, mergeSchema: Boolean = false)
       : Unit = {
-    if (!mergeSchema) existingSchema(df.sparkSession, layout, path)
+    if (!mergeSchema) existingSchema(df.sparkSession, path)
       .foreach { s =>
         val added = fieldNames(df.schema) -- fieldNames(s)
         val missing = fieldNames(s) -- fieldNames(df.schema)
@@ -100,7 +101,7 @@ object TableIO {
             s"(${retyped.map(k => s"$k: ${existing(k)} -> ${next(k)}")
               .mkString("; ")})")
       }
-    val w = df.write.format(layout.format).mode(SaveMode.Append)
+    val w = df.write.format("parquet").mode(SaveMode.Append)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .save(path)
   }
@@ -111,10 +112,10 @@ object TableIO {
     * `.option("overwriteSchema", "true")`, 03_silver_smartpool.py:33) —
     * a snapshot job that silently changes the schema is usually a bug
     * upstream, not an intended migration. */
-  def overwrite(df: DataFrame, layout: LakeLayout, path: String,
+  def overwrite(df: DataFrame, path: String,
       partitionCols: Seq[String] = Nil, overwriteSchema: Boolean = false)
       : Unit = {
-    if (!overwriteSchema) existingSchema(df.sparkSession, layout, path)
+    if (!overwriteSchema) existingSchema(df.sparkSession, path)
       .foreach { s =>
         // names AND types: a same-named column changing type is the
         // classic silent upstream bug this guard exists to refuse
@@ -124,27 +125,8 @@ object TableIO {
           s"overwrite of $path changes schema ($existing -> $next); " +
             "pass overwriteSchema = true to replace it")
       }
-    val w = df.write.format(layout.format).mode(SaveMode.Overwrite)
+    val w = df.write.format("parquet").mode(SaveMode.Overwrite)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .save(path)
-  }
-
-  /** Dynamic partition overwrite: replace ONLY the partitions present
-    * in `df`, leaving every other partition's files untouched — the
-    * idempotent daily-reprocess shape at 100 TB (re-running one day
-    * must not rewrite, or worse truncate, the other 3 650). Plain
-    * `SaveMode.Overwrite` + partitionBy drops the WHOLE table first;
-    * this scopes the delete to the incoming partition values via
-    * Spark's dynamic partitionOverwriteMode, set per-write (not
-    * session-wide) so concurrent static-mode writers are unaffected. */
-  def overwritePartitions(df: DataFrame, layout: LakeLayout,
-      path: String, partitionCols: Seq[String]): Unit = {
-    require(partitionCols.nonEmpty,
-      "overwritePartitions needs at least one partition column")
-    df.write.format(layout.format)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
-      .mode(SaveMode.Overwrite)
       .save(path)
   }
 
@@ -160,7 +142,7 @@ object TableIO {
     * data columns: file skipping at scale comes from parquet footer
     * stats / [[ManifestStats]] rather than Hive directory layout (the
     * same direction Delta/Iceberg took). Returns the new version. */
-  def publishSnapshot(df: DataFrame, layout: LakeLayout, path: String,
+  def publishSnapshot(df: DataFrame, path: String,
       overwriteSchema: Boolean = false): Int = {
     if (!overwriteSchema && snapshotExists(df.sparkSession, path)) {
       val existing =
@@ -182,36 +164,6 @@ object TableIO {
   def snapshotExists(spark: SparkSession, path: String): Boolean =
     VersionedTable.latestVersion(spark, path) > 0
 
-  // ---- table-maintenance / metadata ops (SURVEY §2.10) --------------
-  // Delta's history / DESCRIBE DETAIL degrade to a version-log sidecar
-  // and filesystem introspection in parquet mode (SURVEY §7.4 risk 2).
-
-  private def logPath(path: String) = s"$path/_graft_log"
-
-  /** Append one version record per write — the parquet-mode stand-in
-    * for `DeltaTable.history` (03_silver_smartpool.ipynb §6). */
-  def logVersion(spark: SparkSession, path: String, op: String,
-      rows: Long): Unit = {
-    import spark.implicits._
-    val entry = Seq((System.currentTimeMillis(), op, rows))
-      .toDF("ts_millis", "operation", "num_rows")
-    entry.coalesce(1).write.mode(SaveMode.Append)
-      .json(logPath(path))
-  }
-
-  /** Version history, newest first (empty if never logged). */
-  def history(spark: SparkSession, path: String, limit: Int = 10)
-      : DataFrame = {
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "ts_millis BIGINT, operation STRING, num_rows BIGINT"))
-    if (!exists(spark, logPath(path))) empty
-    else spark.read.schema(empty.schema).json(logPath(path))
-      .orderBy(org.apache.spark.sql.functions.col("ts_millis").desc)
-      .limit(limit)
-  }
-
   /** The values of Hive partition column `column` at `path`, read from
     * its `column=value` directories rather than from the rows: a table
     * written with `partitionBy(column)` holds a directory for exactly
@@ -231,8 +183,8 @@ object TableIO {
         .DEFAULT_PARTITION_NAME)
   }
 
-  /** DESCRIBE DETAIL-ish physical introspection: format, file count,
-    * bytes, partition columns inferred from hive-style dirs
+  /** DESCRIBE DETAIL-ish physical introspection: file count, bytes,
+    * partition columns inferred from hive-style dirs
     * (03_silver_smartpool.ipynb §6's partition-layout assertion). The
     * files are the data files a read of `path` scans: [[LeafFiles]]
     * without parquet summary files. */
@@ -250,51 +202,5 @@ object TableIO {
       "numFiles" -> files.length,
       "sizeInBytes" -> files.map(_.getLen).sum,
       "partitionColumns" -> partCols)
-  }
-
-  /** Overwrite `path` with a DataFrame that READS FROM `path`: write
-    * to a sibling tmp dir first, then swap via delete+rename. (A
-    * localCheckpoint-then-overwrite would lose the table if an
-    * executor holding checkpoint blocks died after the delete — the
-    * source files would already be gone.) The `_graft_log` version
-    * sidecar lives INSIDE the table dir, so it is moved into the tmp
-    * dir before the swap — otherwise every compaction would wipe the
-    * table's history. A crash mid-swap leaves the tmp dir (log
-    * included) intact for manual recovery. */
-  def replaceContents(spark: SparkSession, layout: LakeLayout,
-      df: DataFrame, path: String, partitionCols: Seq[String] = Nil)
-      : Unit = {
-    val tmp = s"$path.__tmp_${System.currentTimeMillis()}"
-    val w = df.write.format(layout.format).mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .save(tmp)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val t = new org.apache.hadoop.fs.Path(tmp)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val log = new org.apache.hadoop.fs.Path(logPath(path))
-    if (fs.exists(log) &&
-        !fs.rename(log, new org.apache.hadoop.fs.Path(logPath(tmp))))
-      // some FS impls signal failure by returning false, not throwing;
-      // proceeding would let the delete below wipe the version history
-      throw new java.io.IOException(
-        s"rename $log -> ${logPath(tmp)} failed; aborting swap")
-    fs.delete(p, true)
-    if (!fs.rename(t, p))
-      throw new java.io.IOException(s"rename $tmp -> $path failed")
-  }
-
-  /** Small-file compaction — at 100 TB the streaming sinks and
-    * per-batch appends fragment tables; rewrite to ~targetMB files.
-    * Coalesce (no shuffle) is enough because we only merge. */
-  def compact(spark: SparkSession, layout: LakeLayout, path: String,
-      targetMB: Int = 128): Unit = {
-    val bytes = describe(spark, path)("sizeInBytes")
-      .asInstanceOf[Long]
-    val targetFiles = math.max(1,
-      (bytes / (targetMB.toLong * 1024 * 1024)).toInt)
-    val df = read(spark, layout, path).coalesce(targetFiles)
-    replaceContents(spark, layout, df, path)
-    logVersion(spark, path, s"COMPACT($targetFiles files)",
-      read(spark, layout, path).count())
   }
 }

@@ -247,17 +247,19 @@ object IncrementalFiles {
     * manifest or storage-notification source is the right tool.
     *
     * Two boundary protections:
-    *   - files under a hidden directory ANYWHERE below the root
-    *     (`_temporary`, `.staging`, …) are skipped, not just hidden
-    *     leaf names — in-flight Spark/MR writers must never be read;
+    *   - the files are listed by [[LeafFiles]], with Spark's rule for
+    *     what is data: hidden names, anything under a hidden directory
+    *     (`_temporary`, `.staging`, …) and in-flight `._COPYING_`
+    *     copies are neither read nor counted in the watermark, so a
+    *     copy renamed into place later still lands;
     *   - only files with mtime at or below `now - graceMs` are
     *     ingested, and the returned watermark advances only over what
     *     was ingested. A file committed with an mtime equal to the
     *     previous max (same filesystem timestamp tick) therefore still
     *     lands in the next batch instead of being skipped forever.
     *     Caveat that no mtime watermark can fix: a rename-in of a file
-    *     PRESERVING an old mtime is invisible — backfills must copy
-    *     (fresh mtime) or use the manifest path.
+    *     PRESERVING an mtime at or below the watermark is invisible —
+    *     backfills must copy (fresh mtime) or use the manifest path.
     *
     * Returns the batch (None when nothing new) and the next watermark
     * to persist. */
@@ -265,20 +267,10 @@ object IncrementalFiles {
       sinceMtime: Long, format: String = "csv",
       graceMs: Long = 2000L): (Option[DataFrame], Long) = {
     val root = new org.apache.hadoop.fs.Path(landingRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rootUri = fs.makeQualified(root).toUri
-    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
-    def underHiddenDir(p: org.apache.hadoop.fs.Path): Boolean = {
-      val rel = rootUri.relativize(p.toUri).getPath
-      rel.split("/").exists(hidden)
-    }
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (!underHiddenDir(fs.makeQualified(st.getPath)))
-        files += ((st.getPath.toString, st.getModificationTime))
-    }
+    val files = LeafFiles.list(root.getFileSystem(
+        spark.sparkContext.hadoopConfiguration), root).toSeq
+      .flatMap(_.files)
+      .map(st => (st.getPath.toString, st.getModificationTime))
     val horizon = System.currentTimeMillis() - graceMs
     val fresh = files.filter { case (_, m) =>
       m > sinceMtime && m <= horizon }
@@ -288,7 +280,7 @@ object IncrementalFiles {
         .option("header", "true")
         .option("basePath", landingRoot)
         .format(format)
-        .load(fresh.map(_._1).toSeq: _*)
+        .load(fresh.map(_._1): _*)
       (Some(df), fresh.map(_._2).max)
     }
   }

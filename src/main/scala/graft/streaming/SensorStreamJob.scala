@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.core.{LakeLayout, TableIO}
+import graft.core.{LakeLayout, TableIO, VersionedTable}
 
 /** EP3 production wiring (SURVEY.md §2.9): Kafka source → the
   * [[SensorPipeline]] stages → checkpointed parquet sinks, with the
@@ -50,10 +50,10 @@ object SensorStreamJob {
     * table's `_spark_metadata` log: replaying a micro-batch duplicates
     * neither table, and readers see both through their logs as before.
     *
-    * Fails before any query starts when `layout.format` is not a file
-    * format, or when the enriched log is not at the agg log's batch or
-    * one behind it (a crash between the two appends): any other gap
-    * would make the enriched sink skip or miss batches. */
+    * Fails before any query starts when the enriched log is not at the
+    * agg log's batch or one behind it (a crash between the two
+    * appends): any other gap would make the enriched sink skip or miss
+    * batches. */
   def start(spark: SparkSession, layout: LakeLayout, kafka: DataFrame,
       pools: DataFrame, prices: DataFrame,
       triggerSeconds: Int = 10, watermark: String = "2 minutes")
@@ -61,9 +61,8 @@ object SensorStreamJob {
     val trigger = Trigger.ProcessingTime(s"$triggerSeconds seconds")
     val aggPath = layout.gold("sensors_minute_agg")
     val enrichedPath = layout.gold("sensors_enriched")
-    val aggSink = appendSink(spark, layout, aggPath, Seq("calc_date"))
-    val enrichedSink =
-      appendSink(spark, layout, enrichedPath, Seq("calc_date"))
+    val aggSink = appendSink(spark, aggPath, Seq("calc_date"))
+    val enrichedSink = appendSink(spark, enrichedPath, Seq("calc_date"))
     val aggAt = GraftBridge.fileSinkLatestBatchId(spark, aggPath)
       .getOrElse(-1L)
     val enrichedAt = GraftBridge.fileSinkLatestBatchId(spark, enrichedPath)
@@ -76,7 +75,7 @@ object SensorStreamJob {
           "sink would skip or miss batches")
 
     val bronze = SensorPipeline.bronze(kafka)
-    val qBronze = bronze.writeStream.format(layout.format)
+    val qBronze = bronze.writeStream.format("parquet")
       .option("checkpointLocation", layout.checkpoints("bronze_sensors"))
       .option("path", layout.bronze("sensors"))
       .partitionBy("ingest_date")
@@ -84,7 +83,7 @@ object SensorStreamJob {
       .queryName("bronze_sensors").start()
 
     val silver = SensorPipeline.silver(bronze, watermark)
-    val qSilver = silver.writeStream.format(layout.format)
+    val qSilver = silver.writeStream.format("parquet")
       .option("checkpointLocation", layout.checkpoints("silver_sensors"))
       .option("path", layout.silver("sensors"))
       .partitionBy("event_date")
@@ -115,15 +114,15 @@ object SensorStreamJob {
     * `foreachBatch` through the table's `_spark_metadata` log. A
     * non-empty table without that log fails here — the log would hide
     * its existing files from every reader. */
-  private def appendSink(spark: SparkSession, layout: LakeLayout,
-      path: String, partitionColumns: Seq[String]) = {
+  private def appendSink(spark: SparkSession, path: String,
+      partitionColumns: Seq[String]) = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p) && fs.listStatus(p).nonEmpty &&
         !fs.exists(new Path(p, "_spark_metadata")))
       throw new IllegalStateException(s"$path holds files written " +
         "without a _spark_metadata log; a streaming sink would hide them")
-    GraftBridge.fileStreamSink(spark, path, layout.format, partitionColumns)
+    GraftBridge.fileStreamSink(spark, path, partitionColumns)
   }
 
   /** Bounded run + graceful reverse-order stop (07:…py:163-171). The
@@ -168,8 +167,10 @@ object SensorStreamJob {
     * 4): a plain stream-static join against a parquet dim resolves the
     * static side's file listing once at query start, so dim updates
     * made while the stream runs are invisible until restart. foreachBatch
-    * re-reads the dim table at every micro-batch — an update lands in
-    * the NEXT batch. The dim is broadcast (it is small by contract).
+    * re-reads the dim table at every micro-batch through
+    * [[TableIO.read]] (schema from its footer on the driver, no
+    * inference job) — an update lands in the NEXT batch. The dim is
+    * broadcast (it is small by contract).
     *
     * Exactly-once: Structured Streaming re-runs a micro-batch whose
     * write finished but whose checkpoint commit didn't, and a blind
@@ -177,13 +178,13 @@ object SensorStreamJob {
     * own file sink ([[appendSink]]), which records each batch id in
     * `outPath/_spark_metadata` in the same commit as its files and skips
     * a replayed id. Readers see the table through that log. */
-  def startWithDimRefresh(stream: DataFrame, layout: LakeLayout,
-      dimPath: String, joinKeys: Seq[String], outPath: String,
-      checkpointPath: String): StreamingQuery = {
-    val out = appendSink(stream.sparkSession, layout, outPath, Nil)
+  def startWithDimRefresh(stream: DataFrame, dimPath: String,
+      joinKeys: Seq[String], outPath: String, checkpointPath: String)
+      : StreamingQuery = {
+    val out = appendSink(stream.sparkSession, outPath, Nil)
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val dim = batch.sparkSession.read.format(layout.format).load(dimPath)
+        val dim = TableIO.read(batch.sparkSession, dimPath)
         out.addBatch(batchId, batch.join(
           org.apache.spark.sql.functions.broadcast(dim), joinKeys, "left"))
       }
@@ -192,40 +193,39 @@ object SensorStreamJob {
       .start()
   }
 
-  /** Streaming MERGE sink: each micro-batch UPSERTS into the target by
-    * key (latest-wins inside the batch, then K4 merge semantics against
-    * the table) instead of blind-appending — the streaming twin of the
-    * reference's Delta MERGE silver step (03_silver_smartpool.ipynb §4).
+  /** Streaming MERGE sink: each micro-batch UPSERTS into the
+    * [[VersionedTable]] at `outPath` by key (latest-wins inside the
+    * batch, then K4 merge semantics against the table) instead of
+    * blind-appending — the streaming twin of the reference's Delta
+    * MERGE silver step (03_silver_smartpool.ipynb §4). Each micro-batch
+    * is one atomic `commitMerge` version, so a reader sees the table
+    * before or after a batch, never between.
     *
-    * Replay idempotence is free here, unlike the append sink: re-merging
-    * an already-applied batch maps every key to the value it already
-    * has, so no commit marker is needed. The swap goes through
-    * `TableIO.replaceContents` (tmp-dir write + rename) because the
-    * merged frame READS FROM the table it replaces. */
-  def startUpsertSink(stream: DataFrame, layout: LakeLayout,
-      outPath: String, keys: Seq[String], orderCol: String,
-      checkpointPath: String): StreamingQuery =
+    * A replayed batch id is skipped by its per-batch marker
+    * ([[VersionedTable.oncePerBatch]]); a crash between the commit and
+    * the marker re-merges that batch, which maps every key to the value
+    * it already has.
+    *
+    * The table is created only by the first-ever batch. On any later
+    * batch an empty table means state was lost — rebuilding from one
+    * micro-batch would silently truncate every prior key, so the batch
+    * fails and the operator restores the table. */
+  def startUpsertSink(stream: DataFrame, outPath: String, keys: Seq[String],
+      orderCol: String, checkpointPath: String): StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val order = Seq(org.apache.spark.sql.functions.col(orderCol).desc)
-        if (!TableIO.exists(spark, outPath)) {
-          // create ONLY on the first-ever batch. On any later batch a
-          // missing table means state was lost (e.g. a crash between
-          // replaceContents' delete and rename) — rebuilding from one
-          // micro-batch would silently truncate every prior key, so
-          // fail loudly and let the operator restore the table
-          if (batchId != 0L) throw new IllegalStateException(
-            s"upsert target $outPath missing at batch $batchId — " +
-              "refusing to rebuild merged state from a single batch")
-          TableIO.overwrite(
-            graft.ops.DedupLatest(batch, keys, order), layout, outPath)
-        } else {
-          val target = TableIO.read(spark, layout, outPath)
-          // Upsert dedups its source latest-wins internally
-          TableIO.replaceContents(spark, layout,
-            graft.ops.Upsert(target, batch, keys, order), outPath)
+        VersionedTable.oncePerBatch(spark, outPath, batchId) {
+          if (batchId != 0L &&
+              VersionedTable.latestVersion(spark, outPath) == 0)
+            throw new IllegalStateException(
+              s"upsert target $outPath missing at batch $batchId — " +
+                "refusing to rebuild merged state from a single batch")
+          VersionedTable.commitMerge(graft.ops.DedupLatest(batch, keys,
+            Seq(org.apache.spark.sql.functions.col(orderCol).desc)),
+            outPath, keys)
         }
+        ()
       }
       .option("checkpointLocation", checkpointPath)
       .queryName("upsert_sink")

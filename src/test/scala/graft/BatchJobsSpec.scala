@@ -238,7 +238,6 @@ class BatchJobsSpec extends SparkTestBase {
   test("TableIO.read, VersionedTable.read and the publishSnapshot " +
     "schema guard run no Spark job") {
     val root = tmpDir("graft-nojob")
-    val layout = LakeLayout(root)
     Seq((1, "a"), (2, "b")).toDF("k", "v").write.parquet(s"$root/plain")
     Seq((1, "a", "x"), (2, "b", "y")).toDF("k", "v", "p")
       .write.partitionBy("p").parquet(s"$root/part")
@@ -247,14 +246,14 @@ class BatchJobsSpec extends SparkTestBase {
     VersionedTable.commitOverwrite(Seq((1, "a")).toDF("k", "v"),
       s"$root/vt2")
     val n = counted {
-      assert(TableIO.read(spark, layout, s"$root/plain").columns.toSeq ==
+      assert(TableIO.read(spark, s"$root/plain").columns.toSeq ==
         Seq("k", "v"))
-      assert(TableIO.read(spark, layout, s"$root/part").columns.toSeq ==
+      assert(TableIO.read(spark, s"$root/part").columns.toSeq ==
         Seq("k", "v", "p"))
       assert(VersionedTable.read(spark, s"$root/vt").columns.toSeq ==
         Seq("k", "v"))
       val e = intercept[IllegalArgumentException](TableIO.publishSnapshot(
-        Seq((1, 2L)).toDF("k", "w"), layout, s"$root/vt2"))
+        Seq((1, 2L)).toDF("k", "w"), s"$root/vt2"))
       assert(e.getMessage.contains("changes schema"))
     }.jobs
     assert(n == 0, s"$n Spark jobs resolving table schemas")
@@ -293,7 +292,7 @@ class BatchJobsSpec extends SparkTestBase {
       .asInstanceOf[Seq[String]].toSet
     assert(ParquetSchema.ofPath(spark, path, merge) ==
       Some(StructType(expected.filterNot(f => parts(f.name)))))
-    assert(TableIO.read(spark, LakeLayout("unused"), path, merge).schema ==
+    assert(TableIO.read(spark, path, merge).schema ==
       expected)
   }
 
@@ -311,7 +310,7 @@ class BatchJobsSpec extends SparkTestBase {
     df.write.parquet(s"$root/clash/name=a")
     assert(ParquetSchema.ofPath(spark, s"$root/clash", merge = false)
       .isEmpty)
-    assert(TableIO.read(spark, LakeLayout(root), s"$root/clash").schema ==
+    assert(TableIO.read(spark, s"$root/clash").schema ==
       spark.read.parquet(s"$root/clash").schema)
     // a parquet summary file steers Spark's choice of footer: left to
     // Spark as well
@@ -320,7 +319,7 @@ class BatchJobsSpec extends SparkTestBase {
     Files.copy(part, java.nio.file.Paths.get(s"$root/plain/_common_metadata"))
     assert(ParquetSchema.ofPath(spark, s"$root/plain", merge = false)
       .isEmpty)
-    assert(TableIO.read(spark, LakeLayout(root), s"$root/plain").schema ==
+    assert(TableIO.read(spark, s"$root/plain").schema ==
       spark.read.parquet(s"$root/plain").schema)
   }
 
@@ -417,7 +416,7 @@ class BatchJobsSpec extends SparkTestBase {
     (0 to threshold).map(i => (i.toLong, s"p$i")).toDF("id", "p")
       .write.partitionBy("p").parquet(s"$root/t")
     assert(ParquetSchema.ofPath(spark, s"$root/t", merge = false).isEmpty)
-    assert(TableIO.read(spark, LakeLayout(root), s"$root/t").schema ==
+    assert(TableIO.read(spark, s"$root/t").schema ==
       spark.read.parquet(s"$root/t").schema)
     val fl = new java.io.File(s"$root/t").listFiles()
       .filter(_.isDirectory).flatMap(_.listFiles())
@@ -440,7 +439,7 @@ class BatchJobsSpec extends SparkTestBase {
     Files.createDirectories(java.nio.file.Paths.get(s"$root/empty"))
     for (p <- Seq(s"$root/missing", s"$root/empty")) {
       val ours = intercept[AnalysisException](
-        TableIO.read(spark, LakeLayout(root), p))
+        TableIO.read(spark, p))
       val spark0 = intercept[AnalysisException](spark.read.parquet(p))
       assert(ours.getCondition == spark0.getCondition)
     }

@@ -152,9 +152,28 @@ class IncrementalSpec extends SparkTestBase {
       java.nio.file.Paths.get(s"$staging/part-000.csv"),
       "ts,price_eur_mwh\n2026-01-01 09:00:00,99.0\n".getBytes)
 
-    val (b1, _) = IncrementalFiles.readNewByModTime(spark, landing, 0L,
+    // an in-flight copy (`._COPYING_`, newer than the real file) is
+    // skipped like Spark skips it, and the watermark stays before it
+    val day1 = new java.io.File(s"$landing/date=2026-01-01")
+    val now = System.currentTimeMillis()
+    day1.listFiles().filter(_.getName.startsWith("part-"))
+      .foreach(_.setLastModified(now - 60000L))
+    val day2 = new java.io.File(s"$landing/date=2026-01-02")
+    day2.mkdirs()
+    val copying = new java.io.File(day2, "more.csv._COPYING_")
+    java.nio.file.Files.write(copying.toPath,
+      "ts,price_eur_mwh\n2026-01-02 00:00:00,60.0\n".getBytes)
+    copying.setLastModified(now - 30000L)
+
+    val (b1, m1) = IncrementalFiles.readNewByModTime(spark, landing, 0L,
       graceMs = 0L)
     assert(b1.exists(_.count() == 1), "staging file leaked into batch")
+    // the copy completes by rename, keeping its mtime: it must land
+    assert(copying.renameTo(new java.io.File(day2, "more.csv")))
+    val (b3, _) = IncrementalFiles.readNewByModTime(spark, landing, m1,
+      graceMs = 0L)
+    assert(b3.exists(_.collect().map(_.getAs[String]("price_eur_mwh"))
+      .toSeq == Seq("60.0")), "renamed in-flight copy was never ingested")
 
     // grace horizon: a file committed within the last graceMs is held
     // back AND the watermark does not advance past it — it lands in

@@ -98,11 +98,6 @@ class SensorStreamJobSpec extends SparkTestBase {
     ids.max
   }
 
-  private def deleteEntry(dir: Path, id: Long): Unit = {
-    Files.delete(dir.resolve(id.toString))
-    Files.deleteIfExists(dir.resolve(s".$id.crc"))
-  }
-
   test("start runs 3 queries with one state store; enriched = goldEnriched(agg)") {
     val root = Files.createTempDirectory("graft-ep3").toString
     val layout = LakeLayout(root)
@@ -145,10 +140,10 @@ class SensorStreamJobSpec extends SparkTestBase {
     val commits = Paths.get(layout.checkpoints("sensors_minute_agg"),
       "commits")
     val last = latestCommit(commits)
-    deleteEntry(commits, last)
+    deleteEntry(commits, last.toString)
     val enrichedLog = Paths.get(layout.gold("sensors_enriched"),
       "_spark_metadata")
-    deleteEntry(enrichedLog, last)
+    deleteEntry(enrichedLog, last.toString)
 
     val again = start(layout, mem)
     try drain(again) finally again.reverse.foreach(_.stop())
@@ -172,18 +167,8 @@ class SensorStreamJobSpec extends SparkTestBase {
     assert(spark.streams.active.length == before)
   }
 
-  test("a layout format that is not a file format fails start") {
-    val root = Files.createTempDirectory("graft-ep3-format").toString
-    val before = spark.streams.active.length
-    val e = intercept[IllegalArgumentException](start(
-      LakeLayout(root, "console"), new SharedMemoryStream[KafkaLike](spark)))
-    assert(e.getMessage.contains("not a file format"))
-    assert(spark.streams.active.length == before)
-  }
-
   test("dim-refresh sink: a replayed batch is not appended twice") {
     val root = Files.createTempDirectory("graft-dimrefresh-replay").toString
-    val layout = LakeLayout(root)
     val dimPath = s"$root/dim"
     val outPath = s"$root/out"
     val chk = s"$root/_chk"
@@ -191,7 +176,7 @@ class SensorStreamJobSpec extends SparkTestBase {
     val mem = new SharedMemoryStream[(Int, Double)](spark)
     def run(feed: StreamingQuery => Unit): Unit = {
       val q = SensorStreamJob.startWithDimRefresh(
-        mem.toDF().toDF("user_id", "value"), layout, dimPath,
+        mem.toDF().toDF("user_id", "value"), dimPath,
         Seq("user_id"), outPath, chk)
       try { feed(q); q.processAllAvailable() } finally q.stop()
     }
@@ -201,7 +186,7 @@ class SensorStreamJobSpec extends SparkTestBase {
       mem.addData((2, 20.0))
     }
     val commits = Paths.get(chk, "commits")
-    deleteEntry(commits, latestCommit(commits))
+    deleteEntry(commits, latestCommit(commits).toString)
     run(_ => ())
     val out = spark.read.parquet(outPath).orderBy("value").collect()
       .map(r => (r.getAs[Double]("value"), r.getAs[String]("tag"))).toSeq
@@ -216,7 +201,7 @@ class SensorStreamJobSpec extends SparkTestBase {
       SensorStreamJob.startWithDimRefresh(
         new SharedMemoryStream[(Int, Double)](spark).toDF()
           .toDF("user_id", "value"),
-        LakeLayout(root), s"$root/dim", Seq("user_id"), outPath,
+        s"$root/dim", Seq("user_id"), outPath,
         s"$root/_chk"))
     assert(e.getMessage.contains(outPath))
     // nothing hid the existing rows

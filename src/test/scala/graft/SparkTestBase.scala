@@ -24,6 +24,13 @@ trait SparkTestBase extends AnyFunSuite {
     try out.write("#done\n".getBytes("UTF-8")) finally out.close()
   }
 
+  /** Delete the file `name` in `dir` and its Hadoop `.crc` sidecar: a
+    * checkpoint log entry or commit marker that a crash never wrote. */
+  def deleteEntry(dir: java.nio.file.Path, name: String): Unit = {
+    java.nio.file.Files.delete(dir.resolve(name))
+    java.nio.file.Files.deleteIfExists(dir.resolve(s".$name.crc"))
+  }
+
   /** A [[graft.core.TxnJournal]] intent line pinning each of `subs`
     * at the matching version of `versions` (for forging a crash). */
   def namedIntent(subs: Seq[String], versions: Seq[Int]): String =

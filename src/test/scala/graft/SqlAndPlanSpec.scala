@@ -175,14 +175,13 @@ class SqlAndPlanSpec extends SparkTestBase {
   }
 
   test("partition filters prune a hive-partitioned table at the scan") {
-    import graft.core.{LakeLayout, TableIO}
+    import graft.core.TableIO
     val root = java.nio.file.Files
       .createTempDirectory("graft-prune").toString
-    val layout = LakeLayout(root)
     val df = spark.range(0, 100)
       .selectExpr("id", "CAST(id % 5 AS STRING) AS part")
-    TableIO.overwrite(df, layout, s"$root/t", partitionCols = Seq("part"))
-    val q = TableIO.read(spark, layout, s"$root/t")
+    TableIO.overwrite(df, s"$root/t", partitionCols = Seq("part"))
+    val q = TableIO.read(spark, s"$root/t")
       .filter(org.apache.spark.sql.functions.col("part") === "3")
     q.collect()
     val scans = collectPlan(q.queryExecution.executedPlan).collect {

@@ -2,69 +2,21 @@ package graft
 
 import java.nio.file.Files
 
-import graft.core.{LakeLayout, TableIO}
+import graft.core.TableIO
 
 class TableMaintenanceSpec extends SparkTestBase {
   import spark.implicits._
 
-  test("version log, describe and compact") {
-    val root = Files.createTempDirectory("graft-maint").toString
-    val layout = LakeLayout(root)
-    val path = s"$root/t"
-    // fragment the table: 8 single-row appends → ≥8 files
-    for (i <- 1 to 8) {
-      TableIO.append(Seq((i, s"row$i")).toDF("id", "v"), layout, path)
-      TableIO.logVersion(spark, path, "APPEND", 1L)
-    }
-    val d1 = TableIO.describe(spark, path)
-    assert(d1("numFiles").asInstanceOf[Int] >= 8)
-
-    val hist = TableIO.history(spark, path).collect()
-    assert(hist.length == 8)
-    assert(hist.head.getAs[String]("operation") == "APPEND")
-
-    TableIO.compact(spark, layout, path, targetMB = 128)
-    val d2 = TableIO.describe(spark, path)
-    assert(d2("numFiles").asInstanceOf[Int] == 1)
-    assert(spark.read.parquet(path).count() == 8) // no rows lost
-    val histAfter = TableIO.history(spark, path, limit = 20).collect()
-    assert(histAfter.head.getAs[String]("operation").startsWith("COMPACT"))
-    // the pre-compaction history SURVIVES the delete+rename swap
-    assert(histAfter.length == 9,
-      s"expected 8 APPENDs + COMPACT, got ${histAfter.length}")
-  }
-
-  test("dynamic partition overwrite replaces only the touched day") {
-    val root = Files.createTempDirectory("graft-dpo").toString
-    val layout = LakeLayout(root)
-    val path = s"$root/t"
-    Seq((1L, "2026-01-01", "a"), (2L, "2026-01-02", "b"),
-      (3L, "2026-01-03", "c"))
-      .toDF("id", "day", "v")
-      .write.partitionBy("day").parquet(path)
-    // reprocess day 2 only: one replaced row, other days untouched
-    graft.core.TableIO.overwritePartitions(
-      Seq((20L, "2026-01-02", "B")).toDF("id", "day", "v"),
-      layout, path, Seq("day"))
-    val out = spark.read.parquet(path)
-      .orderBy("day").collect()
-      .map(r => (r.getAs[Long]("id"), r.getAs[String]("v")))
-    assert(out.toSeq == Seq((1L, "a"), (20L, "B"), (3L, "c")))
-    // idempotence: re-running the same day write changes nothing
-    graft.core.TableIO.overwritePartitions(
-      Seq((20L, "2026-01-02", "B")).toDF("id", "day", "v"),
-      layout, path, Seq("day"))
-    assert(spark.read.parquet(path).count() == 3)
-  }
-
   test("describe reports hive partition columns") {
     val root = Files.createTempDirectory("graft-maint2").toString
-    val layout = LakeLayout(root)
     val path = s"$root/p"
     TableIO.overwrite(
       Seq((1, "2026-01-01"), (2, "2026-01-02")).toDF("id", "d"),
-      layout, path, partitionCols = Seq("d"))
+      path, partitionCols = Seq("d"))
     val d = TableIO.describe(spark, path)
     assert(d("partitionColumns") == Seq("d"))
+    // one data file per partition dir; _SUCCESS and .crc sidecars are
+    // not data files
+    assert(d("numFiles") == 2)
   }
 }

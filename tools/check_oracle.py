@@ -11,6 +11,11 @@ compares: schema (column names), row count, and cell values (columns
 sorted by name, rows sorted, exact match after canonicalization).
 Also gates on the oracle's DuckDB result types (see bad_types).
 
+An oracle that reads another query's dump names it as
+'__VERIFY_OUT__/<name>/'; the placeholder is replaced with the absolute
+path of verifyOutDir, so a moved or copied dump checks the same. (Dumps
+that Verify wrote with absolute paths already carry no placeholder.)
+
 A query without an oracle is rows-only: its record carries the reason
 Verify wrote to rows_only.json, and a query with neither an oracle nor
 a reason there counts as a fail. A dump without rows_only.json counts
@@ -22,7 +27,10 @@ With jsonOut, additionally writes a machine-readable per-query record
 """
 import json
 import math
+import os
+import shutil
 import sys
+import tempfile
 
 import duckdb
 
@@ -46,6 +54,14 @@ def bad_types(type_list):
     return bad
 
 
+def load_oracles(out_dir):
+    """oracle_sql.json with the fixture placeholder bound to out_dir."""
+    with open(f"{out_dir}/oracle_sql.json") as fh:
+        oracles = json.load(fh)
+    here = os.path.abspath(out_dir)
+    return {k: v.replace("__VERIFY_OUT__", here) for k, v in oracles.items()}
+
+
 def selftest():
     con = duckdb.connect()
     # uncast sum() over BIGINT → HUGEINT: the detector MUST flag it
@@ -62,6 +78,19 @@ def selftest():
     # decimal literal arithmetic: must be flagged
     r4 = con.sql("SELECT 1.5 AS a")
     assert bad_types(r4.types), f"DECIMAL not flagged: {r4.types}"
+    # a fixture-reading oracle finds its fixture after the dump moves
+    with tempfile.TemporaryDirectory() as tmp:
+        dump = f"{tmp}/dump"
+        os.makedirs(f"{dump}/fix")
+        con.sql("COPY (SELECT 7 AS v) TO "
+                f"'{dump}/fix/part-0.parquet' (FORMAT PARQUET)")
+        with open(f"{dump}/oracle_sql.json", "w") as fh:
+            json.dump({"q": "SELECT v FROM "
+                       "read_parquet('__VERIFY_OUT__/fix/*.parquet')"}, fh)
+        moved = f"{tmp}/moved"
+        shutil.move(dump, moved)
+        got = con.sql(load_oracles(moved)["q"]).fetchall()
+        assert got == [(7,)], f"moved dump lost its fixture: {got}"
     print("selftest OK")
 
 
@@ -93,8 +122,7 @@ def main():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{sf_dir}/{t}.parquet')")
-    oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
-    import os
+    oracles = load_oracles(out_dir)
     # dumps older than failures.json have none; a query that threw left
     # no (or a partial) directory, so it is counted here, not compared
     failures_path = f"{out_dir}/failures.json"
