@@ -3,7 +3,7 @@ package graft.batch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{LakeLayout, TableIO}
+import graft.core.{LakeLayout, Par, TableIO}
 import graft.ops.{DedupLatest, TopNPerGroup}
 import graft.sources.{CsvVariants, IncrementalFiles}
 
@@ -58,14 +58,18 @@ object ElectricityBatchJob {
       Seq(col("price_eur_mwh").desc, col("hour")), n, rankCol = "rank")
 
   /** Full EP2 incremental run: only landing partitions newer than the
-    * stored `last_date` state are read (partition-pruned). */
+    * stored `last_date` state are read (partition-pruned). A run whose
+    * landing listing holds no file at or after the state date returns
+    * before any job ([[IncrementalFiles.readNewGroups]] gives no
+    * frame). The two gold tables read the same silver and are written
+    * together through [[Par]]. */
   def run(spark: SparkSession, layout: LakeLayout, landingRoot: String)
       : Unit = {
     val statePath = layout.state("electricity_last_date")
     val lastDate = IncrementalFiles.readState(spark, statePath)
     val newRaw = IncrementalFiles.readNewGroups(spark, landingRoot,
       lastDate)
-    if (newRaw.forall(_.isEmpty)) return
+    if (newRaw.isEmpty) return
 
     // keep the landing `date` partition column: variant-C CSVs
     // (date+hour, no ts) depend on it for timestamp reconstruction
@@ -79,10 +83,11 @@ object ElectricityBatchJob {
       partitionCols = Seq("date"))
 
     val svFinal = TableIO.read(spark, layout.silver("electricity_prices"))
-    TableIO.overwrite(goldDailyStats(svFinal),
-      layout.gold("electricity_daily"))
-    TableIO.overwrite(goldPeakHours(svFinal),
-      layout.gold("electricity_peak_hours"))
+    Par.run2(
+      () => TableIO.overwrite(goldDailyStats(svFinal),
+        layout.gold("electricity_daily")),
+      () => TableIO.overwrite(goldPeakHours(svFinal),
+        layout.gold("electricity_peak_hours")))
 
     // the state date is silver's newest `date=` directory: silver is
     // rewritten whole, partitioned by a non-null date, so its

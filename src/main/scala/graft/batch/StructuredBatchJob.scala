@@ -3,9 +3,9 @@ package graft.batch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{LakeLayout, TableIO}
+import graft.core.{LakeLayout, Par, TableIO}
 import graft.model.Schemas
-import graft.ops.{ConditionalCounts, DataQuality, DedupLatest, TopNPerGroup, Upsert}
+import graft.ops.{ConditionalCounts, DataQuality, DedupLatest}
 
 /** EP1 — the structured-batch medallion pipeline (SURVEY.md §3 EP1):
   * bronze (raw append + ingest stamp) → silver (cast-normalize,
@@ -13,6 +13,12 @@ import graft.ops.{ConditionalCounts, DataQuality, DedupLatest, TopNPerGroup, Ups
   * gold (enriched join + CASE cost model + daily metrics + latest
   * event). Stage functions are pure DataFrame transforms; `run` wires
   * them through [[TableIO]].
+  *
+  * The reference's QA asserts (pools pk, events pk, events FK) are
+  * write-time gates ([[DataQuality.gate]]): each is counted by the
+  * tasks of the snapshot write it guards and checked before that
+  * snapshot's version is claimed, so a violation fails the run and
+  * leaves the table at its previous version.
   *
   * Reference: spark-apps/02/03/04_*.py and the richer notebook variants
   * (03_silver_smartpool.ipynb §3-§6; 04_gold_smartpool.ipynb §3-§8).
@@ -23,10 +29,9 @@ object StructuredBatchJob {
   def toBronze(raw: DataFrame): DataFrame =
     raw.withColumn("_ingest_ts", current_timestamp())
 
-  /** Silver pools: cast re-assert + latest-wins dedup
-    * (03_silver_smartpool.py:14-20; ipynb §3). */
-  def silverPools(bronzePools: DataFrame): DataFrame = {
-    val cast = bronzePools.select(
+  /** Pool rows cast to the silver schema (03_silver_smartpool.py:14-20). */
+  private def castPools(pools: DataFrame): DataFrame =
+    pools.select(
       col("pool_id").cast("int").as("pool_id"),
       col("pool_name").cast("string").as("pool_name"),
       col("location").cast("string").as("location"),
@@ -34,8 +39,23 @@ object StructuredBatchJob {
       col("is_heated").cast("boolean").as("is_heated"),
       col("owner_type").cast("string").as("owner_type"),
       col("updated_at").cast("timestamp").as("updated_at"))
-    DedupLatest(cast, Seq("pool_id"), Seq(col("updated_at").desc))
-  }
+
+  private def latestPools(pools: DataFrame): DataFrame =
+    DedupLatest(pools, Seq("pool_id"), Seq(col("updated_at").desc))
+
+  /** Silver pools: cast re-assert + latest-wins dedup
+    * (03_silver_smartpool.py:14-20; ipynb §3). */
+  def silverPools(bronzePools: DataFrame): DataFrame =
+    latestPools(castPools(bronzePools))
+
+  /** Silver pools after a day's batch (the notebook's MERGE on
+    * pool_id, 03_silver_smartpool.ipynb §4): latest-wins over the
+    * current silver rows and the day's raw pools. Silver already holds
+    * the latest of every earlier batch, so this equals [[silverPools]]
+    * over the whole bronze history (ties on `updated_at` are arbitrary
+    * in both) while reading only the day's batch. */
+  def mergePools(silver: DataFrame, rawPools: DataFrame): DataFrame =
+    latestPools(silver.unionByName(castPools(rawPools)))
 
   /** Silver events: casts, DQ filters (not-null, domain catalog),
     * latest-wins dedup by id, FK filter against silver pools
@@ -65,9 +85,39 @@ object StructuredBatchJob {
       Seq("pool_id"), "left_semi")
   }
 
+  /** Silver pools with the "pools pk unique" gate
+    * ([[DataQuality.uniqueKeysGate]]; 03_silver_smartpool.ipynb §6). */
+  def gatedSilverPools(silverPools: DataFrame)
+      : (DataFrame, DataQuality.Gate) =
+    DataQuality.uniqueKeysGate("pools pk unique", silverPools,
+      Seq("pool_id"))
+
+  /** Silver events with the "events pk unique" gate. */
+  def gatedSilverEvents(silverEvents: DataFrame)
+      : (DataFrame, DataQuality.Gate) =
+    DataQuality.uniqueKeysGate("events pk unique", silverEvents, Seq("id"))
+
   /** Gold: events enriched with pool attrs + CASE cost model
     * (04_gold_smartpool.py:16-55). */
   def goldEnrichedEvents(silverEvents: DataFrame, silverPools: DataFrame)
+      : DataFrame =
+    enriched(silverEvents, silverPools).drop(PoolFound)
+
+  /** [[goldEnrichedEvents]] with the "events FK" gate
+    * ([[DataQuality.orphanForeignKeys]] on the write): it counts the
+    * events that the left join matches to no pool. With unique pool
+    * keys the join keeps one row per event, so the count is the
+    * orphan count. */
+  def gatedEnrichedEvents(silverEvents: DataFrame, silverPools: DataFrame)
+      : (DataFrame, DataQuality.Gate) = {
+    val (df, g) = DataQuality.gate("events FK",
+      enriched(silverEvents, silverPools), !col(PoolFound))
+    (df.drop(PoolFound), g)
+  }
+
+  private val PoolFound = "__pool_found"
+
+  private def enriched(silverEvents: DataFrame, silverPools: DataFrame)
       : DataFrame = {
     val e = silverEvents.as("e")
     val p = broadcast(silverPools.as("p"))
@@ -75,7 +125,8 @@ object StructuredBatchJob {
       .select(col("e.id"), col("e.pool_id"), col("e.event_time"),
         col("e.intervention_type"), col("e.product_type"),
         col("e.product_amount"), col("p.pool_name"), col("p.owner_type"),
-        col("p.is_heated"), col("p.volume_liters"))
+        col("p.is_heated"), col("p.volume_liters"),
+        col("p.pool_id").isNotNull.as(PoolFound))
       .withColumn("event_date", to_date(col("event_time")))
       .withColumn("est_cost_eur",
         when(col("intervention_type") === "chlorine",
@@ -105,7 +156,10 @@ object StructuredBatchJob {
 
   /** Full EP1 run over a lake layout; `upsertSilver` selects the
     * notebook MERGE semantics over the script's overwrite (SURVEY §7.4
-    * risk 7).
+    * risk 7): silver pools then merge only the day's batch
+    * ([[mergePools]]); without it, or on the first run, they are
+    * recomputed from all of bronze. Silver events stay a full
+    * recompute over bronze.
     *
     * Silver/gold are published through [[TableIO.publishSnapshot]]
     * (manifest commit on a [[graft.core.VersionedTable]]): a reader
@@ -113,52 +167,56 @@ object StructuredBatchJob {
     * snapshot's immutable files instead of seeing a half-written table
     * — the isolation the reference delegates to Delta's log
     * (smartpool_config.py:68-70). Bronze stays plain append (new files
-    * only, nothing replaced, no isolation hazard). */
+    * only, nothing replaced, no isolation hazard).
+    *
+    * Each gate is checked before its table's version is claimed: a
+    * failing pk gate leaves its table unpublished, and a failing FK
+    * gate leaves silver events published and gold not. Writes with no
+    * data dependency run together through [[Par]]: the two bronze
+    * appends, then `daily_metrics` with `latest_event`. */
   def run(spark: SparkSession, layout: LakeLayout, rawPools: DataFrame,
       rawEvents: DataFrame, upsertSilver: Boolean = true): Unit = {
-    TableIO.append(toBronze(rawPools), layout.bronze("pools_dim"))
-    TableIO.append(toBronze(rawEvents), layout.bronze("maintenance_events"))
+    Par.run2(
+      () => TableIO.append(toBronze(rawPools), layout.bronze("pools_dim")),
+      () => TableIO.append(toBronze(rawEvents),
+        layout.bronze("maintenance_events")))
 
-    val bronzePools = TableIO.read(spark, layout.bronze("pools_dim"))
-    val sp = silverPools(bronzePools)
     val silverPoolsPath = layout.silver("pools_dim")
-    val mergedPools =
-      if (upsertSilver && TableIO.snapshotExists(spark, silverPoolsPath)) {
-        val target = TableIO.readSnapshot(spark, silverPoolsPath)
-        Upsert(target, sp, Seq("pool_id"), Seq(col("updated_at").desc),
-          broadcastSource = true)
-      } else sp
     // the merge reads the table it replaces: safe, because the commit
     // writes a fresh data dir and the old version's files are immutable
-    TableIO.publishSnapshot(mergedPools, silverPoolsPath)
-
+    val sp =
+      if (upsertSilver && TableIO.snapshotExists(spark, silverPoolsPath))
+        mergePools(TableIO.readSnapshot(spark, silverPoolsPath), rawPools)
+      else silverPools(TableIO.read(spark, layout.bronze("pools_dim")))
+    publishGated(gatedSilverPools(sp), silverPoolsPath)
     val poolsFinal = TableIO.readSnapshot(spark, silverPoolsPath)
-    DataQuality.assertEmpty("pools pk unique",
-      DataQuality.duplicateKeys(poolsFinal, Seq("pool_id")))
 
     val bronzeEvents = TableIO.read(spark,
       layout.bronze("maintenance_events"))
-    val se = silverEvents(bronzeEvents, poolsFinal)
     val silverEventsPath = layout.silver("maintenance_events")
-    TableIO.publishSnapshot(se, silverEventsPath)
-
+    publishGated(gatedSilverEvents(silverEvents(bronzeEvents, poolsFinal)),
+      silverEventsPath)
     val seFinal = TableIO.readSnapshot(spark, silverEventsPath)
-    DataQuality.assertEmpty("events pk unique",
-      DataQuality.duplicateKeys(seFinal, Seq("id")))
-    DataQuality.assertEmpty("events FK",
-      DataQuality.orphanForeignKeys(seFinal, poolsFinal, "pool_id",
-        "pool_id"))
 
     // event_date stays a data column (versioned tables skip on footer
     // stats rather than Hive dirs); the enriched query surface is
     // unchanged
-    val ge = goldEnrichedEvents(seFinal, poolsFinal)
     val goldEnrichedPath = layout.gold("events_enriched")
-    TableIO.publishSnapshot(ge, goldEnrichedPath)
+    publishGated(gatedEnrichedEvents(seFinal, poolsFinal), goldEnrichedPath)
     val geFinal = TableIO.readSnapshot(spark, goldEnrichedPath)
-    TableIO.publishSnapshot(goldDailyMetrics(geFinal),
-      layout.gold("daily_metrics"))
-    TableIO.publishSnapshot(goldLatestEvent(geFinal),
-      layout.gold("latest_event"))
+    Par.run2(
+      () => TableIO.publishSnapshot(goldDailyMetrics(geFinal),
+        layout.gold("daily_metrics")),
+      () => TableIO.publishSnapshot(goldLatestEvent(geFinal),
+        layout.gold("latest_event")))
+  }
+
+  /** Publish a gated frame as the next snapshot at `path`: its gate is
+    * checked after the data files are written and before the version
+    * is claimed, so a violation publishes nothing. */
+  def publishGated(gated: (DataFrame, DataQuality.Gate), path: String)
+      : Int = {
+    val (df, gate) = gated
+    TableIO.publishSnapshot(df, path, beforeClaim = () => gate.check())
   }
 }

@@ -141,9 +141,12 @@ object TableIO {
     * Versioned tables carry would-be partition columns as ordinary
     * data columns: file skipping at scale comes from parquet footer
     * stats / [[ManifestStats]] rather than Hive directory layout (the
-    * same direction Delta/Iceberg took). Returns the new version. */
+    * same direction Delta/Iceberg took). `beforeClaim` is
+    * [[VersionedTable.commitOverwrite]]'s pre-claim hook: a check that
+    * throws there publishes nothing. Returns the new version. */
   def publishSnapshot(df: DataFrame, path: String,
-      overwriteSchema: Boolean = false): Int = {
+      overwriteSchema: Boolean = false,
+      beforeClaim: () => Unit = () => ()): Int = {
     if (!overwriteSchema && snapshotExists(df.sparkSession, path)) {
       val existing =
         columnTypes(VersionedTable.read(df.sparkSession, path).schema)
@@ -152,7 +155,7 @@ object TableIO {
         s"snapshot publish to $path changes schema " +
           s"($existing -> $next); pass overwriteSchema = true")
     }
-    VersionedTable.commitOverwrite(df, path)
+    VersionedTable.commitOverwrite(df, path, beforeClaim)
   }
 
   /** Latest snapshot of a [[publishSnapshot]]-maintained table (or a

@@ -67,6 +67,9 @@ import org.apache.spark.sql.functions.col
   * `retrying` is the one bounded loop (20 attempts) that reclaims a
   * stale claim and retries on the latest version. Streaming sinks
   * skip a replayed micro-batch through [[oncePerBatch]]'s marker.
+  * [[commitOverwrite]] can run a `beforeClaim` check between the
+  * write and the claim; a check that throws deletes the commit dir and
+  * publishes nothing.
   *
   * `vacuum` deletes data files unreferenced by the retained manifests
   * — the storage-reclaim half of time travel.
@@ -342,8 +345,14 @@ object VersionedTable {
         "use commitAppendEvolve for explicit additive schema evolution")
   }
 
-  def commitOverwrite(df: DataFrame, path: String): Int =
-    commit(df, path, carryPrevious = false)
+  /** Publish `df` as the table's whole next version. `beforeClaim`
+    * runs after the data files are written and before the version is
+    * claimed: a check that rides the write (an observed metric) reads
+    * its result there, and when it throws, the commit dir is deleted,
+    * no version is published and the exception propagates. */
+  def commitOverwrite(df: DataFrame, path: String,
+      beforeClaim: () => Unit = () => ()): Int =
+    commit(df, path, carryPrevious = false, beforeClaim)
 
   /** DELETE by key — the Delta `DELETE WHERE key IN (...)` analogue:
     * commit a new version holding the latest snapshot minus the rows
@@ -725,10 +734,17 @@ object VersionedTable {
     publishFiles(spark, targetPath, fl, carryPrevious = false)
   }
 
-  private def commit(df: DataFrame, path: String,
-      carryPrevious: Boolean): Int =
-    publishFiles(df.sparkSession, path, writeCommitDir(df, path)._2,
-      carryPrevious)
+  private def commit(df: DataFrame, path: String, carryPrevious: Boolean,
+      beforeClaim: () => Unit = () => ()): Int = {
+    val (commitDir, newFiles) = writeCommitDir(df, path)
+    try beforeClaim()
+    catch {
+      case e: Throwable =>
+        fs(df.sparkSession, path).delete(commitDir, true)
+        throw e
+    }
+    publishFiles(df.sparkSession, path, newFiles, carryPrevious)
+  }
 
   /** Publish a manifest naming `newFiles` as the next version — the
     * commit protocol minus the data write (the files may live under

@@ -1,6 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The reference's inline QA assertion suite, promoted to a reusable
@@ -8,8 +14,62 @@ import org.apache.spark.sql.functions._
   * DataFrame (empty ⇒ pass) so callers choose collect-and-raise vs report.
   * Reference sites: notebooks/03_silver_smartpool.ipynb §6,
   * notebooks/04_gold_smartpool.ipynb §8.
+  *
+  * A check can also ride the write it guards ([[gate]],
+  * [[uniqueKeysGate]]): the offending rows are counted by the write's
+  * own tasks, and the count is read after the data files are written
+  * and before the version is claimed (the `beforeClaim` hook of
+  * [[graft.core.TableIO.publishSnapshot]]). The check costs no job, and
+  * a failed one publishes nothing.
   */
 object DataQuality {
+
+  /** How long [[Gate.check]] waits for its write's metric. */
+  private val MetricWait = 30.seconds
+
+  /** A check observed on the write of one frame (see [[gate]]). */
+  final class Gate private[DataQuality] (val name: String,
+      obs: Observation) {
+
+    /** Throws `data-quality check failed: <name>` when the write saw an
+      * offending row. Call it after the write's action. The metric
+      * arrives through the listener bus, which may drop an event under
+      * load: past [[MetricWait]] the check fails rather than let an
+      * unchecked write publish. */
+    def check(): Unit = {
+      val offending =
+        try Await.result(obs.future, MetricWait).getAs[Long]("offending")
+        catch {
+          case _: TimeoutException => throw new IllegalStateException(
+            s"data-quality check $name: its write reported no metric " +
+              s"within $MetricWait")
+        }
+      require(offending == 0, s"data-quality check failed: $name")
+    }
+  }
+
+  /** `df` observed by a [[Gate]] that counts its rows where `offending`
+    * holds. The action that writes the returned frame computes the
+    * count, so the gate adds no job. */
+  def gate(name: String, df: DataFrame, offending: Column)
+      : (DataFrame, Gate) = {
+    val obs = Observation()
+    (df.observe(obs, count(when(offending, lit(1))).as("offending")),
+      new Gate(name, obs))
+  }
+
+  /** [[duplicateKeys]] as a [[gate]]: a `count(1) over (partition by
+    * keys)` window counts the rows whose key is not unique. On a frame
+    * already hash-partitioned and sorted on `keys` (a [[DedupLatest]]
+    * output), the window adds no exchange and no sort. */
+  def uniqueKeysGate(name: String, df: DataFrame, keys: Seq[String])
+      : (DataFrame, Gate) = {
+    val rows = "__dq_key_rows"
+    val (observed, g) = gate(name, df.withColumn(rows,
+      count(lit(1)).over(Window.partitionBy(keys.map(col): _*))),
+      col(rows) > 1)
+    (observed.drop(rows), g)
+  }
 
   /** Key uniqueness: `groupBy(pk).count.filter(count > 1)`.
     * Reference: 03_silver_smartpool.ipynb §6. */

@@ -163,6 +163,8 @@ object IncrementalFiles {
   def readNew(spark: SparkSession, landingRoot: String,
       lastDate: Option[String], format: String = "csv"): DataFrame =
     readNewGroups(spark, landingRoot, lastDate, format) match {
+      case Seq() => load(spark, Seq(landingRoot), landingRoot, lastDate,
+        format)
       case Seq(one) => one
       case many => throw new IllegalArgumentException(
         s"new files under $landingRoot carry ${many.size} different " +
@@ -177,20 +179,30 @@ object IncrementalFiles {
     * header inference. With one header (or a non-CSV format, or no
     * new file that holds a line) the result is the single read of the
     * root that [[readNew]] always made — same listing, same jobs; only
-    * mixed headers read each group's files by name. */
+    * mixed headers read each group's files by name.
+    *
+    * No frame at all when the driver-side listing finds no file at or
+    * after `lastDate`: the caller learns there is nothing new without
+    * a job. A missing `landingRoot` fails like Spark's read of it. */
   def readNewGroups(spark: SparkSession, landingRoot: String,
       lastDate: Option[String], format: String = "csv")
       : Seq[DataFrame] = {
+    def read(paths: Seq[String]) =
+      load(spark, paths, landingRoot, lastDate, format)
+    // a missing root fails in Spark's read, as it always did
+    if (!TableIO.exists(spark, landingRoot))
+      return Seq(read(Seq(landingRoot)))
+    val files = newFiles(spark, landingRoot, lastDate)
     val groups =
-      if (format != "csv" || !TableIO.exists(spark, landingRoot)) Nil
+      if (format != "csv") Nil
       else {
-        val headers = newFiles(spark, landingRoot, lastDate)
-          .flatMap(f => headerLine(spark, f).map(f -> _))
+        val headers = files.flatMap(f => headerLine(spark, f).map(f -> _))
         headers.map(_._2).distinct
           .map(h => headers.collect { case (f, `h`) => f.toString })
       }
-    (if (groups.size < 2) Seq(Seq(landingRoot)) else groups)
-      .map(load(spark, _, landingRoot, lastDate, format))
+    if (files.isEmpty) Nil
+    else if (groups.size < 2) Seq(read(Seq(landingRoot)))
+    else groups.map(read)
   }
 
   private def load(spark: SparkSession, paths: Seq[String],

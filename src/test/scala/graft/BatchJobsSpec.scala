@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{AnalysisException, SaveMode}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode}
+import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -99,6 +100,137 @@ class BatchJobsSpec extends SparkTestBase {
       .select("owner_type").as[String].head() == "airbnb")
   }
 
+  private def pools(rows: (Int, String, String)*): DataFrame =
+    rows.map { case (id, owner, t) =>
+      (id, s"Pool $id", "Madrid", 10000 + id, id % 2 == 0, owner, ts(t))
+    }.toDF("pool_id", "pool_name", "location", "volume_liters",
+      "is_heated", "owner_type", "updated_at")
+
+  test("silver pools merged from each day's batch equal the latest-wins " +
+    "over all bronze pools") {
+    val layout = LakeLayout(
+      Files.createTempDirectory("graft-ep1-merge").toString)
+    val days = Seq(
+      pools((1, "hotel", "2026-01-01 10:00:00"),
+        (2, "private", "2026-01-01 11:00:00"),
+        (3, "airbnb", "2026-01-01 12:00:00")),
+      // re-versioned 1 and 2, new 4
+      pools((1, "private", "2026-01-02 10:00:00"),
+        (2, "hotel", "2026-01-02 09:00:00"),
+        (4, "hotel", "2026-01-02 10:00:00")),
+      // a re-sent OLDER version of 1 (it must lose), re-versioned 3, new 5
+      pools((1, "hotel", "2026-01-01 10:00:00"),
+        (3, "sports_center", "2026-01-03 08:00:00"),
+        (5, "private", "2026-01-03 09:00:00")),
+      // two versions of 4 in one batch, re-versioned 2
+      pools((4, "private", "2026-01-04 10:00:00"),
+        (4, "airbnb", "2026-01-04 11:00:00"),
+        (2, "airbnb", "2026-01-04 12:00:00")))
+    def rows(df: DataFrame) = df.orderBy("pool_id").collect().toSeq
+    days.zipWithIndex.foreach { case (batch, i) =>
+      StructuredBatchJob.run(spark, layout, batch, rawEvents)
+      val all = StructuredBatchJob.silverPools(
+        TableIO.read(spark, layout.bronze("pools_dim")))
+      assert(rows(TableIO.readSnapshot(spark, layout.silver("pools_dim"))) ==
+        rows(all), s"silver pools after increment ${i + 1}")
+    }
+    val owners = TableIO.readSnapshot(spark, layout.silver("pools_dim"))
+      .orderBy("pool_id").select("owner_type").as[String].collect().toSeq
+    assert(owners == Seq("private", "airbnb", "sports_center", "airbnb",
+      "private"))
+  }
+
+  private def dataDirs(path: String): Set[String] =
+    Option(new java.io.File(s"$path/data").list()).fold(Set.empty[String])(
+      _.toSet)
+
+  /** Publishing `gated` to `path` fails with the gate's message and
+    * leaves the table's version and data dirs as they were. */
+  private def assertGateFails(gated: (DataFrame, DataQuality.Gate),
+      path: String, name: String): Unit = {
+    val (version, dirs) = (VersionedTable.latestVersion(spark, path),
+      dataDirs(path))
+    val e = intercept[IllegalArgumentException](
+      StructuredBatchJob.publishGated(gated, path))
+    assert(e.getMessage == s"requirement failed: data-quality check " +
+      s"failed: $name")
+    assert(VersionedTable.latestVersion(spark, path) == version)
+    assert(dataDirs(path) == dirs)
+  }
+
+  /** The gate adds no exchange and no sort to its frame, and no job to
+    * its write. Both arguments are by-name: an observed frame reports
+    * to its gate once. */
+  private def assertGateIsFree(plain: => DataFrame,
+      gated: => (DataFrame, DataQuality.Gate)): Unit = {
+    def exchangesAndSorts(df: DataFrame) = {
+      val shuffles = PlanAsserts.countShuffles(df)
+      (shuffles, PlanAsserts.collectPlan(df.queryExecution.executedPlan)
+        .count(_.isInstanceOf[SortExec]))
+    }
+    assert(exchangesAndSorts(gated._1) == exchangesAndSorts(plain))
+    val root = tmpDir("graft-gate-jobs")
+    val plainJobs = counted(TableIO.publishSnapshot(plain, s"$root/a")).jobs
+    val gatedJobs =
+      counted(StructuredBatchJob.publishGated(gated, s"$root/b")).jobs
+    assert(gatedJobs == plainJobs)
+  }
+
+  test("EP1 gates ride their writes: a violation fails, publishes " +
+    "nothing, and a gate adds no job, exchange or sort") {
+    val layout = LakeLayout(tmpDir("graft-ep1-gates"))
+    StructuredBatchJob.run(spark, layout, rawPools, rawEvents)
+    def snapshot(path: String) = TableIO.readSnapshot(spark, path)
+    val poolsPath = layout.silver("pools_dim")
+    val eventsPath = layout.silver("maintenance_events")
+    val sp = snapshot(poolsPath)
+    val se = snapshot(eventsPath)
+
+    // pools pk: the merged pools of the next day
+    assertGateIsFree(StructuredBatchJob.mergePools(sp, rawPools),
+      StructuredBatchJob.gatedSilverPools(
+        StructuredBatchJob.mergePools(sp, rawPools)))
+    assertGateFails(StructuredBatchJob.gatedSilverPools(
+      sp.unionByName(sp.filter(col("pool_id") === 1))),
+      poolsPath, "pools pk unique")
+
+    // events pk: silver events recomputed over bronze
+    val bronzeEvents = TableIO.read(spark, layout.bronze("maintenance_events"))
+    assertGateIsFree(StructuredBatchJob.silverEvents(bronzeEvents, sp),
+      StructuredBatchJob.gatedSilverEvents(
+        StructuredBatchJob.silverEvents(bronzeEvents, sp)))
+    assertGateFails(StructuredBatchJob.gatedSilverEvents(
+      se.unionByName(se.filter(col("id") === 10))),
+      eventsPath, "events pk unique")
+
+    // events FK: the enriched join of the published snapshots
+    assertGateIsFree(StructuredBatchJob.goldEnrichedEvents(se, sp),
+      StructuredBatchJob.gatedEnrichedEvents(se, sp))
+    val orphan = se.filter(col("id") === 11)
+      .withColumn("id", lit(99)).withColumn("pool_id", lit(9))
+    assertGateFails(StructuredBatchJob.gatedEnrichedEvents(
+      se.unionByName(orphan), sp),
+      layout.gold("events_enriched"), "events FK")
+  }
+
+  test("EP1's parallel gold publishes: a failing latest_event lets " +
+    "daily_metrics settle, and its error propagates") {
+    val layout = LakeLayout(tmpDir("graft-ep1-par"))
+    // a latest_event table of another schema: its publish guard throws
+    // before any job, while daily_metrics still has a write to run
+    VersionedTable.commitOverwrite(Seq(1).toDF("other"),
+      layout.gold("latest_event"))
+    val e = intercept[IllegalArgumentException](
+      StructuredBatchJob.run(spark, layout, rawPools, rawEvents))
+    assert(e.getMessage.contains("changes schema"))
+    assert(VersionedTable.latestVersion(spark,
+      layout.gold("daily_metrics")) == 1)
+    assert(TableIO.readSnapshot(spark, layout.gold("daily_metrics"))
+      .count() == 2)
+    assert(VersionedTable.latestVersion(spark,
+      layout.gold("latest_event")) == 1)
+  }
+
   test("CSV variant dispatch normalizes A, B and C shapes identically") {
     val a = Seq(("2026-01-15T14:00:00Z", "2026-01-15", "14", "85.1",
       "0.0851", "ES", "synthetic"))
@@ -152,8 +284,8 @@ class BatchJobsSpec extends SparkTestBase {
   }
 
   // Spark jobs of one warm increment over this suite's fixtures
-  private val EP1_JOBS = 21
-  private val EP2_JOBS = 11
+  private val EP1_JOBS = 13
+  private val EP2_JOBS = 10
 
   private def tmpDir(prefix: String) =
     Files.createTempDirectory(prefix).toString
@@ -269,16 +401,50 @@ class BatchJobsSpec extends SparkTestBase {
         50.0)
       ElectricityBatchJob.run(spark, layout, landing)
     }
-    val ep1 = counted(StructuredBatchJob.run(spark, layout, rawPools,
-      rawEvents)).jobs
+    val ep1c = counted(StructuredBatchJob.run(spark, layout, rawPools,
+      rawEvents))
+    val ep1 = ep1c.jobs
     landPrices(landing, "2026-01-17", Seq(1 -> (0 until 12),
       1 -> (12 until 24)), 50.0)
     val ep2 = counted(ElectricityBatchJob.run(spark, layout, landing)).jobs
-    info(s"warm EP1 increment: $ep1 jobs, warm EP2 increment: $ep2 jobs")
+    info(s"warm EP1 increment: $ep1 jobs ${ep1c.jobsByLabel}, " +
+      s"warm EP2 increment: $ep2 jobs")
     assert(ep1 <= EP1_JOBS, s"warm EP1 increment ran $ep1 jobs")
     assert(ep2 <= EP2_JOBS, s"warm EP2 increment ran $ep2 jobs")
+    // the gold publishes run on Par threads and keep their commit label;
+    // the two bronze appends are plain writes
+    assert(ep1c.jobsByLabel == Map("commit" -> 11, "unlabeled" -> 2))
     assert(spark.read.parquet(layout.silver("electricity_prices"))
       .count() == 72)
+  }
+
+  test("EP2 with no landing file at or after its state date runs only " +
+    "its state read") {
+    val tmp = tmpDir("graft-ep2-none")
+    val landing = s"$tmp/landing"
+    val layout = LakeLayout(s"$tmp/lake")
+    for (d <- Seq("2026-01-15", "2026-01-16")) {
+      landPrices(landing, d, Seq(1 -> (0 until 24)), 50.0)
+      ElectricityBatchJob.run(spark, layout, landing)
+    }
+    // the state date's files are archived; only an older date remains
+    val day2 = java.nio.file.Paths.get(s"$landing/date=2026-01-16")
+    Files.list(day2).forEach(f => Files.delete(f))
+    Files.delete(day2)
+    val silver = layout.silver("electricity_prices")
+    val before = spark.read.parquet(silver).collect().toSet
+    // one job: the state read; emptiness comes from the listing
+    assert(counted(ElectricityBatchJob.run(spark, layout, landing)).jobs == 1)
+    assert(spark.read.parquet(silver).collect().toSet == before)
+    assert(IncrementalFiles.readState(spark,
+      layout.state("electricity_last_date")).contains("2026-01-16"))
+    assert(IncrementalFiles.readNewGroups(spark, landing,
+      Some("2026-01-16")).isEmpty)
+    // the root read of old: an empty frame, not a failure
+    assert(IncrementalFiles.readNew(spark, landing, Some("2026-01-16"))
+      .isEmpty)
+    intercept[AnalysisException](
+      ElectricityBatchJob.run(spark, layout, s"$tmp/no-such-landing"))
   }
 
   /** `ParquetSchema.ofPath` must equal Spark's own inference, minus
